@@ -72,7 +72,8 @@ object Bench {
     // 3-decimal warmups bound the line growth: the one JSON line is also
     // what the driver captures from stdout, and a past round lost its
     // bench record to stdout truncation (BENCH_r20 parsed: null)
-    val wu = warmups.map { case (k, v) => f""""$k":$v%.3f""" }
+    val wu = warmups.map { case (k, v) =>
+      s""""$k":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))}""" }
       .mkString("{", ",", "}")
     val errs = errors.map { case (k, v) =>
       "\"" + k + "\":\"" + v.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\""

@@ -279,24 +279,29 @@ object GraphOps {
     *   share one materialization). */
   private def bfsDistributed(eDist: DataFrame, seeds: DataFrame,
       maxHops: Int): DataFrame = {
-    val e = graft.Memo.ensurePersisted(eDist.repartition(col("src")))
-    var frontier = seeds.select(col("node").cast("long").as("node"))
-      .distinct().localCheckpoint(true)
-    val layers = scala.collection.mutable.ArrayBuffer((frontier, 0))
-    var reached = frontier
-    var h = 0
-    while (h < maxHops && !frontier.isEmpty) {
-      h += 1
-      val nxt = frontier.join(e, frontier("node") === e("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(reached, Seq("node"), "left_anti")
-        .localCheckpoint(true)
-      layers += ((nxt, h))
-      reached = reached.union(nxt)
-      frontier = nxt
-    }
-    layers.map { case (df, dist) => df.withColumn("dist", lit(dist.toLong)) }
-      .reduce(_ union _)
+    // leased like [[ssspDistributed]]'s edges: every layer is an eager
+    // localCheckpoint, so the returned union never reads `e` and the
+    // entry is released before returning
+    val e = graft.Memo.Lease.acquire(eDist.repartition(col("src")))
+    try {
+      var frontier = seeds.select(col("node").cast("long").as("node"))
+        .distinct().localCheckpoint(true)
+      val layers = scala.collection.mutable.ArrayBuffer((frontier, 0))
+      var reached = frontier
+      var h = 0
+      while (h < maxHops && !frontier.isEmpty) {
+        h += 1
+        val nxt = frontier.join(e, frontier("node") === e("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(reached, Seq("node"), "left_anti")
+          .localCheckpoint(true)
+        layers += ((nxt, h))
+        reached = reached.union(nxt)
+        frontier = nxt
+      }
+      layers.map { case (df, dist) => df.withColumn("dist", lit(dist.toLong)) }
+        .reduce(_ union _)
+    } finally graft.Memo.Lease.release(e)
   }
 
   /** Bounded-round WEIGHTED shortest paths (Bellman-Ford with a
@@ -417,13 +422,14 @@ object GraphOps {
       }
       best
     } finally {
-      // Unlike bfs/pageRank (whose RETURNED plan still references the
-      // cached edge relation, so the caller owns the entry), the result is
-      // an eager localCheckpoint — nothing downstream reads `e`, so the
-      // entry is released here and repeated sssp calls over different edge
-      // sets do not accumulate MEMORY_AND_DISK entries until an external
-      // clearCache. The lease unpersists only when the LAST concurrent
-      // holder releases — and only if the lease created the entry.
+      // Unlike pageRank (whose RETURNED plan still references the cached
+      // edge relation, so the caller owns the entry), the result is an
+      // eager localCheckpoint — nothing downstream reads `e`, so the entry
+      // is released here (as in [[bfsDistributed]]) and repeated sssp
+      // calls over different edge sets do not accumulate MEMORY_AND_DISK
+      // entries until an external clearCache. The lease unpersists only
+      // when the LAST concurrent holder releases — and only if the lease
+      // created the entry.
       graft.Memo.Lease.release(e)
     }
   }

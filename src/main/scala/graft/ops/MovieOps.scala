@@ -94,10 +94,6 @@ object MovieOps {
         .as("poster_url")) ++ extra.map(col): _*)
   }
 
-  /** Empty frame with the full movie schema (movie.py:271-272). */
-  def emptyMovies(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], MovieSchema)
-
   /** Calendar-month ranges covering [start, end] (movie.py:228-238):
     * the first range snaps DOWN to the 1st of start's month; the last
     * end is clipped to `end`. Pure driver-side work-list computation.

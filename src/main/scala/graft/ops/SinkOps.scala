@@ -23,7 +23,7 @@ object SinkOps {
     * Result: per-file key ranges are disjoint and ordered, the shape
     * min/max row-group pruning wants.
     *
-    * `parts = 0` (the default posture) leaves the partition count to
+    * `parts = None` (the default posture) leaves the partition count to
     * AQE: `repartitionByRange` without an explicit count is
     * coalescible, so the FILE count derives from DATA SIZE (advisory
     * partition size) — a KB-scale fold lands as one file instead of
@@ -31,14 +31,15 @@ object SinkOps {
     * reader init then taxes every downstream scan), while a 100-TB
     * write keeps full width. AQE merges only ADJACENT range partitions,
     * so per-file ranges stay disjoint and ordered either way. A pinned
-    * `parts >= 1` keeps the old exact-width behavior.
+    * `Some(n)`, `n >= 1`, keeps the exact-width behavior.
     */
   def rangedSortedParquet(df: DataFrame, sortCol: String, out: String,
-      parts: Int = 0, maxRecordsPerFile: Long): Unit = {
-    require(parts >= 0 && maxRecordsPerFile >= 1)
-    val ranged =
-      if (parts == 0) df.repartitionByRange(col(sortCol))
-      else df.repartitionByRange(parts, col(sortCol))
+      maxRecordsPerFile: Long, parts: Option[Int] = None): Unit = {
+    require(parts.forall(_ >= 1) && maxRecordsPerFile >= 1)
+    val ranged = parts match {
+      case None => df.repartitionByRange(col(sortCol))
+      case Some(n) => df.repartitionByRange(n, col(sortCol))
+    }
     ranged
       .sortWithinPartitions(sortCol)
       .write

@@ -1091,14 +1091,13 @@ object IncrAttrTable {
       val folded =
         if (rel == "labels") rows.groupBy("doc_id").agg(min(col("comp")).as("comp"))
         else rows
-      // parts = 0: AQE sizes the fold's file count from the DATA (a
+      // parts = None: AQE sizes the fold's file count from the DATA (a
       // KB-scale artifact folds to one file; q151's selection plan
       // scans attrs five times, and a 32-way fold made each of those
       // scans a 32-task stage of pure reader-init overhead)
       SinkOps.rangedSortedParquet(
         folded, "doc_id",
         s"$root/$rel/gen=${g + 1}/batch_id=-1",
-        parts = 0,
         maxRecordsPerFile = 5000000L)
       Fs.writeAtomic(s"$root/$rel/_gen",
         (g + 1).toString.getBytes("UTF-8"), hconf(s))

@@ -14,11 +14,39 @@ import org.scalatest.funsuite.AnyFunSuite
 class BackfillSpec extends AnyFunSuite {
   private lazy val spark = SparkSessions.spark
 
-  private def raw(ids: Seq[Long]): DataFrame = {
+  /** `tag` marks the titles (which month a survivor came from); `tap`
+    * runs on every row as the frame is evaluated. */
+  private def raw(ids: Seq[Long], tag: String = "", tap: Row => Row = identity): DataFrame = {
     val rows = ids.map(i => Row(
-      i, s"Movie $i", s"Movie $i OT", "2023-01-15", Seq(28),
+      i, s"Movie $i$tag", s"Movie $i OT", "2023-01-15", Seq(28),
       7.0, 100L, 50.0, "en", "o", s"/p$i.jpg"))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), MovieOps.RawSchema)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1).map(tap), MovieOps.RawSchema)
+  }
+
+  // five months whose ids overlap their neighbours', titled by month, so
+  // the master shows which month each survivor came from
+  private val From = "2023-01-01"
+  private val To = "2023-05-31"
+  private val Keys = MovieOps.monthRanges(From, To).map { case (ms, me) => s"${ms}_$me" }
+  private def monthIds(ms: String): Seq[Long] = {
+    val m = ms.substring(5, 7).toLong
+    Seq(10 * m, 10 * m + 1, 10 * (m + 1))
+  }
+
+  private def runMonths(dir: String, fetch: (String, String) => DataFrame,
+      onProgress: (String, Int, Int) => Unit = (_, _, _) => ()): Backfill.Result =
+    Backfill.run(spark, dir, s"$dir/cp.json", From, To,
+      "https://cdn/", "w500", Map(28 -> "Action"), fetch, onProgress)
+
+  private def masterRows(dir: String): Seq[Row] =
+    spark.read.parquet(s"$dir/${MovieOps.masterPaths(From, To)._2}")
+      .orderBy("tmdb_id").collect().toSeq
+
+  /** The master of an uninterrupted run over the five months. */
+  private lazy val uninterrupted: Seq[Row] = {
+    val dir = Files.createTempDirectory("bf-ref").toString
+    runMonths(dir, (ms, _) => raw(monthIds(ms), s" @ $ms"))
+    masterRows(dir)
   }
 
   test("skip-if-done: second run fetches nothing new") {
@@ -316,5 +344,73 @@ class BackfillSpec extends AnyFunSuite {
     val part = spark.read.parquet(s"$dir/part_month=2023-02-01")
     assert(part.count() == 0)
     assert(part.columns.toSeq == MovieOps.Cols)
+  }
+
+  test("each processed month's raw rows are read exactly once") {
+    val dir = Files.createTempDirectory("bf-once").toString
+    val reads = spark.sparkContext.longAccumulator("raw rows read")
+    val r = runMonths(dir, (ms, _) => raw(monthIds(ms), s" @ $ms", tap = row => {
+      reads.add(1L)
+      row
+    }))
+    assert(r.processedMonths == Keys)
+    assert(reads.value == Keys.size * 3L) // no pre-pass, no re-read at consolidation
+    assert(masterRows(dir) == uninterrupted)
+  }
+
+  test("a fetch that throws stops submission; the rerun picks up exactly there") {
+    val dir = Files.createTempDirectory("bf-fetch-fail").toString
+    val fetched = scala.collection.mutable.ArrayBuffer[String]()
+    var failOn = Option("2023-03-01")
+    def fetch(ms: String, me: String): DataFrame = {
+      fetched += ms
+      if (failOn.contains(ms)) throw new IllegalStateException(s"fetch failed: $ms")
+      raw(monthIds(ms), s" @ $ms")
+    }
+    val e = intercept[IllegalStateException](runMonths(dir, fetch))
+    assert(e.getMessage == "fetch failed: 2023-03-01")
+    assert(fetched.toSeq == Seq("2023-01-01", "2023-02-01", "2023-03-01")) // never 4 or 5
+    assert(MovieOps.loadCheckpoint(s"$dir/cp.json") == Keys.take(2))
+    failOn = None
+    fetched.clear()
+    val r = runMonths(dir, fetch)
+    assert(r.processedMonths == Keys.drop(2))
+    assert(fetched.toSeq == Seq("2023-03-01", "2023-04-01", "2023-05-01"))
+    assert(masterRows(dir) == uninterrupted)
+  }
+
+  test("a write that fails is rethrown and never marked; the rerun converges") {
+    val dir = Files.createTempDirectory("bf-write-fail").toString
+    var poisoned = true
+    def fetch(ms: String, me: String): DataFrame =
+      if (poisoned && ms == "2023-02-01")
+        raw(monthIds(ms), tap = _ => throw new IllegalStateException("unreadable page"))
+      else raw(monthIds(ms), s" @ $ms")
+    val seen = scala.collection.mutable.ArrayBuffer[String]()
+    val e = intercept[Exception](runMonths(dir, fetch, (k, _, _) => seen += k))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("unreadable page")), e)
+    val marked = MovieOps.loadCheckpoint(s"$dir/cp.json")
+    assert(!marked.contains(Keys(1)))
+    assert(marked.contains(Keys(0)))
+    assert(seen.toSeq == Keys.take(1)) // progress never reports past the failed month
+    poisoned = false
+    val r = runMonths(dir, fetch)
+    assert(r.processedMonths.contains(Keys(1)))
+    assert((marked ++ r.processedMonths).sorted == Keys)
+    assert(masterRows(dir) == uninterrupted)
+  }
+
+  test("progress reports checkpointed and processed months in month order") {
+    val dir = Files.createTempDirectory("bf-progress").toString
+    val keys = Keys.take(4)
+    MovieOps.saveCheckpoint(s"$dir/cp.json", Seq(keys(1)))
+    val seen = scala.collection.mutable.ArrayBuffer[(String, Int, Int)]()
+    val r = Backfill.run(spark, dir, s"$dir/cp.json", From, "2023-04-30",
+      "https://cdn/", "w500", Map.empty, (ms, _) => raw(monthIds(ms)),
+      onProgress = (k, d, t) => seen += ((k, d, t)))
+    assert(r.processedMonths == Seq(keys(0), keys(2), keys(3)))
+    // what the sequential loop reports: the pre-seeded mark counts from the start
+    assert(seen.toSeq == Seq((keys(0), 2, 4), (keys(1), 2, 4), (keys(2), 3, 4), (keys(3), 4, 4)))
   }
 }

@@ -251,4 +251,24 @@ class GraphOpsSpec extends AnyFunSuite {
     finally spark.conf.unset(graft.ops.GraphOps.DriverGraphMaxEdgesKey)
     assert(far == m(graft.ops.GraphOps.bfs(edges, seeds, 3)))
   }
+
+  test("bfs/sssp: the distributed path leaves no cached relation behind") {
+    import spark.implicits._
+    val edgesW = Seq((0L, 1L, 1L), (1L, 2L, 1L), (2L, 3L, 1L), (3L, 4L, 1L), (0L, 4L, 9L))
+      .toDF("src", "dst", "w")
+    val seeds = Seq(0L).toDF("node")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // a bound below the edge count forces the probe-then-distributed path
+    spark.conf.set(GraphOps.DriverGraphMaxEdgesKey, "2")
+    val (dist, cost) = try (ranks(GraphOps.bfs(edgesW.select("src", "dst"), seeds, 4)),
+      ranks(GraphOps.sssp(edgesW, seeds, 4)))
+    finally spark.conf.unset(GraphOps.DriverGraphMaxEdgesKey)
+    assert(dist == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 1L))
+    assert(cost == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
+    // the eager per-round localCheckpoints stay persisted by design; any
+    // other new persisted RDD is a cached relation nobody released
+    val left = (sc.getPersistentRDDs -- before).values.filterNot(_.isCheckpointed)
+    assert(left.isEmpty, s"cached relations left behind: ${left.map(_.name).mkString("; ")}")
+  }
 }

@@ -16,7 +16,7 @@ class StorageSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("ranged-sink").toString
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_extendedprice")
     SinkOps.rangedSortedParquet(li, "l_orderkey", out,
-      parts = 4, maxRecordsPerFile = 600)
+      maxRecordsPerFile = 600, parts = Some(4))
     val files = new java.io.File(out).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
     assert(files.length > 4, s"maxRecordsPerFile did not split: ${files.length} files")
@@ -41,14 +41,14 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("ranged sorted sink, adaptive width (parts=0): file count derives from data size, ranges stay disjoint") {
-    // round-22: parts=0 leaves the range exchange to AQE, so a KB-scale
+    // parts=None leaves the range exchange to AQE, so a KB-scale
     // fold lands as ~one file instead of spark.sql.shuffle.partitions
     // near-empty ones (whose per-file reader init taxed every downstream
     // scan of the artifact — q151 scans attrs five times per run)
     val out = java.nio.file.Files.createTempDirectory("ranged-adaptive").toString
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_extendedprice")
     SinkOps.rangedSortedParquet(li, "l_orderkey", out,
-      parts = 0, maxRecordsPerFile = 5000000L)
+      maxRecordsPerFile = 5000000L)
     val files = new java.io.File(out).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -90,7 +90,7 @@ class StorageSpec extends AnyFunSuite {
     val (zOk, zPk) = fileRangeFractions(zOut)
     val sOut = java.nio.file.Files.createTempDirectory("singlesort").toString
     SinkOps.rangedSortedParquet(li, "l_orderkey", sOut,
-      parts = 16, maxRecordsPerFile = 1000000L)
+      maxRecordsPerFile = 1000000L, parts = Some(16))
     val (sOk, sPk) = fileRangeFractions(sOut)
     info(f"z-order file-range fractions: orderkey $zOk%.2f partkey $zPk%.2f; " +
       f"single-sort: orderkey $sOk%.2f partkey $sPk%.2f")
