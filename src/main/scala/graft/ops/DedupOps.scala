@@ -238,11 +238,11 @@ object DedupOps {
     * thousand rows — and the distributed loop's fixed machinery
     * (per-round eager localCheckpoints, the changed-count job, the
     * symmetric-edge persist) measured ~1.7 s even over 50 LITERAL
-    * edges (round-21 Scratch decomposition), the same +2 s constant
-    * that split [[graft.pipeline.IncrAttrTable]]'s labelDeltaShard off
-    * in round 19. 200k edges ≈ a few MB collected — far inside the
-    * q68 bounded-driver-action budget; a corpus whose pair stream
-    * exceeds it takes the distributed loop unchanged. */
+    * edges (round-21 decomposition, OPTIMIZATION_r21.md), the same +2 s
+    * constant that split [[graft.pipeline.IncrAttrTable]]'s
+    * labelDeltaShard off in round 19. 200k edges ≈ a few MB collected —
+    * far inside the q68 bounded-driver-action budget; a corpus whose
+    * pair stream exceeds it takes the distributed loop unchanged. */
   private val DriverCcMaxEdgesDefault = 200000L
   private[graft] val DriverCcMaxEdgesKey = "spark.graft.cc.maxDriverEdges"
 

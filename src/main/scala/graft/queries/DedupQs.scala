@@ -228,7 +228,7 @@ object DedupQs {
     * recall only for Hamming <= nBands-1 = 7 (pigeonhole); everything
     * above that is opportunistic recall through a lucky band collision.
     * Measured true J>=0.8 pairs on this corpus family reach Hamming 9 at
-    * sf0.01 (`tools/SimhashProbe`) and 11 at sf0.1 (BASELINE.md), i.e.
+    * sf0.01 (SURVEY §2.0.2) and 11 at sf0.1 (BASELINE.md), i.e.
     * the true-pair tail GROWS with scale — so the cutoff carries 5 bits
     * of margin over the largest measured tier rather than 1. 16 still
     * sits at the lower edge of the random-collision Hamming mode (~16 of
@@ -267,7 +267,7 @@ object DedupQs {
     * deterministic-recall radius shrinking to Hamming ≤ 3 (pairs further
     * out remain reachable only by collision luck — measured on this
     * corpus: 16-bit bands find 231 of the 255 verified pairs, the ~9%
-    * living at Hamming 4..15; ScaleEvidence prints the counts per width
+    * living at Hamming 4..15; SURVEY §2.0.2 records the counts per width
     * so the trade is data, not assertion). Setting the session knob
     * therefore CHANGES the graded answer — q37's oracle pins the 8-bit
     * default, and a non-default width intentionally trades oracle-exact
@@ -295,7 +295,7 @@ object DedupQs {
     s.conf.getOption("spark.graft.simhash.bandBits")
       .map(_.toInt).getOrElse(graft.ops.Conf.SimhashProductionBandBits)
 
-  private[graft] def simhashQuery(s: SparkSession, d: String,
+  private def simhashQuery(s: SparkSession, d: String,
       bitsPerBand: Int): DataFrame = {
     // capped form memoized directly (same rationale as
     // cappedBandsCached: the cap subplan re-derives per consumed side).
@@ -374,9 +374,9 @@ object DedupQs {
     * q130 grades the 16-bit production default, q141 the 32-bit rung
     * above it (2 × 32-bit levels: deterministic recall shrinks to
     * Hamming ≤ 1, random bucket occupancy drops another ~65 536×; the
-    * found-pair deltas per width are ScaleEvidence's
-    * `q130_simhash16[found-pairs]` job). Width must divide 64. */
-  private[graft] def simhashFnvQuery(s: SparkSession, d: String,
+    * found-pair deltas per width are SURVEY §2.0.2's FNV found-pairs
+    * ladder). Width must divide 64. */
+  private def simhashFnvQuery(s: SparkSession, d: String,
       bitsPerBand: Int): DataFrame = {
     // same doc_id-pinned cache layout as [[simhashQuery]] (see the
     // comment there): tiny bytes, CPU-dense banded consumer — bytes-
@@ -479,7 +479,7 @@ object DedupQs {
     * saturate (q130's 100× tier reads 22.6× — band-join mass, not
     * verify) the candidate set collapses to near-certain duplicates
     * only. Found-pair recall cost per width is MEASURED, not asserted:
-    * `ScaleEvidence q130_simhash16[found-pairs]` prints verified-pair
+    * SURVEY §2.0.2's FNV found-pairs ladder records verified-pair
     * counts at 16 and 32 bits against the 8-bit q37 reference. Same
     * oracle body as q130 with `bits = 32` interpolated — one mirror
     * definition, two graded widths. */
@@ -603,9 +603,9 @@ object DedupQs {
     * dedup signal), never fabricate a pair.
     */
   /** q38's body with the df cap as a parameter — the graded query runs
-    * it at [[MaxDf]]; `tools.DfCapSensitivity` sweeps the cap over a
-    * constructed high-df corpus to document the pairs-lost-vs-cost
-    * curve (SURVEY §2.0.2). `Long.MaxValue` = uncapped exact. */
+    * it at [[MaxDf]]; the pairs-lost-vs-cost curve of a cap sweep over
+    * a constructed high-df corpus is recorded in SURVEY §2.0.2.
+    * `Long.MaxValue` = uncapped exact. */
   private[graft] def ngramJaccardPairs(s: SparkSession, d: String,
       maxDf: Long): DataFrame = {
     val postings = shingled(s, d)

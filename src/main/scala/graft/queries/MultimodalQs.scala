@@ -770,7 +770,7 @@ object MultimodalQs {
   /** Largest allowed fingerprint-band bucket for the media candidate
     * join — the q36 discipline ([[graft.ops.DedupOps.capBuckets]]),
     * inert at graded scales (`MultimodalSpec` pins cap-on ≡ cap-off on
-    * the fixtures; MediaScale pins it on the planted-cluster corpus).
+    * the fixtures; SURVEY records it on a planted-cluster corpus).
     * The cap bounds buckets of DISTINCT fingerprints only: identical
     * content collapses to ONE row per fingerprint before banding (see
     * [[distinctHashReps]]), so the classic media degeneracy — thousands
@@ -810,8 +810,8 @@ object MultimodalQs {
       .distinct()
   }
 
-  /** The q152 pipeline over ANY media relation — factored out so
-    * `tools.MediaScale` measures the same plan at synthetic scale.
+  /** The q152 pipeline over ANY media relation (its synthetic-scale
+    * measurements are recorded in SURVEY's round-20 media rows).
     *
     * Round-20 shape (the round-19 verdict's weak mark): the banded join
     * runs over DISTINCT fingerprints only, with [[MediaMaxBucket]]
@@ -883,7 +883,7 @@ object MultimodalQs {
     * min member, and CC labels with the min reachable rep, so the
     * composition is the min over the whole cluster — the same canonical
     * survivor rule as q39. */
-  private[graft] def mediaDupClusters(
+  private def mediaDupClusters(
       media: org.apache.spark.sql.Dataset[MediaRow],
       maxHamming: Int = 3,
       maxBucket: Int = MediaMaxBucket): org.apache.spark.sql.DataFrame = {
@@ -911,8 +911,7 @@ object MultimodalQs {
       .orderBy("media_id")
   }
 
-  /** A 24bpp BMP with pixel grayscale v(x, y) — shared with
-    * `tools.MediaScale`'s synthetic corpus generator. */
+  /** A 24bpp BMP with pixel grayscale v(x, y). */
   private[graft] def bmpOf(width: Int, height: Int,
       v: (Int, Int) => Int): Array[Byte] = bmpPixels(width, height, v)
 

@@ -108,23 +108,10 @@ object VectorQs {
         FROM qz GROUP BY cell, pos),
       cent1 AS (SELECT cell AS cid, list(m ORDER BY pos) AS cvec FROM mz GROUP BY cell)"""
 
-  /** The `vec_id % 50` centroid/seed/sample relations, optionally capped
-    * to ids below `idCap`. The cap exists for `tools/ScaleEvidence`'s
-    * fixed-k measurements: on an N× id-shifted replication the modulus
-    * alone would grow these relations N× with the corpus (and the
-    * broadcast-argmax work N²×), measuring harness-k growth instead of
-    * the operators' linear-in-rows-at-fixed-k claim; capping to copy 0
-    * keeps them 1×-sized. `Long.MaxValue` (every graded query) adds no
-    * filter, so graded plans are untouched. */
-  private def fifties(s: SparkSession, d: String, idCap: Long): DataFrame = {
-    val base = Tables.embeddings(s, d).filter(col("vec_id") % 50 === 0)
-    if (idCap == Long.MaxValue) base else base.filter(col("vec_id") < idCap)
-  }
+  /** The `vec_id % 50` centroid/seed/sample relation. */
+  private def fifties(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).filter(col("vec_id") % 50 === 0)
 
-  /** IVF approximate search: Lloyd-trained centroids ([[trainedCents]]),
-    * nearest-cell assignment, probe the [[DefaultIvfProbes]] closest
-    * cells per query, exact re-rank of the candidates, top-5.
-    */
   /** Default probe budget for the IVF searches (q42/q66). The corpus is
     * ISOTROPIC (within-label mean cosine 0.0016 vs 0.0003 cross — no
     * cluster structure for an index to exploit), so recall@5 is governed
@@ -162,26 +149,19 @@ object VectorQs {
     * budget: +0.08 at the 1× tier, SURVEY §2.0.2), and every step is
     * engine-exact, so q42 stays hash-graded.
     */
-  private[graft] def trainedCents(s: SparkSession, d: String,
-      idCap: Long = Long.MaxValue): DataFrame = {
-    val capTag = if (idCap == Long.MaxValue) "" else s"_cap$idCap"
-    graft.Memo.cached(s, d, "ivf_trained_cents" + capTag) {
-      val seeds = fifties(s, d, idCap)
+  private def trainedCents(s: SparkSession, d: String): DataFrame =
+    graft.Memo.cached(s, d, "ivf_trained_cents") {
+      val seeds = fifties(s, d)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       VectorOps.kmeansUpdate(VectorOps.ivfAssign(corpus(s, d), seeds))
     }
-  }
 
-  /** `trainedIndex = false` swaps the raw `%50` seed centroids back in —
-    * the UNTRAINED index, kept only so `tools.RecallCurve` can measure
-    * what the Lloyd update buys at each probe budget (the graded q42 and
-    * every production path use the trained default). */
-  private[graft] def ivfQuery(s: SparkSession, d: String,
-      idCap: Long = Long.MaxValue, trainedIndex: Boolean = true): DataFrame = {
-      val cents =
-        if (trainedIndex) trainedCents(s, d, idCap)
-        else fifties(s, d, idCap)
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+  /** IVF approximate search: Lloyd-trained centroids ([[trainedCents]]),
+    * nearest-cell assignment, probe the [[DefaultIvfProbes]] closest
+    * cells per query, exact re-rank of the candidates, top-5.
+    */
+  private def ivfQuery(s: SparkSession, d: String): DataFrame = {
+      val cents = trainedCents(s, d)
       val assigned = VectorOps.ivfAssign(corpus(s, d), cents)
       val wProbe = Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid"))
       val probes = queries(s, d)
@@ -204,7 +184,7 @@ object VectorQs {
         // window sorts whole rows within per-qid partitions, and leaving
         // the two 64-float vectors aboard made the 100×-scale sort move
         // ~550 B/candidate instead of ~24 B (measured 18× at 100× rows,
-        // ~5× after the projection — ScaleEvidence deep tier)
+        // ~5× after the projection — SURVEY §2.0.2 deep tier)
         .select(col("qid"), col("id"),
           (VectorOps.dotD(col("qvec"), col("vec")) /
             (sqrt(col("q_norm")) * sqrt(col("sq_norm")))).as("cos"))
@@ -254,8 +234,8 @@ object VectorQs {
   /** Plane matrix for table set ℓ of the MULTI-table construction (seed
     * 7 + ℓ, so set 0 IS q43's matrix — q139's tables are a superset of
     * q43's structure at any width). Cached: the 64×64 gaussian draw is
-    * deterministic but not free, and the probe/evidence tools request
-    * the same matrices repeatedly. */
+    * deterministic but not free, and the queries, their oracles and the
+    * multiprobe tier request the same matrices repeatedly. */
   private val srpPlanesCache =
     new java.util.concurrent.ConcurrentHashMap[Int, Seq[Seq[Float]]]()
   private[graft] def srpPlanesL(l: Int): Seq[Seq[Float]] =
@@ -450,9 +430,9 @@ object VectorQs {
     *    §2.0.2 calibration — the 128-table/T=64 rung at 200 k vectors
     *    = 1.638 G expansion rows died at ENOSPC with ~77 GB written
     *    → ~47 B/row, rounded up to 48;
-    *  - zstd: round-19 per-task instrumentation
-    *    (`SrpMultiProbe --calibrate`) measured 28.6–29.0 B/row at the
-    *    50 k 32/128-table rungs → 32, still rounded up.
+    *  - zstd: round-19 per-task instrumentation (§2.0.2) measured
+    *    28.6–29.0 B/row at the 50 k 32/128-table rungs → 32, still
+    *    rounded up.
     * Unknown codecs take the larger lz4 constant — over-refusing is
     * the safe direction for an ENOSPC gate. The dominant term is the
     * expansion join's shuffle spill — slim (vec_a, table_idx, bits)
@@ -587,16 +567,15 @@ object VectorQs {
     * SHARES srpCandEst's immutable-corpus-per-dir convention: a corpus
     * regenerated in place under the same dir within one session would
     * price the gate on the stale count (and serve stale candidate
-    * estimates anyway). Writers that regenerate use a fresh dir
-    * (ScaleEvidence keys replicated corpora by factor in the path). */
+    * estimates anyway). Writers that regenerate use a fresh dir. */
   private val embCount =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
   private val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
 
   /** q139's body with width and table count as parameters — the graded
-    * query pins one (bandBits, L) point; `tools.SrpMultiProbe` sweeps L
-    * at each width to record the recall-vs-L curve beside the width
-    * ladder (SURVEY §2.0.2). Same cap-join-verify pipeline as q43, over
+    * query pins one (bandBits, L) point; the recall-vs-L curve at each
+    * width is recorded beside the width ladder in SURVEY §2.0.2. Same
+    * cap-join-verify pipeline as q43, over
     * [[VectorOps.srpBandsMulti]]'s L-matrix band relation.
     *
     * DENSITY-ROUTED: before the band self-join runs, the capped
@@ -772,7 +751,7 @@ object VectorQs {
     * specialized to sign-random-projection bands: a near pair's codes
     * differ in FEW bits, so probing the Hamming ball recovers the pairs
     * a single exact-bucket lookup loses to one flipped bit). */
-  private[graft] def srpFlipMasks(bits: Int, radius: Int): Seq[Long] = {
+  private def srpFlipMasks(bits: Int, radius: Int): Seq[Long] = {
     require(radius >= 1 && radius <= 2, s"unsupported flip radius $radius")
     val one = (0 until bits).map(i => 1L << i)
     val two = if (radius < 2) Seq.empty else
@@ -917,10 +896,10 @@ object VectorQs {
   }
 
   /** q139's graded configuration: 4 independent 64-plane matrices at the
-    * 8-bit width = 32 tables. Chosen on `SrpMultiProbe` measurement at
-    * sf0.01 (14 exact cos ≥ 0.45 pairs): recall 0.857 at L=4 vs q43's
-    * single-set 0.286, with candidates growing linearly in L
-    * (4 478 → 16 695). The measured refutation that sits beside it: at
+    * 8-bit width = 32 tables. Chosen on the SURVEY §2.0.2 recall-vs-L
+    * measurement at sf0.01 (14 exact cos ≥ 0.45 pairs): recall 0.857
+    * at L=4 vs q43's single-set 0.286, with candidates growing linearly
+    * in L (4 478 → 16 695). The measured refutation that sits beside it: at
     * the 16-bit width NO feasible L reaches the 8-bit floor on this
     * corpus — L=16 (64 tables) still finds ZERO of the 14 pairs at only
     * 247 candidates, because a weak-cosine pair's per-table collision
@@ -939,8 +918,8 @@ object VectorQs {
     * matrices inline into the oracle as exact-decimal double literals,
     * and every stage — sign bits, bucket packs, union join, verify —
     * is the same deterministic function of them in both engines.
-    * `SrpMultiProbe` records the recall-vs-L curve (SURVEY §2.0.2);
-    * `DedupVectorSpec` pins the measured recall floor.
+    * SURVEY §2.0.2 records the recall-vs-L curve; `DedupVectorSpec`
+    * pins the measured recall floor.
     *
     * Shape at scale: one fused projection stage computes all L packed
     * signatures (L small codegen loops — far under the JIT-limit
@@ -996,9 +975,8 @@ object VectorQs {
     * A decimal-cast mean was measured non-portable first (30 665 / 32 000
     * corpus values diverge — see KmeansQuantBits).
     */
-  private[graft] def kmeansQuery(s: SparkSession, d: String,
-      idCap: Long = Long.MaxValue): DataFrame = {
-    val seeds = fifties(s, d, idCap)
+  private def kmeansQuery(s: SparkSession, d: String): DataFrame = {
+    val seeds = fifties(s, d)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
     VectorOps.kmeans(corpus(s, d), seeds, iters = 2)
       .select(col("id").as("vec_id"), col("cell"))
@@ -1039,22 +1017,19 @@ object VectorQs {
     * — they are THE index; rebuild-per-query would charge every search
     * with an O(corpus) encode.
     */
-  private[graft] def ivfpqQuery(s: SparkSession, d: String,
-      idCap: Long = Long.MaxValue, memoSuffix: String = ""): DataFrame = {
+  private def ivfpqQuery(s: SparkSession, d: String): DataFrame = {
       val M = 8; val SubDim = 8
       // same Lloyd-trained cells as q42 — one shared Memo-cached index
-      val cents = trainedCents(s, d, idCap)
-      val samplesBase = Tables.embeddings(s, d).filter(col("vec_id") % 13 === 0)
-      val samples = (if (idCap == Long.MaxValue) samplesBase
-        else samplesBase.filter(col("vec_id") < idCap))
+      val cents = trainedCents(s, d)
+      val samples = Tables.embeddings(s, d).filter(col("vec_id") % 13 === 0)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val codebook = graft.Memo.cached(s, d, "pq_codebook" + memoSuffix) {
+      val codebook = graft.Memo.cached(s, d, "pq_codebook") {
         VectorOps.pqCodebook(samples, M, SubDim)
       }
-      val assigned = graft.Memo.cached(s, d, "pq_cells" + memoSuffix) {
+      val assigned = graft.Memo.cached(s, d, "pq_cells") {
         VectorOps.ivfAssign(corpus(s, d), cents).drop("vec")
       }
-      val encoded = graft.Memo.cached(s, d, "pq_codes" + memoSuffix) {
+      val encoded = graft.Memo.cached(s, d, "pq_codes") {
         VectorOps.pqEncode(corpus(s, d), codebook, M, SubDim)
       }
       val wProbe = Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid"))
@@ -1203,6 +1178,30 @@ object VectorQs {
     // 100-TB-resident search plan and deserves a perf gate
     headline = true)
 
+  /** q78's memoized cell assignment (cached: it feeds both self-join
+    * sides and the final anti-join — three scans of one argmax pass). */
+  private def semanticCells(s: SparkSession, d: String): DataFrame = {
+    val cents = fifties(s, d)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    graft.Memo.cached(s, d, "semdedup_cells") {
+      VectorOps.ivfAssign(corpus(s, d), cents)
+    }
+  }
+
+  /** The same assignment through the two-level coarse quantizer
+    * ([[VectorOps.ivfAssignTwoLevel]], supers = every 2500th vector — a
+    * deterministic subset of the %50 centroid policy, one probe). The
+    * k∝N scale path: flat assignment is N·k and measured-infeasible at
+    * the 100× deep tier (500k × 10k); two-level is N·(s + k/s). */
+  private def semanticCellsCoarse(s: SparkSession, d: String): DataFrame = {
+    val cents = fifties(s, d)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    graft.Memo.cached(s, d, "semdedup_cells_coarse") {
+      VectorOps.ivfAssignTwoLevel(corpus(s, d), cents,
+        cents.filter(col("cid") % 2500L === 0))
+    }
+  }
+
   /** SemDeDup-style semantic dedup ([[VectorOps.semanticDedup]]): the
     * embedding-space complement of the token-level dedup family (q36–q39,
     * q43, q57) — drops documents whose MEANING duplicates an earlier one
@@ -1217,48 +1216,8 @@ object VectorQs {
     * differently. Keep policy (lowest id in each τ-neighborhood survives)
     * is pure integer logic.
     */
-  /** q78's memoized cell assignment (cached: it feeds both self-join
-    * sides and the final anti-join — three scans of one argmax pass). */
-  private[graft] def semanticCells(s: SparkSession, d: String,
-      idCap: Long = Long.MaxValue, memoSuffix: String = ""): DataFrame = {
-    val cents = fifties(s, d, idCap)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    // the cap is part of the relation's identity: without it in the tag,
-    // a capped and an uncapped call sharing a memoSuffix would silently
-    // serve each other's cached assignment
-    val capTag = if (idCap == Long.MaxValue) "" else s"_cap$idCap"
-    graft.Memo.cached(s, d, "semdedup_cells" + memoSuffix + capTag) {
-      VectorOps.ivfAssign(corpus(s, d), cents)
-    }
-  }
-
-  /** The same assignment through the two-level coarse quantizer
-    * ([[VectorOps.ivfAssignTwoLevel]], supers = every `superMod`-th
-    * vector — a deterministic subset of the %50 centroid policy). The
-    * k∝N scale path: flat assignment is N·k and measured-infeasible at
-    * the 100× deep tier (500k × 10k); two-level is N·(s + k/s). */
-  private[graft] def semanticCellsCoarse(s: SparkSession, d: String,
-      superMod: Long = 2500L, memoSuffix: String = "", probes: Int = 1): DataFrame = {
-    val cents = fifties(s, d, Long.MaxValue)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    graft.Memo.cached(s, d, "semdedup_cells_coarse" + memoSuffix + s"_p$probes") {
-      VectorOps.ivfAssignTwoLevel(corpus(s, d), cents,
-        cents.filter(col("cid") % superMod === 0), probes)
-    }
-  }
-
-  private[graft] def semanticDedupQuery(s: SparkSession, d: String,
-      idCap: Long = Long.MaxValue, memoSuffix: String = ""): DataFrame =
-    VectorOps.semanticDedup(semanticCells(s, d, idCap, memoSuffix), tau = 0.40)
-      .select(col("id").as("vec_id"), col("cell"))
-      .orderBy("vec_id")
-
-  /** q78 over the coarse-quantized assignment — the deep-tier scale
-    * form; approximate exactly where the quantizer is (cell routing),
-    * identical dedup semantics within cells. */
-  private[graft] def semanticDedupCoarseQuery(s: SparkSession, d: String,
-      superMod: Long = 2500L, memoSuffix: String = ""): DataFrame =
-    VectorOps.semanticDedup(semanticCellsCoarse(s, d, superMod, memoSuffix), tau = 0.40)
+  private def semanticDedupQuery(s: SparkSession, d: String): DataFrame =
+    VectorOps.semanticDedup(semanticCells(s, d), tau = 0.40)
       .select(col("id").as("vec_id"), col("cell"))
       .orderBy("vec_id")
 
@@ -1310,7 +1269,7 @@ object VectorQs {
   val q85 = Q(
     "q85_twolevel_assign",
     (s, d) => {
-      val cents = fifties(s, d, Long.MaxValue)
+      val cents = fifties(s, d)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val supers = cents.filter(col("cid") % 2500 === 0)
       val nSupers = supers.count().toInt
@@ -1345,10 +1304,9 @@ object VectorQs {
     * q42's assignment CTE + a within-cell self-join — so this also
     * cross-checks the whole cell machinery a second way.
     */
-  private[graft] def knnGraphQuery(s: SparkSession, d: String,
-      idCap: Long = Long.MaxValue, memoSuffix: String = ""): DataFrame = {
+  private def knnGraphQuery(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cells = semanticCells(s, d, idCap, memoSuffix)
+    val cells = semanticCells(s, d)
     def side(p: String) = cells.select(col("cell"), col("id").as(s"${p}id"),
       col("vec").as(s"${p}vec"), col("sq_norm").as(s"${p}n"))
     val pairs = side("q").join(side("n"), Seq("cell"))
@@ -1504,9 +1462,8 @@ object VectorQs {
     * the (cell × label) aggregate — cluster-count-sized, never corpus-
     * sized.
     */
-  private[graft] def clusterPurityQuery(s: SparkSession, d: String,
-      idCap: Long = Long.MaxValue, memoSuffix: String = ""): DataFrame = {
-    val cells = semanticCells(s, d, idCap, memoSuffix)
+  private def clusterPurityQuery(s: SparkSession, d: String): DataFrame = {
+    val cells = semanticCells(s, d)
       .select(col("id").as("vec_id"), col("cell"))
     val cl = cells
       .join(Tables.embeddings(s, d).select(col("vec_id"), col("label")), "vec_id")
@@ -1561,9 +1518,8 @@ object VectorQs {
     * scan of the cached (id, vec, ‖·‖²) relation + a TakeOrdered(1)
     * reduce; K scans total, nothing corpus-sized shuffles, and the
     * driver holds exactly K vectors.
-    */
-  /** q147's body with K as a parameter (`tools.ScaleEvidence` prices the
-    * K=64 rung). CARRIED-dmin form (round-18, verdict ask #4): the loop
+    *
+    * CARRIED-dmin form (round-18, verdict ask #4): the loop
     * maintains a persisted (id, vec, sq, dmin) relation and each round
     * folds ONE new-center distance into it via `least` — O(K) dots per
     * point across the whole loop, per-round cost FLAT in the round
@@ -1574,9 +1530,10 @@ object VectorQs {
     * same IEEE op tree, and the (dmin desc, id) argmax tie-break is
     * unchanged — q147's K=8 oracle hash pins it. Only two rounds'
     * relations are ever persisted at once (the previous unpersists as
-    * soon as the next is materialized by its own TakeOrdered head). */
-  private[graft] def kcenterQuery(s: SparkSession, d: String, K: Int,
-      onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame = {
+    * soon as the next is materialized by its own TakeOrdered head).
+    */
+  private def kcenterQuery(s: SparkSession, d: String): DataFrame = {
+    val K = 8 // the oracle's 8 unrolled rounds
     val emb = graft.Memo.cached(s, d, "kcenter_sq") {
       corpus(s, d).withColumn("sq", VectorOps.sqNormD(col("vec")))
     }
@@ -1587,7 +1544,6 @@ object VectorQs {
     var cur: DataFrame = null
     var prev: DataFrame = null
     while (chosen.size < K) {
-      val t0 = System.nanoTime()
       val cl = typedlit(centerVec)
       val dNew = col("sq") + VectorOps.dotD(cl, cl) -
         lit(2.0) * VectorOps.dotD(col("vec"), cl)
@@ -1603,7 +1559,6 @@ object VectorQs {
       prev = cur
       chosen :+= ((chosen.size + 1, next.getLong(0), Some(next.getDouble(3))))
       centerVec = next.getSeq[Float](1).toSeq
-      onRound(chosen.size, (System.nanoTime() - t0) / 1e9)
     }
     if (prev != null) prev.unpersist()
     import s.implicits._
@@ -1614,7 +1569,7 @@ object VectorQs {
 
   val q147 = Q(
     "q147_kcenter_coreset",
-    (s, d) => kcenterQuery(s, d, K = 8),
+    (s, d) => kcenterQuery(s, d),
     Some {
       val d2 = (v: String, c: String) =>
         s"($v.sq + $c.sq - 2 * ${dotSql(s"$v.embedding", s"$c.embedding")})"

@@ -34,7 +34,7 @@ private[graft] object IndexLayout {
 
   /** Conf key for the re-bucketing target: rows per bucket dir that
     * [[scaledBuckets]] aims compaction at. The default is MEASURED on
-    * the shard-append curve (AppendCurve, §2.0.2): per-append cost at
+    * the shard-append curve (SURVEY §2.0.2): per-append cost at
     * 100× density (8 M band rows) reads 17.9–23.4 s at nb=64 (full
     * resident reads — the 500 k-doc shingle-ARRAY read dominates),
     * 6.9–9.8 s at nb=512, 9–15 s at 1024–16384, 14.8+ s at 65536

@@ -609,8 +609,8 @@ class DedupVectorSpec extends AnyFunSuite {
   }
 
   test("q38 df-cap loses ONLY boilerplate-margin pairs, never rare-shingle signal") {
-    // miniature of tools/DfCapSensitivity (the full curve is in SURVEY
-    // §2.0.2): one boilerplate template stamped on 120 docs; a STRONG
+    // miniature of the df-cap sweep whose full curve is in SURVEY
+    // §2.0.2: one boilerplate template stamped on 120 docs; a STRONG
     // pair whose overlap is rare shingles, and a MARGIN pair that only
     // clears J >= 0.5 when the template's shingles are counted
     import spark.implicits._

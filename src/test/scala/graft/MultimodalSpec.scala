@@ -255,9 +255,9 @@ class MultimodalSpec extends AnyFunSuite {
 
   /** A 9×8 24bpp BMP whose pixel (x, y) grayscale is v(x, y) — the grid
     * where the dHash sample points ARE the pixels. ONE builder
-    * (MultimodalQs.bmpOf) shared with q152's fixtures and MediaScale, so
-    * the spec can never silently test a different byte layout than the
-    * one the oracle and the scale tool exercise. */
+    * (MultimodalQs.bmpOf) shared with q152's fixtures, so the spec can
+    * never silently test a different byte layout than the one the
+    * oracle exercises. */
   private def bmp9x8(v: (Int, Int) => Int): Array[Byte] =
     graft.queries.MultimodalQs.bmpOf(9, 8, v)
 

@@ -45,14 +45,16 @@ class StorageSpec extends AnyFunSuite {
     // fold lands as ~one file instead of spark.sql.shuffle.partitions
     // near-empty ones (whose per-file reader init taxed every downstream
     // scan of the artifact — q151 scans attrs five times per run)
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
+      "adaptive width needs AQE on")
     val out = java.nio.file.Files.createTempDirectory("ranged-adaptive").toString
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_extendedprice")
     SinkOps.rangedSortedParquet(li, "l_orderkey", out,
       maxRecordsPerFile = 5000000L)
     val files = new java.io.File(out).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
-    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    assert(files.length < shufflePartitions / 2,
+    // the sf0.001 input is a few KB: AQE folds it to one or two files
+    assert(files.length <= 2,
       s"adaptive width did not coalesce a tiny write: ${files.length} files")
     val ranges = files.map { f =>
       val r = spark.read.parquet(f)
