@@ -128,19 +128,30 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = read(s, d, "embeddings")
 }
 
-/** Memoized cached relations, keyed by (session, data dir, tag).
+/** Persisted relations, one form per lifetime.
   *
-  * Calling `.persist()` on a freshly built (but plan-identical) DataFrame
-  * on every query invocation works — CacheManager dedups by plan — but
-  * logs "Asked to cache already cached data" churn and leaves no single
-  * owner able to re-persist after an external cache clear. Memoizing the
-  * DataFrame object itself gives each cached relation exactly one identity:
-  * the accessor re-persists on demand if something (e.g. Bench's per-query
-  * `clearCache` isolation) dropped it. MEMORY_AND_DISK — spillable, never
-  * recompute-on-eviction storms at scale.
+  *  - SESSION lifetime — [[Memo.cached]]: a relation that depends only on
+  *    the session and the corpus, memoized by (session, data dir, tag).
+  *    It lives until the session's cache is cleared or
+  *    [[Memo.invalidate]] drops it; the accessor re-persists on demand
+  *    after an external clear (e.g. Bench's per-query `clearCache`).
+  *  - CALL lifetime — [[Memo.scoped]]: a relation built from a call's own
+  *    input and read several times while the call runs. Every relation
+  *    the block persists is released when the block exits, normally or
+  *    by an exception, and a plan-identical entry some other owner
+  *    created is never evicted.
   *
-  * The map is tiny (a handful of relations x sessions per JVM) and lives
-  * for the process — fine for library use where sessions are long-lived.
+  * [[Memo.ensurePersisted]] is left only for ops that RETURN a lazy plan
+  * over a relation built from caller-supplied input (pageRank,
+  * triangleCounts, funnel, the perceptual-hash relations): that entry
+  * must outlive the call, and its lifetime is the caller's.
+  *
+  * Memoizing the DataFrame object gives each session relation exactly
+  * one identity and keeps "Asked to cache already cached data" churn out
+  * of the logs. MEMORY_AND_DISK everywhere — spillable, never
+  * recompute-on-eviction storms at scale. The map is tiny (a handful of
+  * relations x sessions per JVM) and lives for the process — fine for
+  * library use where sessions are long-lived.
   */
 object Memo {
   private val m =
@@ -187,9 +198,39 @@ object Memo {
     df
   }
 
-  /** Reference-counted persist LEASE for callers that unpersist when done
-    * (the iterative graph ops — [[ensurePersisted]]'s callers otherwise
-    * own entries until an external `clearCache`). The naked
+  /** A call's cache scope (see [[scoped]]): `sc(df)` persists `df` for
+    * the rest of the block and returns it. */
+  final class Scope private[Memo] () {
+    private var held = List.empty[DataFrame]
+    def apply(df: DataFrame): DataFrame = {
+      Lease.acquire(df)
+      held ::= df
+      df
+    }
+    /** Release `df` before the block ends — for a rolling window that
+      * keeps only the latest rounds cached. */
+    def release(df: DataFrame): Unit = {
+      val i = held.indexWhere(_ eq df)
+      if (i >= 0) {
+        held = held.patch(i, Nil, 1)
+        Lease.release(df)
+      }
+    }
+    private[Memo] def close(): Unit = {
+      held.foreach(Lease.release)
+      held = Nil
+    }
+  }
+
+  /** Run `body` with a fresh [[Scope]] and release every relation it
+    * persisted when `body` returns or throws. Only the entries the scope
+    * created are evicted: a plan-identical [[cached]] entry stays. */
+  def scoped[T](body: Scope => T): T = {
+    val sc = new Scope
+    try body(sc) finally sc.close()
+  }
+
+  /** Reference-counted persist lease behind [[Scope]]. The naked
     * check-then-persist + "owns iff it saw NONE" pattern races: two
     * concurrent calls over plan-identical relations can both observe
     * `StorageLevel.NONE`, both claim ownership, and the first to finish
@@ -203,7 +244,7 @@ object Memo {
     * JVM-global map (graph-op concurrency per process is tiny); the
     * count map never grows past the set of concurrently-leased plans
     * because 1→0 removes the key. */
-  object Lease {
+  private object Lease {
     /** Per-plan state: live lease count + whether the FIRST lease found
       * the CacheManager entry absent and created it. `owned = false`
       * means some longer-lived owner ([[cached]]/[[ensurePersisted]]
@@ -220,7 +261,7 @@ object Memo {
 
     /** Take a lease on `df`'s cache entry (persisting it if this is the
       * first lease). Pair with exactly one [[release]] on the same plan. */
-    def acquire(df: DataFrame): DataFrame = counts.synchronized {
+    def acquire(df: DataFrame): Unit = counts.synchronized {
       val k = key(df)
       counts.get(k) match {
         case null =>
@@ -231,7 +272,6 @@ object Memo {
           counts.put(k, St(1, owned = !preExisting))
         case St(n, owned) => counts.put(k, St(n + 1, owned))
       }
-      df
     }
 
     /** Drop a lease; unpersists the entry when the last lease goes —

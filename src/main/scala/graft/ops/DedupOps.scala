@@ -262,7 +262,7 @@ object DedupOps {
       edges.schema("b").dataType == org.apache.spark.sql.types.LongType
     if (bound <= 0 || bound > Int.MaxValue - 1 || !isLong)
       return connectedComponentsWithRounds(edges)._1
-    // Lease-persist the pair stream BEFORE the size probe (round-21
+    // Persist the pair stream BEFORE the size probe (round-21
     // verdict): when the probe OVERRUNS the bound, executeTake has
     // already scanned most/all upstream partitions looking for bound+1
     // rows — for an expensive-but-sparse pair pipeline (LSH banding +
@@ -271,14 +271,14 @@ object DedupOps {
     // materialization instead of thrown-away work (the distributed
     // loop's `sym` union then reads the cache twice instead of
     // recomputing the pipeline twice). In the small case the collected
-    // rows ARE the input and the lease is dropped as soon as the labels
-    // exist; `release` only evicts the entry this call created.
-    val pairs = graft.Memo.Lease.acquire(edges.select(col("a"), col("b")))
-    try {
+    // rows ARE the input and the entry is released as soon as the labels
+    // exist.
+    graft.Memo.scoped { sc =>
+      val pairs = sc(edges.select(col("a"), col("b")))
       val rows = pairs.limit(bound.toInt + 1).collect()
       if (rows.length <= bound) driverCc(edges.sparkSession, rows)
       else connectedComponentsWithRounds(pairs)._1
-    } finally graft.Memo.Lease.release(pairs)
+    }
   }
 
   /** Single-machine union-find over a collected edge list: union by
@@ -341,17 +341,16 @@ object DedupOps {
     */
   def connectedComponentsWithRounds(
       edges: DataFrame,
-      checkpointDir: Option[String] = None): (DataFrame, Int) = {
+      checkpointDir: Option[String] = None): (DataFrame, Int) = graft.Memo.scoped { sc =>
     checkpointDir.foreach { dir =>
-      val sc = edges.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+      val ctx = edges.sparkSession.sparkContext
+      if (ctx.getCheckpointDir.isEmpty) ctx.setCheckpointDir(dir)
     }
     def cut(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint(true)
       else df.localCheckpoint(true)
-    val sym = edges.select(col("a"), col("b"))
-      .union(edges.select(col("b").as("a"), col("a").as("b")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sym = sc(edges.select(col("a"), col("b"))
+      .union(edges.select(col("b").as("a"), col("a").as("b"))))
     // Init folds round 1 in for free: the node list needs a keyed
     // exchange anyway (the old form was distinct()), and since every
     // node's initial label IS its id, the first neighbor-min is just
@@ -401,7 +400,6 @@ object DedupOps {
       dropSuperseded(prevCp)
       prevCp = checkpointRdd(next)
     }
-    sym.unpersist()
     (labels, rounds)
   }
 

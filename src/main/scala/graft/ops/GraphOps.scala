@@ -224,23 +224,23 @@ object GraphOps {
     val bound = driverBound(edges.sparkSession)
     if (bound <= 0 || bound > Int.MaxValue - 1)
       return bfsDistributed(eDist, seeds, maxHops)
-    // Lease-persist the deduped edge relation BEFORE the size probe
-    // (round-21 verdict): an over-bound `limit(bound+1)` probe scans
-    // most upstream partitions; persisting first hands that scan to the
-    // distributed fallback instead of throwing it away. Small case: the
-    // collected rows are the input and the lease drops right after.
-    val leased = graft.Memo.Lease.acquire(eDist)
-    try {
+    // Persist the deduped edge relation BEFORE the size probe (round-21
+    // verdict): an over-bound `limit(bound+1)` probe scans most upstream
+    // partitions; persisting first hands that scan to the distributed
+    // fallback instead of throwing it away. Small case: the collected
+    // rows are the input and the entry is released right after.
+    graft.Memo.scoped { sc =>
+      val cached = sc(eDist)
       val small = for {
-        e <- collectIfSmall(leased, bound)
+        e <- collectIfSmall(cached, bound)
         s <- collectIfSmall(seeds.select(col("node").cast("long").as("node"))
           .distinct(), bound)
       } yield (e, s)
       small match {
         case Some((e, s)) => driverBfs(edges.sparkSession, e, s, maxHops)
-        case None => bfsDistributed(leased, seeds, maxHops)
+        case None => bfsDistributed(cached, seeds, maxHops)
       }
-    } finally graft.Memo.Lease.release(leased)
+    }
   }
 
   /** Driver form of [[bfs]]: the identical layered traversal (layers
@@ -278,30 +278,27 @@ object GraphOps {
     *   relation ([[bfs]] builds it once so the probe and the fallback
     *   share one materialization). */
   private def bfsDistributed(eDist: DataFrame, seeds: DataFrame,
-      maxHops: Int): DataFrame = {
-    // leased like [[ssspDistributed]]'s edges: every layer is an eager
-    // localCheckpoint, so the returned union never reads `e` and the
-    // entry is released before returning
-    val e = graft.Memo.Lease.acquire(eDist.repartition(col("src")))
-    try {
-      var frontier = seeds.select(col("node").cast("long").as("node"))
-        .distinct().localCheckpoint(true)
-      val layers = scala.collection.mutable.ArrayBuffer((frontier, 0))
-      var reached = frontier
-      var h = 0
-      while (h < maxHops && !frontier.isEmpty) {
-        h += 1
-        val nxt = frontier.join(e, frontier("node") === e("src"))
-          .select(col("dst").as("node")).distinct()
-          .join(reached, Seq("node"), "left_anti")
-          .localCheckpoint(true)
-        layers += ((nxt, h))
-        reached = reached.union(nxt)
-        frontier = nxt
-      }
-      layers.map { case (df, dist) => df.withColumn("dist", lit(dist.toLong)) }
-        .reduce(_ union _)
-    } finally graft.Memo.Lease.release(e)
+      maxHops: Int): DataFrame = graft.Memo.scoped { sc =>
+    // every layer is an eager localCheckpoint, so the returned union
+    // never reads `e` and the entry is released before returning
+    val e = sc(eDist.repartition(col("src")))
+    var frontier = seeds.select(col("node").cast("long").as("node"))
+      .distinct().localCheckpoint(true)
+    val layers = scala.collection.mutable.ArrayBuffer((frontier, 0))
+    var reached = frontier
+    var h = 0
+    while (h < maxHops && !frontier.isEmpty) {
+      h += 1
+      val nxt = frontier.join(e, frontier("node") === e("src"))
+        .select(col("dst").as("node")).distinct()
+        .join(reached, Seq("node"), "left_anti")
+        .localCheckpoint(true)
+      layers += ((nxt, h))
+      reached = reached.union(nxt)
+      frontier = nxt
+    }
+    layers.map { case (df, dist) => df.withColumn("dist", lit(dist.toLong)) }
+      .reduce(_ union _)
   }
 
   /** Bounded-round WEIGHTED shortest paths (Bellman-Ford with a
@@ -333,20 +330,20 @@ object GraphOps {
     if (bound <= 0 || bound > Int.MaxValue - 1)
       return ssspDistributed(eAgg, seeds, rounds)
     // Same probe-then-reuse posture as [[bfs]]: the min-aggregated edge
-    // relation is lease-persisted before the size probe so an over-bound
+    // relation is persisted before the size probe so an over-bound
     // probe's scan feeds the distributed fallback.
-    val leased = graft.Memo.Lease.acquire(eAgg)
-    try {
+    graft.Memo.scoped { sc =>
+      val cached = sc(eAgg)
       val small = for {
-        e <- collectIfSmall(leased, bound)
+        e <- collectIfSmall(cached, bound)
         s <- collectIfSmall(seeds.select(col("node").cast("long").as("node"))
           .distinct(), bound)
       } yield (e, s)
       small match {
         case Some((e, s)) => driverSssp(edges.sparkSession, e, s, rounds)
-        case None => ssspDistributed(leased, seeds, rounds)
+        case None => ssspDistributed(cached, seeds, rounds)
       }
-    } finally graft.Memo.Lease.release(leased)
+    }
   }
 
   /** Driver form of [[sssp]]: the identical round-bounded synchronous
@@ -389,48 +386,31 @@ object GraphOps {
     *   ([[sssp]] builds it once so the probe and the fallback share one
     *   materialization). */
   private def ssspDistributed(eAgg: DataFrame, seeds: DataFrame,
-      rounds: Int): DataFrame = {
-    val ePlan = eAgg.repartition(col("src"))
-    // CacheManager entries key on the canonicalized plan, so a concurrent
-    // graph op over the same edge relation SHARES the entry. A leased
-    // persist (refcounted under one lock, [[graft.Memo.Lease]]) rather
-    // than check-then-persist ownership: the naked form let two
-    // concurrent sssp calls both observe NONE, both claim the entry, and
-    // the first finisher evict it mid-iteration of the other.
-    val e = graft.Memo.Lease.acquire(ePlan)
-    // try/finally: a failed Spark job mid-iteration must still release the
-    // lease, or the count leaks and the entry stays pinned (or a later
-    // balanced release under-counts) for the life of the process.
-    try {
-      var best = seeds.select(col("node").cast("long").as("node"))
-        .distinct().withColumn("cost", lit(0L)).localCheckpoint(true)
-      var frontier = best
-      var r = 0
-      while (r < rounds && !frontier.isEmpty) {
-        r += 1
-        val cand = frontier.join(e, frontier("node") === e("src"))
-          .select(col("dst").as("node"), (col("cost") + col("w")).as("cost"))
-          .groupBy("node").agg(min(col("cost")).as("cost"))
-        val improved = cand
-          .join(best.withColumnRenamed("cost", "old"), Seq("node"), "left")
-          .filter(col("old").isNull || col("cost") < col("old"))
-          .select("node", "cost").localCheckpoint(true)
-        best = best.join(improved.select(col("node").as("n2")),
-            col("node") === col("n2"), "left_anti")
-          .union(improved).localCheckpoint(true)
-        frontier = improved
-      }
-      best
-    } finally {
-      // Unlike pageRank (whose RETURNED plan still references the cached
-      // edge relation, so the caller owns the entry), the result is an
-      // eager localCheckpoint — nothing downstream reads `e`, so the entry
-      // is released here (as in [[bfsDistributed]]) and repeated sssp
-      // calls over different edge sets do not accumulate MEMORY_AND_DISK
-      // entries until an external clearCache. The lease unpersists only
-      // when the LAST concurrent holder releases — and only if the lease
-      // created the entry.
-      graft.Memo.Lease.release(e)
+      rounds: Int): DataFrame = graft.Memo.scoped { sc =>
+    // Unlike pageRank (whose RETURNED plan still references the cached
+    // edge relation, so the caller owns the entry), the result is an
+    // eager localCheckpoint — nothing downstream reads `e`, so repeated
+    // sssp calls over different edge sets do not accumulate
+    // MEMORY_AND_DISK entries until an external clearCache.
+    val e = sc(eAgg.repartition(col("src")))
+    var best = seeds.select(col("node").cast("long").as("node"))
+      .distinct().withColumn("cost", lit(0L)).localCheckpoint(true)
+    var frontier = best
+    var r = 0
+    while (r < rounds && !frontier.isEmpty) {
+      r += 1
+      val cand = frontier.join(e, frontier("node") === e("src"))
+        .select(col("dst").as("node"), (col("cost") + col("w")).as("cost"))
+        .groupBy("node").agg(min(col("cost")).as("cost"))
+      val improved = cand
+        .join(best.withColumnRenamed("cost", "old"), Seq("node"), "left")
+        .filter(col("old").isNull || col("cost") < col("old"))
+        .select("node", "cost").localCheckpoint(true)
+      best = best.join(improved.select(col("node").as("n2")),
+          col("node") === col("n2"), "left_anti")
+        .union(improved).localCheckpoint(true)
+      frontier = improved
     }
+    best
   }
 }

@@ -338,36 +338,36 @@ object IncrAttrTable {
       Fs.writeAtomic(s"${metaDir(root)}/_inflight",
         eff.toString.getBytes("UTF-8"), hconf(s))
 
-      val (attrs, newSh, newBands, dupPairs, done) =
-        batchPlans(s, root, docs, broadcastProbe, eff)
-      try {
-      // CLUSTER LABELS (round 19): fold this batch's verified dup pairs
-      // into the incrementally-maintained component labels BEFORE the
-      // concurrent writes (the delta is computed eagerly — collected on
-      // the driver in the shard form, localCheckpointed by the CC loop
-      // in the corpus form — so the labels write below is a pure replay
-      // of materialized rows and never races the index writes it reads
-      // nothing from). See [[labelDelta]] for the union-find shape.
-      val labels = labelDelta(s, root, dupPairs, eff, bMin, broadcastProbe)
-      // The three writes are INDEPENDENT jobs — attrs reads the resident
-      // index through file indexes snapshotted at plan time, filtered
-      // batch_id < eff, so it can never observe the concurrent eff
-      // slices — and each is idempotent per batchId, so they run
-      // concurrently: per-append wall time pays max(write) + plans, not
-      // the sum of three sequential job+commit overheads. The manifest
-      // commits LAST, only after all three writes succeed — a crash
-      // before it leaves an uncommitted batch whose replay overwrites
-      // exactly its own partitions.
-      //
-      // All three are plain LEAF-DIRECTORY overwrites of this batch's
-      // own dir — index slices into the TAIL ([[IndexLayout
-      // .appendTailSlice]]: the dynamic-partition form re-listed the
-      // whole accumulated tree per append and fanned the batch into one
-      // file per touched bucket, both of which grow with exactly the
-      // things an append must be independent of), attrs into
-      // `attrs/batch_id=N` for the same reason. Compaction folds the
-      // index tail into real buckets; attrs batch dirs are the
-      // artifact's natural ingest grain.
+      graft.Memo.scoped { sc =>
+        val (attrs, newSh, newBands, dupPairs) =
+          batchPlans(sc, s, root, docs, broadcastProbe, eff)
+        // CLUSTER LABELS (round 19): fold this batch's verified dup pairs
+        // into the incrementally-maintained component labels BEFORE the
+        // concurrent writes (the delta is computed eagerly — collected on
+        // the driver in the shard form, localCheckpointed by the CC loop
+        // in the corpus form — so the labels write below is a pure replay
+        // of materialized rows and never races the index writes it reads
+        // nothing from). See [[labelDelta]] for the union-find shape.
+        val labels = labelDelta(s, root, dupPairs, eff, bMin, broadcastProbe)
+        // The three writes are INDEPENDENT jobs — attrs reads the resident
+        // index through file indexes snapshotted at plan time, filtered
+        // batch_id < eff, so it can never observe the concurrent eff
+        // slices — and each is idempotent per batchId, so they run
+        // concurrently: per-append wall time pays max(write) + plans, not
+        // the sum of three sequential job+commit overheads. The manifest
+        // commits LAST, only after all three writes succeed — a crash
+        // before it leaves an uncommitted batch whose replay overwrites
+        // exactly its own partitions.
+        //
+        // All three are plain LEAF-DIRECTORY overwrites of this batch's
+        // own dir — index slices into the TAIL ([[IndexLayout
+        // .appendTailSlice]]: the dynamic-partition form re-listed the
+        // whole accumulated tree per append and fanned the batch into one
+        // file per touched bucket, both of which grow with exactly the
+        // things an append must be independent of), attrs into
+        // `attrs/batch_id=N` for the same reason. Compaction folds the
+        // index tail into real buckets; attrs batch dirs are the
+        // artifact's natural ingest grain.
         val attrsDir = s"${liveRelDir(s, root, "attrs")}/batch_id=$eff"
         // the labels write joins only when the batch discovered pairs or
         // merges — committed label dirs always hold rows (the compactRel
@@ -384,7 +384,7 @@ object IncrAttrTable {
             newSh.filter(size(col("shingles")) > 0),
             indexDir(root), "shingles", eff)) ++ labelWrites): _*)
         commitBatch(s, root, eff, bMax)
-      } finally done()
+      }
     }
 
   /** Shared append envelope: manifest read, crash-residue sweep,
@@ -519,45 +519,43 @@ object IncrAttrTable {
         else IndexLayout.initMeta(s, idx)
       def hinted(df: DataFrame): DataFrame =
         if (broadcastProbe) broadcast(df) else df
-      // optional language gate FIRST, then the quality gate — both
-      // DocStream's confs and semantics verbatim (IngestSpec pins the
-      // fused loop equals DocStream-then-tagging, so the precedence
-      // wrong_lang → low_quality → dup_corpus → dup_batch → new must be
-      // identical): rejected docs are excluded from scoring/shingling,
-      // so they produce no candidates, classify as nothing but their
-      // gate status, and never enter the index
-      val wrongLang: Option[DataFrame] =
-        s.conf.getOption(graft.streaming.DocStream.LangAllowConfKey)
-          .map { csv =>
-            val allow = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-            TextOps.langIdScoresOf(docs)
-              .filter(!col("pred_lang").isin(allow: _*))
-              .select(col("doc_id")).persist()
-          }
-      val postLang = wrongLang.fold(docs)(w =>
-        docs.join(w, Seq("doc_id"), "left_anti"))
-      val lowQ: Option[DataFrame] =
-        s.conf.getOption(graft.streaming.DocStream.MinScoreConfKey)
-          .map(_.toLong).map { m =>
-            TextOps.modelScoresOf(postLang).filter(col("score") <= m)
-              .select(col("doc_id")).persist()
-          }
-      val eligible = lowQ.fold(postLang)(l =>
-        postLang.join(l, Seq("doc_id"), "left_anti"))
-      val newSh = DedupQs.shinglesOf(eligible).persist()
-      val newBands = DedupQs.minhashBandsOf(newSh).persist()
-      var cands: DataFrame = null
-      try {
+      graft.Memo.scoped { sc =>
+        // optional language gate FIRST, then the quality gate — both
+        // DocStream's confs and semantics verbatim (IngestSpec pins the
+        // fused loop equals DocStream-then-tagging, so the precedence
+        // wrong_lang → low_quality → dup_corpus → dup_batch → new must be
+        // identical): rejected docs are excluded from scoring/shingling,
+        // so they produce no candidates, classify as nothing but their
+        // gate status, and never enter the index
+        val wrongLang: Option[DataFrame] =
+          s.conf.getOption(graft.streaming.DocStream.LangAllowConfKey)
+            .map { csv =>
+              val allow = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+              sc(TextOps.langIdScoresOf(docs)
+                .filter(!col("pred_lang").isin(allow: _*))
+                .select(col("doc_id")))
+            }
+        val postLang = wrongLang.fold(docs)(w =>
+          docs.join(w, Seq("doc_id"), "left_anti"))
+        val lowQ: Option[DataFrame] =
+          s.conf.getOption(graft.streaming.DocStream.MinScoreConfKey)
+            .map(_.toLong).map { m =>
+              sc(TextOps.modelScoresOf(postLang).filter(col("score") <= m)
+                .select(col("doc_id")))
+            }
+        val eligible = lowQ.fold(postLang)(l =>
+          postLang.join(l, Seq("doc_id"), "left_anti"))
+        val newSh = sc(DedupQs.shinglesOf(eligible))
+        val newBands = sc(DedupQs.minhashBandsOf(newSh))
         // the fused loop consumes only the dup IDS: admitted survivors
         // are mutually non-dup by construction (admission drops every
         // doc with a surviving J >= 0.8 partner), so the survivor-index
         // artifact's clusters are all singletons and label maintenance
         // ([[labelDelta]]) has nothing to record on this path
-        val (pairsResident, pairsBatch, c) =
-          dupProbe(s, root, nb, newSh, newBands, broadcastProbe, eff)
+        val (pairsResident, pairsBatch) =
+          dupProbe(sc, s, root, nb, newSh, newBands, broadcastProbe, eff)
         val dupResident = dupIdsOf(pairsResident)
         val dupBatch = dupIdsOf(pairsBatch)
-        cands = c
         val withWl = wrongLang match {
           case Some(w) => docs.select("doc_id")
             .join(hinted(w.withColumn("__wl", lit(true))), Seq("doc_id"), "left")
@@ -645,22 +643,17 @@ object IncrAttrTable {
               idx, "shingles", eff)) ++ windowWrites): _*)
           commitBatch(s, root, eff, bMax)
         }
-      } finally {
-        newSh.unpersist(); newBands.unpersist()
-        lowQ.foreach(_.unpersist())
-        wrongLang.foreach(_.unpersist())
-        if (cands != null) cands.unpersist()
       }
     }
 
-  /** The batch's (attrs, shingles, bands, verified dup pairs, cleanup)
-    * plans against the CURRENT resident state — split from
-    * [[appendBatch]] so the plans can be inspected without writing.
-    * Call `cleanup` when done with the plans (it releases the
-    * batch-sized persisted relations). */
-  private[graft] def batchPlans(s: SparkSession, root: String,
-      docs: DataFrame, broadcastProbe: Boolean = true, batchId: Long = -1L)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, () => Unit) = {
+  /** The batch's (attrs, shingles, bands, verified dup pairs) plans
+    * against the CURRENT resident state — split from [[appendBatch]] so
+    * the plans can be inspected without writing. The batch-sized
+    * relations the plans read are persisted in the caller's scope `sc`,
+    * so the plans are valid until that scope closes. */
+  private[graft] def batchPlans(sc: graft.Memo.Scope, s: SparkSession,
+      root: String, docs: DataFrame, broadcastProbe: Boolean = true,
+      batchId: Long = -1L): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val idx = indexDir(root)
     val eff =
       if (batchId >= 0) batchId
@@ -674,19 +667,15 @@ object IncrAttrTable {
 
     // batch-sized relations, consumed by several joins below and by the
     // index writes — persisted for the lifetime of this append
-    val newSh = DedupQs.shinglesOf(docs).persist()
-    val newBands = DedupQs.minhashBandsOf(newSh).persist()
+    val newSh = sc(DedupQs.shinglesOf(docs))
+    val newBands = sc(DedupQs.minhashBandsOf(newSh))
 
-    val (pairsResident, pairsBatch, candsResident) =
-      dupProbe(s, root, nb, newSh, newBands, broadcastProbe, eff)
+    val (pairsResident, pairsBatch) =
+      dupProbe(sc, s, root, nb, newSh, newBands, broadcastProbe, eff)
     val dupIds = dupIdsOf(pairsResident.unionByName(pairsBatch))
 
     val attrs = attrRows(s, root, docs, Some(dupIds), broadcastProbe)
-    val done = () => {
-      newSh.unpersist(); newBands.unpersist(); candsResident.unpersist(); ()
-    }
-    (attrs, newSh, newBands,
-      pairsResident.unionByName(pairsBatch).distinct(), done)
+    (attrs, newSh, newBands, pairsResident.unionByName(pairsBatch).distinct())
   }
 
   /** The dup probe against the CURRENT resident state: batch bands vs
@@ -700,8 +689,8 @@ object IncrAttrTable {
     * per append plus a Spark 4.1 semi-through-union planner bug (see
     * round-14 history in git).
     *
-    * Returns (resident-dup PAIRS, within-batch-dup PAIRS, the PERSISTED
-    * resident-candidate relation — caller unpersists). Pairs are
+    * Returns (resident-dup PAIRS, within-batch-dup PAIRS); the resident
+    * candidate relation both read is persisted in `sc`. Pairs are
     * (doc_a, doc_b) with doc_a < doc_b (monotone ids put the resident
     * side on doc_a by construction); callers derive dup doc ids as the
     * distinct doc_b side, and the label maintenance ([[labelDelta]] —
@@ -709,9 +698,9 @@ object IncrAttrTable {
     * stream. The two relations stay separate so the admission form
     * ([[ingestBatch]]) can grade `dup_corpus` vs `dup_batch`; the
     * tagging form unions them into one `is_dup`. */
-  private def dupProbe(s: SparkSession, root: String, nb: Int,
-      newSh: DataFrame, newBands: DataFrame, broadcastProbe: Boolean,
-      eff: Long): (DataFrame, DataFrame, DataFrame) = {
+  private def dupProbe(sc: graft.Memo.Scope, s: SparkSession, root: String,
+      nb: Int, newSh: DataFrame, newBands: DataFrame, broadcastProbe: Boolean,
+      eff: Long): (DataFrame, DataFrame) = {
     val idx = indexDir(root)
     val bSide = DedupOps.capBuckets(
         newBands, Seq("band_idx", "band_hash"), DedupQs.MaxBucket)
@@ -726,11 +715,11 @@ object IncrAttrTable {
       .distinct().collect().map(_.getInt(0)).toSeq
     val residentBands =
       IndexLayout.residentSlice(s, idx, "bands", eff, probeBuckets, BandsSchema)
-    val candsResident = residentBands
+    val candsResident = sc(residentBands
       .select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash"))
       .join(bProbe, Seq("band_idx", "band_hash"))
       .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct().persist()
+      .select("doc_a", "doc_b").distinct())
     val candsBatch = newBands
       .select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash"))
       .join(bProbe, Seq("band_idx", "band_hash"))
@@ -767,7 +756,7 @@ object IncrAttrTable {
     val residentSh = IndexLayout.residentSlice(s, idx, "shingles", eff,
       candBuckets, ShinglesSchema)
     (verify(candsResident, residentSh).distinct(),
-      verify(candsBatch, newSh).distinct(), candsResident)
+      verify(candsBatch, newSh).distinct())
   }
 
   /** The distinct dup doc ids of a verified pair relation — the doc_b

@@ -577,13 +577,15 @@ object EventQs {
       // bytes-based cache coalescing would run the explode+join nearly
       // serial (the q37 lesson — measured +32% on this row before the
       // pin). user_id keys the replication deterministically.
-      val sess = graft.Memo.ensurePersisted(Tables.events(s, d)
-        .groupBy(session_window(col("event_ts"), "10 minutes").as("w"),
-          col("user_id"))
-        .agg(unix_micros(min(col("event_ts"))).as("ss"),
-          unix_micros(max(col("event_ts"))).as("se"))
-        .select("user_id", "ss", "se")
-        .repartition(s.sessionState.conf.numShufflePartitions, col("user_id")))
+      val sess = graft.Memo.cached(s, d, "overlap_sessions") {
+        Tables.events(s, d)
+          .groupBy(session_window(col("event_ts"), "10 minutes").as("w"),
+            col("user_id"))
+          .agg(unix_micros(min(col("event_ts"))).as("ss"),
+            unix_micros(max(col("event_ts"))).as("se"))
+          .select("user_id", "ss", "se")
+          .repartition(s.sessionState.conf.numShufflePartitions, col("user_id"))
+      }
       val a = sess.select(col("user_id").as("user_a"),
         col("ss").as("sa"), col("se").as("ea"))
       val b = sess.select(col("user_id").as("user_b"),

@@ -317,12 +317,13 @@ object StatQs {
       // hist feeds the median scan, the deviation re-histogram, AND the
       // final roll-up — Catalyst does not dedupe common subtrees, so
       // persist the (tiny) histogram once
-      val hist = graft.Memo.ensurePersisted(
+      val hist = graft.Memo.cached(s, d, "mad_value_hist") {
         Tables.events(s, d)
           .filter(col("value").isNotNull)
           .select(col("event_type"),
             expr("CAST(floor(value * 100) AS BIGINT)").as("v"))
-          .groupBy("event_type", "v").agg(count(lit(1)).as("c")))
+          .groupBy("event_type", "v").agg(count(lit(1)).as("c"))
+      }
       val tot = hist.groupBy("event_type").agg(sum("c").as("n"))
       val med = hist.withColumn("cum", sum(col("c")).over(wv))
         .join(tot, "event_type")

@@ -769,17 +769,19 @@ object TextQs {
       // join + the M scalar — persist both (vocabulary-sized) so the
       // corpus is scanned exactly twice: once per aggregate, the
       // inherent cost. Catalyst does not dedupe common subtrees.
-      val uni = graft.Memo.ensurePersisted(
+      val uni = graft.Memo.cached(s, d, "collocation_unigrams") {
         docs.select(explode(col("toks")).as("t"))
-          .groupBy("t").agg(count(lit(1)).as("c")))
-      val bi = graft.Memo.ensurePersisted(
+          .groupBy("t").agg(count(lit(1)).as("c"))
+      }
+      val bi = graft.Memo.cached(s, d, "collocation_bigrams") {
         docs.filter(size(col("toks")) >= 2)
           .select(explode(expr(
             "transform(sequence(0, size(toks) - 2), i -> concat(toks[i], ' ', toks[i+1]))"))
             .as("g"))
           .groupBy("g").agg(count(lit(1)).as("c_xy"))
           .select(expr("split(g, ' ')[0]").as("x"),
-            expr("split(g, ' ')[1]").as("y"), col("c_xy")))
+            expr("split(g, ' ')[1]").as("y"), col("c_xy"))
+      }
       val n = uni.agg(sum(col("c")).as("n"))
       val m = bi.agg(sum(col("c_xy")).as("m"))
       val w = org.apache.spark.sql.expressions.Window

@@ -204,8 +204,9 @@ object UdfQs {
       // dst feeds the eager sketch collect, `sizes`, and BOTH sides of
       // the exact pair-join verify — Catalyst does not dedupe common
       // subtrees (the q90/q97/q100 lesson), so persist the one distinct
-      val dst = graft.Memo.ensurePersisted(
-        Tables.events(s, d).select("event_type", "user_id").distinct())
+      val dst = graft.Memo.cached(s, d, "audience_type_users") {
+        Tables.events(s, d).select("event_type", "user_id").distinct()
+      }
       val kmv = udaf(new graft.ops.SketchOps.KMinValues(k))
       // BOUNDED COLLECT (q68/q125 convention): one row per event TYPE,
       // each ≤ k longs — types × 2048 longs driver-resident, and the

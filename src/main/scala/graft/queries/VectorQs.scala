@@ -121,7 +121,7 @@ object VectorQs {
     * recall@5 ≥ 0.8 at EVERY scale tier (1×/10×/100×, trained
     * centroids) — on clustered production embeddings the same budget
     * buys far more, and the knob walks the curve per-session. */
-  private[graft] val DefaultIvfProbes = 24
+  private val DefaultIvfProbes = 24
 
   /** Probe count for the IVF searches (q42/q66) — the standard
     * recall/cost lever: candidates (and search time) grow linearly with
@@ -390,11 +390,9 @@ object VectorQs {
     * escalated job at roughly half an hour — a maintenance-window cost,
     * past which (≈490 k+ vectors at the 4×-table/T=32 budget — the
     * same rows-per-vector as the old 2×/T=64 pairing)
-    * the cell path is the only family member left.
-    * `spark.graft.srp.escalateMultiprobe=false` skips the tier
+    * the cell path is the only family member left. `0` skips the tier
     * entirely. */
   private[graft] val SrpMaxProbeRowsKey = "spark.graft.srp.maxProbeRows"
-  private[graft] val SrpEscalateKey = "spark.graft.srp.escalateMultiprobe"
 
   /** Probes per band row for the escalation tier's QUERY-DIRECTED
     * multiprobe (margin-ranked prefix of the weight-≤2 neighborhood;
@@ -408,7 +406,7 @@ object VectorQs {
     * prediction measured both ways at two tiers) — and 64 at twice the
     * budget below it, the form measured to SURVIVE a default 8 GiB
     * heap. */
-  private[graft] val SrpQdProbesKey = "spark.graft.srp.qdProbes"
+  private val SrpQdProbesKey = "spark.graft.srp.qdProbes"
 
   /** Conf override for the escalation tier's TABLE MULTIPLIER — the
     * heap-keyed 4×-vs-2× choice ([[qdForm]]) becomes the DEFAULT only.
@@ -416,7 +414,7 @@ object VectorQs {
     * explicitly, so a routed query's candidate set and recall are
     * reproducible by configuration alone across machines with different
     * heaps (round-18 ADVICE: nothing could pin the multiplier). */
-  private[graft] val SrpQdTableMultKey = "spark.graft.srp.qdTableMultiplier"
+  private val SrpQdTableMultKey = "spark.graft.srp.qdTableMultiplier"
 
   /** Conf override (bytes) for the scratch-space budget the escalation's
     * DISK gate prices against — see [[qdScratchBudgetBytes]]. */
@@ -498,7 +496,7 @@ object VectorQs {
     * ceiling identified), and the driver's own disk says nothing about
     * them — so the default is unbounded and [[SrpQdScratchKey]] is the
     * explicit per-deployment bound. */
-  private[graft] def qdScratchBudgetBytes(s: SparkSession): Long =
+  private def qdScratchBudgetBytes(s: SparkSession): Long =
     s.conf.getOption(SrpQdScratchKey).map(_.toLong).getOrElse {
       if (!s.conf.get("spark.master", "local").startsWith("local"))
         Long.MaxValue
@@ -590,7 +588,7 @@ object VectorQs {
     * the operator. The graded 1×/bench densities sit orders of
     * magnitude under the default bound, so oracle-graded plans are
     * untouched (PlanSpec pins both sides). */
-  private[graft] def srpMultiQuery(s: SparkSession, d: String,
+  private def srpMultiQuery(s: SparkSession, d: String,
       bandBits: Int, numMatrices: Int): DataFrame = {
     val planesL = (0 until numMatrices).map(srpPlanesL)
     val tag = s"srp_multi_b${bandBits}_L$numMatrices"
@@ -641,7 +639,6 @@ object VectorQs {
       // spark.graft.srp.qdProbes tunes T (>= the 137-mask ball = the
       // full flip-2 form).
       val tables = numMatrices * 64 / bandBits
-      val escalate = s.conf.getOption(SrpEscalateKey).forall(_.toBoolean)
       val probeBudget = s.conf.getOption(SrpMaxProbeRowsKey).map(_.toLong)
         .getOrElse(2000000000L)
       // FORM SELECTION IS HEAP-KEYED (round 18; round 19 made the key
@@ -670,21 +667,19 @@ object VectorQs {
         s.conf.getOption(SrpQdProbesKey).map(_.toInt))
       val escTables = qdMult * tables
       val perRow = math.min(qdProbes, srpFlipMasks(16, 2).size)
-      val probeRows =
-        if (!escalate) Long.MaxValue
-        else memoFill(embCount, (s, d))(
-          Long.box(Tables.embeddings(s, d).count())) * escTables * perRow
+      val probeRows = memoFill(embCount, (s, d))(
+        Long.box(Tables.embeddings(s, d).count())) * escTables * perRow
       // DISK GATE (round 19): the expansion shuffle's spill must also
       // FIT — the 128-table/T=64 rung died twice at ENOSPC (~77 GB
       // scratch on a 78 GB disk, §2.0.2) and nothing guarded it; a user
-      // raising qdProbes re-created the death. Same shape as the row
-      // budget: divide (not multiply) so the !escalate sentinel can't
-      // overflow. Budget semantics in [[qdScratchBudgetBytes]].
+      // raising qdProbes re-created the death. Divide (not multiply) so
+      // the product can't overflow. Budget semantics in
+      // [[qdScratchBudgetBytes]].
       val scratchBudget = qdScratchBudgetBytes(s)
       val shuffleCodec = s.conf.get("spark.io.compression.codec", "lz4")
       val scratchPerRow = qdScratchBytesPerRow(shuffleCodec)
       val fitsScratch = probeRows <= scratchBudget / scratchPerRow
-      if (escalate && probeRows <= probeBudget && fitsScratch) {
+      if (probeRows <= probeBudget && fitsScratch) {
         log.warn(s"SRP density router: estimated candidate mass $est exceeds " +
           s"$SrpMaxCandsKey=$bound for corpus $d — escalating to the " +
           s"16-bit query-directed multiprobe form ($escTables tables = " +
@@ -697,7 +692,7 @@ object VectorQs {
           "(2x, T=64) = recall 0.948 at 1384 s at the default 8g, " +
           "spill-bound — vs the 8-bit join's 595 s / 0.444 (cap-" +
           "truncated) and the full flip-2 ball's 1812 s / 0.808. Set " +
-          s"$SrpEscalateKey=false to route straight to the cell-bounded " +
+          s"$SrpMaxProbeRowsKey=0 to route straight to the cell-bounded " +
           s"path; $SrpQdTableMultKey/$SrpQdProbesKey pin the form.")
         srpMultiProbePairs(s, d, bandBits = 16,
           numMatrices = math.max(1, escTables * 16 / 64), flipRadius = 2,
@@ -705,10 +700,10 @@ object VectorQs {
       } else {
         log.warn(s"SRP density router: estimated candidate mass $est exceeds " +
           s"$SrpMaxCandsKey=$bound for corpus $d" +
-          (if (escalate && probeRows > probeBudget)
+          (if (probeRows > probeBudget)
             s" and the multiprobe escalation's $probeRows expansion rows " +
               s"exceed $SrpMaxProbeRowsKey=$probeBudget" else "") +
-          (if (escalate && !fitsScratch)
+          (if (!fitsScratch)
             s" and the escalation's estimated shuffle scratch " +
               s"(~${probeRows * scratchPerRow >> 30} GiB at " +
               s"$scratchPerRow B/row, codec $shuffleCodec) exceeds the " +
@@ -1532,7 +1527,7 @@ object VectorQs {
     * relations are ever persisted at once (the previous unpersists as
     * soon as the next is materialized by its own TakeOrdered head).
     */
-  private def kcenterQuery(s: SparkSession, d: String): DataFrame = {
+  private def kcenterQuery(s: SparkSession, d: String): DataFrame = graft.Memo.scoped { sc =>
     val K = 8 // the oracle's 8 unrolled rounds
     val emb = graft.Memo.cached(s, d, "kcenter_sq") {
       corpus(s, d).withColumn("sq", VectorOps.sqNormD(col("vec")))
@@ -1542,25 +1537,22 @@ object VectorQs {
       (1, first.getLong(0), None))
     var centerVec: Seq[Float] = first.getSeq[Float](1).toSeq
     var cur: DataFrame = null
-    var prev: DataFrame = null
     while (chosen.size < K) {
       val cl = typedlit(centerVec)
       val dNew = col("sq") + VectorOps.dotD(cl, cl) -
         lit(2.0) * VectorOps.dotD(col("vec"), cl)
-      cur =
-        if (cur == null)
+      val prev = cur
+      cur = sc(
+        if (prev == null)
           emb.select(col("id"), col("vec"), col("sq"), dNew.as("dmin"))
         else
-          cur.select(col("id"), col("vec"), col("sq"),
-            least(col("dmin"), dNew).as("dmin"))
-      cur.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          prev.select(col("id"), col("vec"), col("sq"),
+            least(col("dmin"), dNew).as("dmin")))
       val next = cur.orderBy(col("dmin").desc, col("id")).limit(1).head()
-      if (prev != null) prev.unpersist()
-      prev = cur
+      if (prev != null) sc.release(prev)
       chosen :+= ((chosen.size + 1, next.getLong(0), Some(next.getDouble(3))))
       centerVec = next.getSeq[Float](1).toSeq
     }
-    if (prev != null) prev.unpersist()
     import s.implicits._
     chosen.map { case (r, id, dd) => (r, id, dd) }
       .toDF("rk", "vec_id", "dist2")

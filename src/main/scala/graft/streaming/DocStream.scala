@@ -179,7 +179,7 @@ object DocStream {
     * the partitions of the first attempt. Package-visible so specs can
     * drive it directly. */
   private[graft] def admitBatch(docs: DataFrame, indexDir: String,
-      outDir: String, batchId: Long): Unit = {
+      outDir: String, batchId: Long): Unit = graft.Memo.scoped { sc =>
     val spark = docs.sparkSession
     val nb = IndexLayout.numBuckets(spark, indexDir)
     // optional language gate FIRST (see LangAllowConfKey): rejected
@@ -189,9 +189,9 @@ object DocStream {
     val wrongLang: Option[DataFrame] =
       spark.conf.getOption(LangAllowConfKey).map { csv =>
         val allow = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        TextOps.langIdScoresOf(docs)
+        sc(TextOps.langIdScoresOf(docs)
           .filter(!col("pred_lang").isin(allow: _*))
-          .select(col("doc_id")).persist()
+          .select(col("doc_id")))
       }
     val postLang = wrongLang match {
       case Some(w) => docs.join(w, Seq("doc_id"), "left_anti")
@@ -204,122 +204,110 @@ object DocStream {
     // final status projection.
     val lowQ: Option[DataFrame] =
       spark.conf.getOption(MinScoreConfKey).map(_.toLong).map { m =>
-        TextOps.modelScoresOf(postLang).filter(col("score") <= m)
-          .select(col("doc_id")).persist()
+        sc(TextOps.modelScoresOf(postLang).filter(col("score") <= m)
+          .select(col("doc_id")))
       }
     val eligible = lowQ match {
       case Some(l) => postLang.join(l, Seq("doc_id"), "left_anti")
       case None => postLang
     }
-    val sh = eligible
+    val sh = sc(eligible
       .select(col("doc_id"), TextOps.shingleHashes(col("text")).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .persist()
-    val bands = DedupOps.minhashBands(sh, "doc_id", numPerm = 64, bands = 16)
-      .persist()
-    var candsCorpus: DataFrame = null
-    try {
-      // which index buckets can this batch's band lookups possibly hit?
-      // A bounded driver-side scalar (≤ nb ints) off the persisted batch
-      // bands — the price of turning the index read from O(index) into
-      // O(batch's buckets).
-      val streamBuckets = bands.select(bandBucket(nb).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
+      .filter(size(col("shingles")) > 0))
+    val bands = sc(DedupOps.minhashBands(sh, "doc_id", numPerm = 64, bands = 16))
+    // which index buckets can this batch's band lookups possibly hit?
+    // A bounded driver-side scalar (≤ nb ints) off the persisted batch
+    // bands — the price of turning the index read from O(index) into
+    // O(batch's buckets).
+    val streamBuckets = bands.select(bandBucket(nb).cast("int").as("b"))
+      .distinct().collect().map(_.getInt(0)).toSeq
 
-      // the index is the relation that grows without bound as admissions
-      // accumulate — the same oversized-bucket straggler guard the batch
-      // paths apply (inert below the cap, bounds per-trigger pair
-      // generation when a band bucket goes hot). Partition pruning on
-      // batch_id < batchId excludes any half-written rows a crashed
-      // first attempt of THIS batch left behind — replay classifies
-      // against exactly the pre-batch index.
-      val idxBands = DedupOps.capBuckets(
-        IndexLayout.residentSlice(spark, indexDir, "bands", batchId,
-          streamBuckets, BandsSchema),
-        Seq("band_idx", "band_hash"), 1000)
+    // the index is the relation that grows without bound as admissions
+    // accumulate — the same oversized-bucket straggler guard the batch
+    // paths apply (inert below the cap, bounds per-trigger pair
+    // generation when a band bucket goes hot). Partition pruning on
+    // batch_id < batchId excludes any half-written rows a crashed
+    // first attempt of THIS batch left behind — replay classifies
+    // against exactly the pre-batch index.
+    val idxBands = DedupOps.capBuckets(
+      IndexLayout.residentSlice(spark, indexDir, "bands", batchId,
+        streamBuckets, BandsSchema),
+      Seq("band_idx", "band_hash"), 1000)
 
-      val streamSide = bands.select(col("doc_id").as("doc_b"), col("band_idx"), col("band_hash"))
-      candsCorpus = streamSide
-        .join(idxBands.select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash")),
-          Seq("band_idx", "band_hash"))
-        .select("doc_a", "doc_b").distinct()
-        .persist()
-      val candsBatch = bands
-        .select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash"))
-        .join(streamSide, Seq("band_idx", "band_hash"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b").distinct()
+    val streamSide = bands.select(col("doc_id").as("doc_b"), col("band_idx"), col("band_hash"))
+    val candsCorpus = sc(streamSide
+      .join(idxBands.select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash")),
+        Seq("band_idx", "band_hash"))
+      .select("doc_a", "doc_b").distinct())
+    val candsBatch = bands
+      .select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash"))
+      .join(streamSide, Seq("band_idx", "band_hash"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select("doc_a", "doc_b").distinct()
 
-      // shingle verify reads only the candidate docs' id buckets —
-      // second bounded collect, off the persisted candidate relation
-      val candBuckets = candsCorpus
-        .select(docBucket(nb, col("doc_a")).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val idxSh = IndexLayout.residentSlice(spark, indexDir, "shingles",
-        batchId, candBuckets, ShinglesSchema)
+    // shingle verify reads only the candidate docs' id buckets —
+    // second bounded collect, off the persisted candidate relation
+    val candBuckets = candsCorpus
+      .select(docBucket(nb, col("doc_a")).as("b"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    val idxSh = IndexLayout.residentSlice(spark, indexDir, "shingles",
+      batchId, candBuckets, ShinglesSchema)
 
-      // integer-exact J >= 4/5 with array_intersect appearing ONCE (the
-      // division form expands the intersect into both numerator and
-      // denominator of the join-time condition — see DedupQs.verified)
-      def verify(cands: DataFrame, aSh: DataFrame): DataFrame =
-        cands
-          .join(aSh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), "doc_a")
-          .join(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), "doc_b")
-          .filter(lit(9L) * size(array_intersect(col("sh_a"), col("sh_b"))) >=
-            lit(4L) * (size(col("sh_a")) + size(col("sh_b"))))
-          .select(col("doc_b").as("doc_id")).distinct()
+    // integer-exact J >= 4/5 with array_intersect appearing ONCE (the
+    // division form expands the intersect into both numerator and
+    // denominator of the join-time condition — see DedupQs.verified)
+    def verify(cands: DataFrame, aSh: DataFrame): DataFrame =
+      cands
+        .join(aSh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), "doc_a")
+        .join(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), "doc_b")
+        .filter(lit(9L) * size(array_intersect(col("sh_a"), col("sh_b"))) >=
+          lit(4L) * (size(col("sh_a")) + size(col("sh_b"))))
+        .select(col("doc_b").as("doc_id")).distinct()
 
-      val dupCorpus = verify(candsCorpus, idxSh).withColumn("__dc", lit(true))
-      val dupBatch = verify(candsBatch, sh).withColumn("__db", lit(true))
+    val dupCorpus = verify(candsCorpus, idxSh).withColumn("__dc", lit(true))
+    val dupBatch = verify(candsBatch, sh).withColumn("__db", lit(true))
 
-      val withWl = wrongLang match {
-        case Some(w) => docs.select("doc_id")
-          .join(w.withColumn("__wl", lit(true)), Seq("doc_id"), "left")
-        case None => docs.select("doc_id")
-          .withColumn("__wl", lit(null).cast("boolean"))
-      }
-      val withLq = lowQ match {
-        case Some(l) => withWl
-          .join(l.withColumn("__lq", lit(true)), Seq("doc_id"), "left")
-        case None => withWl
-          .withColumn("__lq", lit(null).cast("boolean"))
-      }
-      withLq
-        .join(dupCorpus, Seq("doc_id"), "left")
-        .join(dupBatch, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("__wl"), "wrong_lang")
-            .when(col("__lq"), "low_quality")
-            .when(col("__dc"), "dup_corpus")
-            .when(col("__db"), "dup_batch")
-            .otherwise("new").as("status"),
-          lit(batchId).as("batch_id"))
-        .write.partitionBy("batch_id").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(s"$outDir/admissions")
-
-      // re-read the just-committed verdicts: breaks the plan lineage to
-      // indexDir (Spark refuses to overwrite a path its plan reads) and
-      // makes the index writes a pure function of on-disk state
-      val admitted = spark.read.parquet(s"$outDir/admissions")
-        .filter(col("batch_id") === batchId && col("status") === "new")
-        .select("doc_id")
-      IndexLayout.writeSlice(
-        sh.join(admitted, "doc_id")
-          .withColumn("bucket", docBucket(nb))
-          .withColumn("batch_id", lit(batchId)),
-        indexDir, "shingles", dynamic = true)
-      IndexLayout.writeSlice(
-        bands.join(admitted, "doc_id")
-          .withColumn("bucket", bandBucket(nb))
-          .withColumn("batch_id", lit(batchId)),
-        indexDir, "bands", dynamic = true)
-    } finally {
-      sh.unpersist()
-      bands.unpersist()
-      lowQ.foreach(_.unpersist())
-      wrongLang.foreach(_.unpersist())
-      if (candsCorpus != null) candsCorpus.unpersist()
+    val withWl = wrongLang match {
+      case Some(w) => docs.select("doc_id")
+        .join(w.withColumn("__wl", lit(true)), Seq("doc_id"), "left")
+      case None => docs.select("doc_id")
+        .withColumn("__wl", lit(null).cast("boolean"))
     }
+    val withLq = lowQ match {
+      case Some(l) => withWl
+        .join(l.withColumn("__lq", lit(true)), Seq("doc_id"), "left")
+      case None => withWl
+        .withColumn("__lq", lit(null).cast("boolean"))
+    }
+    withLq
+      .join(dupCorpus, Seq("doc_id"), "left")
+      .join(dupBatch, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        when(col("__wl"), "wrong_lang")
+          .when(col("__lq"), "low_quality")
+          .when(col("__dc"), "dup_corpus")
+          .when(col("__db"), "dup_batch")
+          .otherwise("new").as("status"),
+        lit(batchId).as("batch_id"))
+      .write.partitionBy("batch_id").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(s"$outDir/admissions")
+
+    // re-read the just-committed verdicts: breaks the plan lineage to
+    // indexDir (Spark refuses to overwrite a path its plan reads) and
+    // makes the index writes a pure function of on-disk state
+    val admitted = spark.read.parquet(s"$outDir/admissions")
+      .filter(col("batch_id") === batchId && col("status") === "new")
+      .select("doc_id")
+    IndexLayout.writeSlice(
+      sh.join(admitted, "doc_id")
+        .withColumn("bucket", docBucket(nb))
+        .withColumn("batch_id", lit(batchId)),
+      indexDir, "shingles", dynamic = true)
+    IndexLayout.writeSlice(
+      bands.join(admitted, "doc_id")
+        .withColumn("bucket", bandBucket(nb))
+        .withColumn("batch_id", lit(batchId)),
+      indexDir, "bands", dynamic = true)
   }
 }

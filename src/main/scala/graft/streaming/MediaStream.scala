@@ -126,65 +126,61 @@ object MediaStream {
     * idempotently, index the admitted fingerprints. Package-visible so
     * specs and the graded q154 drive it directly. */
   private[graft] def admitBatch(media: DataFrame, indexDir: String,
-      outDir: String, batchId: Long): Unit = {
+      outDir: String, batchId: Long): Unit = graft.Memo.scoped { sc =>
     val spark = media.sparkSession
     val nb = IndexLayout.numBuckets(spark, indexDir)
-    val batchBands = MultimodalOps.phashBands(hashesOf(media)).persist()
-    try {
-      // the batch can only collide inside its own band buckets — read
-      // only those bucket dirs (bounded driver-side scalar off the
-      // persisted bands, ≤ min(4·batch, nb) ints; DocStream's posture)
-      val probeBuckets = batchBands.select(bucket(nb).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val idx = DedupOps.capBuckets(
-        IndexLayout.residentSlice(spark, indexDir, "fingerprints", batchId,
-          probeBuckets, FingerprintsSchema),
-        Seq("band_idx", "band_bits"), MaxBucket)
+    val batchBands = sc(MultimodalOps.phashBands(hashesOf(media)))
+    // the batch can only collide inside its own band buckets — read
+    // only those bucket dirs (bounded driver-side scalar off the
+    // persisted bands, ≤ min(4·batch, nb) ints; DocStream's posture)
+    val probeBuckets = batchBands.select(bucket(nb).as("b"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    val idx = DedupOps.capBuckets(
+      IndexLayout.residentSlice(spark, indexDir, "fingerprints", batchId,
+        probeBuckets, FingerprintsSchema),
+      Seq("band_idx", "band_bits"), MaxBucket)
 
-      def near = bit_count(col("a_ph").bitwiseXOR(col("b_ph"))) <= MaxHamming
-      val b = batchBands.select(col("band_idx"), col("band_bits"),
-        col("media_id").as("b_id"), col("phash").as("b_ph"))
+    def near = bit_count(col("a_ph").bitwiseXOR(col("b_ph"))) <= MaxHamming
+    val b = batchBands.select(col("band_idx"), col("band_bits"),
+      col("media_id").as("b_id"), col("phash").as("b_ph"))
 
-      val dupCorpus = idx
-        .select(col("band_idx"), col("band_bits"), col("phash").as("a_ph"))
-        .join(b, Seq("band_idx", "band_bits"))
-        .filter(near)
-        .select(col("b_id").as("media_id")).distinct()
-        .withColumn("__dc", lit(true))
-      // keep-first within the batch: a LOWER-id near neighbor marks
-      // this one, the neighbor's own verdict notwithstanding
-      val dupBatch = batchBands
-        .select(col("band_idx"), col("band_bits"),
-          col("media_id").as("a_id"), col("phash").as("a_ph"))
-        .join(b, Seq("band_idx", "band_bits"))
-        .filter(col("a_id") < col("b_id") && near)
-        .select(col("b_id").as("media_id")).distinct()
-        .withColumn("__db", lit(true))
+    val dupCorpus = idx
+      .select(col("band_idx"), col("band_bits"), col("phash").as("a_ph"))
+      .join(b, Seq("band_idx", "band_bits"))
+      .filter(near)
+      .select(col("b_id").as("media_id")).distinct()
+      .withColumn("__dc", lit(true))
+    // keep-first within the batch: a LOWER-id near neighbor marks
+    // this one, the neighbor's own verdict notwithstanding
+    val dupBatch = batchBands
+      .select(col("band_idx"), col("band_bits"),
+        col("media_id").as("a_id"), col("phash").as("a_ph"))
+      .join(b, Seq("band_idx", "band_bits"))
+      .filter(col("a_id") < col("b_id") && near)
+      .select(col("b_id").as("media_id")).distinct()
+      .withColumn("__db", lit(true))
 
-      media.select(col("media_id"))
-        .join(dupCorpus, Seq("media_id"), "left")
-        .join(dupBatch, Seq("media_id"), "left")
-        .select(col("media_id"),
-          when(col("__dc"), "dup_corpus")
-            .when(col("__db"), "dup_batch")
-            .otherwise("new").as("status"),
-          lit(batchId).as("batch_id"))
-        .write.partitionBy("batch_id").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(s"$outDir/admissions")
+    media.select(col("media_id"))
+      .join(dupCorpus, Seq("media_id"), "left")
+      .join(dupBatch, Seq("media_id"), "left")
+      .select(col("media_id"),
+        when(col("__dc"), "dup_corpus")
+          .when(col("__db"), "dup_batch")
+          .otherwise("new").as("status"),
+        lit(batchId).as("batch_id"))
+      .write.partitionBy("batch_id").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(s"$outDir/admissions")
 
-      // re-read the committed verdicts: breaks plan lineage to indexDir
-      // and makes the index write a pure function of on-disk state
-      val admitted = spark.read.parquet(s"$outDir/admissions")
-        .filter(col("batch_id") === batchId && col("status") === "new")
-        .select("media_id")
-      IndexLayout.writeSlice(
-        batchBands.join(admitted, "media_id")
-          .withColumn("bucket", bucket(nb))
-          .withColumn("batch_id", lit(batchId)),
-        indexDir, "fingerprints", dynamic = true)
-    } finally {
-      batchBands.unpersist()
-    }
+    // re-read the committed verdicts: breaks plan lineage to indexDir
+    // and makes the index write a pure function of on-disk state
+    val admitted = spark.read.parquet(s"$outDir/admissions")
+      .filter(col("batch_id") === batchId && col("status") === "new")
+      .select("media_id")
+    IndexLayout.writeSlice(
+      batchBands.join(admitted, "media_id")
+        .withColumn("bucket", bucket(nb))
+        .withColumn("batch_id", lit(batchId)),
+      indexDir, "fingerprints", dynamic = true)
   }
 }

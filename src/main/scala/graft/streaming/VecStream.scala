@@ -141,69 +141,64 @@ object VecStream {
     * indexed (nothing to compare) — the same convention as DocStream's
     * empty-shingle docs. */
   private[graft] def admitBatch(vecs: DataFrame, indexDir: String,
-      outDir: String, batchId: Long): Unit = {
+      outDir: String, batchId: Long): Unit = graft.Memo.scoped { sc =>
     val spark = vecs.sparkSession
     val nb = IndexLayout.numBuckets(spark, indexDir)
-    val assigned = VectorOps.ivfAssign(
-        vecs.filter(col("embedding").isNotNull)
-          .select(col("vec_id").as("id"), col("embedding").as("vec")),
-        spark.read.parquet(s"$indexDir/centroids"))
-      .persist()
-    try {
-      // the batch can only collide inside its own assigned cells — read
-      // only those cells' bucket dirs (bounded driver-side scalar off
-      // the persisted assignment, ≤ nb ints; DocStream's posture)
-      val batchBuckets = assigned.select(cellBucket(nb).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val idx = DedupOps.capBuckets(
-        IndexLayout.residentSlice(spark, indexDir, "vectors", batchId,
-          batchBuckets, VectorsSchema),
-        Seq("cell"), MaxCell)
+    val assigned = sc(VectorOps.ivfAssign(
+      vecs.filter(col("embedding").isNotNull)
+        .select(col("vec_id").as("id"), col("embedding").as("vec")),
+      spark.read.parquet(s"$indexDir/centroids")))
+    // the batch can only collide inside its own assigned cells — read
+    // only those cells' bucket dirs (bounded driver-side scalar off
+    // the persisted assignment, ≤ nb ints; DocStream's posture)
+    val batchBuckets = assigned.select(cellBucket(nb).cast("int").as("b"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    val idx = DedupOps.capBuckets(
+      IndexLayout.residentSlice(spark, indexDir, "vectors", batchId,
+        batchBuckets, VectorsSchema),
+      Seq("cell"), MaxCell)
 
-      def sideA(df: DataFrame): DataFrame = df.select(col("cell"),
-        col("id").as("a_id"), col("vec").as("a_vec"), col("sq_norm").as("a_norm"))
-      val b = assigned.select(col("cell"),
-        col("id").as("b_id"), col("vec").as("b_vec"), col("sq_norm").as("b_norm"))
-      def close: org.apache.spark.sql.Column =
-        VectorOps.cosineWithNorms(VectorOps.dotD(col("a_vec"), col("b_vec")),
-          col("a_norm"), col("b_norm")) >= Tau
+    def sideA(df: DataFrame): DataFrame = df.select(col("cell"),
+      col("id").as("a_id"), col("vec").as("a_vec"), col("sq_norm").as("a_norm"))
+    val b = assigned.select(col("cell"),
+      col("id").as("b_id"), col("vec").as("b_vec"), col("sq_norm").as("b_norm"))
+    def close: org.apache.spark.sql.Column =
+      VectorOps.cosineWithNorms(VectorOps.dotD(col("a_vec"), col("b_vec")),
+        col("a_norm"), col("b_norm")) >= Tau
 
-      val dupCorpus = sideA(idx).join(b, "cell")
-        .filter(close)
-        .select(col("b_id").as("id")).distinct()
-        .withColumn("__dc", lit(true))
-      // q78's keep-first: a LOWER-id batch neighbor marks this one, the
-      // neighbor's own verdict notwithstanding (DocStream's precedence)
-      val dupBatch = sideA(assigned).join(b, "cell")
-        .filter(col("a_id") < col("b_id") && close)
-        .select(col("b_id").as("id")).distinct()
-        .withColumn("__db", lit(true))
+    val dupCorpus = sideA(idx).join(b, "cell")
+      .filter(close)
+      .select(col("b_id").as("id")).distinct()
+      .withColumn("__dc", lit(true))
+    // q78's keep-first: a LOWER-id batch neighbor marks this one, the
+    // neighbor's own verdict notwithstanding (DocStream's precedence)
+    val dupBatch = sideA(assigned).join(b, "cell")
+      .filter(col("a_id") < col("b_id") && close)
+      .select(col("b_id").as("id")).distinct()
+      .withColumn("__db", lit(true))
 
-      vecs.select(col("vec_id").as("id"))
-        .join(dupCorpus, Seq("id"), "left")
-        .join(dupBatch, Seq("id"), "left")
-        .select(col("id").as("vec_id"),
-          when(col("__dc"), "dup_corpus")
-            .when(col("__db"), "dup_batch")
-            .otherwise("new").as("status"),
-          lit(batchId).as("batch_id"))
-        .write.partitionBy("batch_id").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(s"$outDir/admissions")
+    vecs.select(col("vec_id").as("id"))
+      .join(dupCorpus, Seq("id"), "left")
+      .join(dupBatch, Seq("id"), "left")
+      .select(col("id").as("vec_id"),
+        when(col("__dc"), "dup_corpus")
+          .when(col("__db"), "dup_batch")
+          .otherwise("new").as("status"),
+        lit(batchId).as("batch_id"))
+      .write.partitionBy("batch_id").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(s"$outDir/admissions")
 
-      // re-read the committed verdicts: breaks plan lineage to indexDir
-      // and makes the index write a pure function of on-disk state
-      val admitted = spark.read.parquet(s"$outDir/admissions")
-        .filter(col("batch_id") === batchId && col("status") === "new")
-        .select(col("vec_id").as("id"))
-      IndexLayout.writeSlice(
-        assigned.join(admitted, "id")
-          .withColumn("bucket", cellBucket(nb))
-          .withColumn("batch_id", lit(batchId)),
-        indexDir, "vectors", dynamic = true)
-    } finally {
-      assigned.unpersist()
-    }
+    // re-read the committed verdicts: breaks plan lineage to indexDir
+    // and makes the index write a pure function of on-disk state
+    val admitted = spark.read.parquet(s"$outDir/admissions")
+      .filter(col("batch_id") === batchId && col("status") === "new")
+      .select(col("vec_id").as("id"))
+    IndexLayout.writeSlice(
+      assigned.join(admitted, "id")
+        .withColumn("bucket", cellBucket(nb))
+        .withColumn("batch_id", lit(batchId)),
+      indexDir, "vectors", dynamic = true)
   }
 
   /** Streaming per-dimension feature histograms — q118's twin as a

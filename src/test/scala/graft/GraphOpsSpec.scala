@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.GraphOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{CacheEntries, DataFrame}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Quantized-integer PageRank: hand-checked recurrence on tiny graphs,
@@ -252,23 +252,90 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(far == m(graft.ops.GraphOps.bfs(edges, seeds, 3)))
   }
 
+  /** Runs `body` and fails if it left a cached relation behind: a new
+    * CacheManager entry (registered even when nothing materialized it),
+    * or a new persisted RDD other than the eager per-round
+    * localCheckpoints, which stay persisted by design. */
+  private def assertNoCacheLeft(what: String)(body: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    val entriesBefore = CacheEntries.count(spark)
+    body
+    val left = (sc.getPersistentRDDs -- rddsBefore).values.filterNot(_.isCheckpointed)
+    assert(left.isEmpty,
+      s"$what: cached relations left behind: ${left.map(_.name).mkString("; ")}")
+    assert(CacheEntries.count(spark) == entriesBefore,
+      s"$what: ${CacheEntries.count(spark) - entriesBefore} cache entries left behind")
+  }
+
   test("bfs/sssp: the distributed path leaves no cached relation behind") {
     import spark.implicits._
     val edgesW = Seq((0L, 1L, 1L), (1L, 2L, 1L), (2L, 3L, 1L), (3L, 4L, 1L), (0L, 4L, 9L))
       .toDF("src", "dst", "w")
     val seeds = Seq(0L).toDF("node")
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    // a bound below the edge count forces the probe-then-distributed path
-    spark.conf.set(GraphOps.DriverGraphMaxEdgesKey, "2")
-    val (dist, cost) = try (ranks(GraphOps.bfs(edgesW.select("src", "dst"), seeds, 4)),
-      ranks(GraphOps.sssp(edgesW, seeds, 4)))
-    finally spark.conf.unset(GraphOps.DriverGraphMaxEdgesKey)
-    assert(dist == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 1L))
-    assert(cost == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
-    // the eager per-round localCheckpoints stay persisted by design; any
-    // other new persisted RDD is a cached relation nobody released
-    val left = (sc.getPersistentRDDs -- before).values.filterNot(_.isCheckpointed)
-    assert(left.isEmpty, s"cached relations left behind: ${left.map(_.name).mkString("; ")}")
+    assertNoCacheLeft("bfs/sssp") {
+      // a bound below the edge count forces the probe-then-distributed path
+      spark.conf.set(GraphOps.DriverGraphMaxEdgesKey, "2")
+      val (dist, cost) = try (ranks(GraphOps.bfs(edgesW.select("src", "dst"), seeds, 4)),
+        ranks(GraphOps.sssp(edgesW, seeds, 4)))
+      finally spark.conf.unset(GraphOps.DriverGraphMaxEdgesKey)
+      assert(dist == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 1L))
+      assert(cost == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
+    }
+  }
+
+  test("CC and the doc/vector/media stream admissions leave no cached relation behind") {
+    import spark.implicits._
+    import graft.streaming.{DocStream, MediaStream, VecStream}
+    def dirs(tag: String): (String, String) = {
+      val root = java.nio.file.Files.createTempDirectory(tag)
+      (s"$root/index", s"$root/out")
+    }
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 8L)).toDF("a", "b")
+    def v(i: Int, w: Float): Seq[Float] = Seq.tabulate(64)(j => if (j == i) w else 0f)
+    def bmp(x0: Int) = graft.queries.MultimodalQs.bmpOf(9, 8, (x, _) => x0 + 20 * x)
+    def media(rows: (Long, Array[Byte])*) = rows
+      .map { case (id, b) => (id, "image", s"mem://$id.bmp", b) }
+      .toDF("media_id", "kind", "uri", "bytes")
+    val cases: Seq[(String, () => Unit)] = Seq(
+      "cc, driver path" -> (() =>
+        graft.ops.DedupOps.connectedComponents(edges).collect()),
+      "cc, probe then distributed loop" -> { () =>
+        spark.conf.set(graft.ops.DedupOps.DriverCcMaxEdgesKey, "2")
+        try graft.ops.DedupOps.connectedComponents(edges).collect()
+        finally spark.conf.unset(graft.ops.DedupOps.DriverCcMaxEdgesKey)
+      },
+      "DocStream.admitBatch" -> { () =>
+        val (indexDir, outDir) = dirs("cache-doc")
+        val text = "the quick brown fox jumps over the lazy dog again and again"
+        DocStream.seedIndex(Seq((1L, text)).toDF("doc_id", "text"), indexDir)
+        DocStream.admitBatch(Seq((9001L, text), (9002L, "purple monkeys deliver " +
+          "seventeen umbrellas to the northern lighthouse keeper")).toDF("doc_id", "text"),
+          indexDir, outDir, 0L)
+      },
+      "VecStream.admitBatch" -> { () =>
+        val (indexDir, outDir) = dirs("cache-vec")
+        VecStream.seedIndex(Seq((0L, v(0, 1f))).toDF("vec_id", "embedding"), indexDir)
+        VecStream.admitBatch(Seq((9001L, v(0, 0.95f)), (9002L, v(1, 1f)))
+          .toDF("vec_id", "embedding"), indexDir, outDir, 0L)
+      },
+      "MediaStream.admitBatch" -> { () =>
+        val (indexDir, outDir) = dirs("cache-media")
+        MediaStream.seedIndex(media(1L -> bmp(10)), indexDir)
+        MediaStream.admitBatch(media(11L -> bmp(10), 12L -> bmp(30)), indexDir, outDir, 0L)
+      })
+    cases.foreach { case (what, run) => assertNoCacheLeft(what)(run()) }
+  }
+
+  test("connectedComponentsWithRounds releases its cached edges when a round throws") {
+    import org.apache.spark.sql.functions._
+    // the symmetric-edge relation is persisted before the first round;
+    // the planted row fails that round's job
+    val edges = spark.range(1, 8).select(col("id").as("a"),
+      when(col("id") === 5L, raise_error(lit("planted edge failure")))
+        .otherwise(col("id") + 1L).as("b"))
+    assertNoCacheLeft("failed CC") {
+      intercept[Exception](graft.ops.DedupOps.connectedComponentsWithRounds(edges))
+    }
   }
 }

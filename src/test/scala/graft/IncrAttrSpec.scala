@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{CacheEntries, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -162,13 +162,12 @@ class IncrAttrSpec extends AnyFunSuite {
     IncrAttrTable.appendBatch(spark, root,
       df(Seq(doc(1L, baseText("a")), doc(2L, baseText("b")))))
     val batch = df(Seq(doc(10L, baseText("c")), doc(11L, baseText("d"))))
-    def broadcasts(probe: Boolean): Int = {
-      val (attrs, _, _, _, done) =
-        IncrAttrTable.batchPlans(spark, root, batch, broadcastProbe = probe)
-      try "BroadcastHashJoin".r.findAllIn(
+    def broadcasts(probe: Boolean): Int = Memo.scoped { sc =>
+      val (attrs, _, _, _) =
+        IncrAttrTable.batchPlans(sc, spark, root, batch, broadcastProbe = probe)
+      "BroadcastHashJoin".r.findAllIn(
         attrs.queryExecution.explainString(
           org.apache.spark.sql.execution.SimpleMode)).length
-      finally done()
     }
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -177,6 +176,31 @@ class IncrAttrSpec extends AnyFunSuite {
       assert(broadcasts(probe = false) == 0,
         "corpus-sized build still broadcasts — the escape hatch is dead")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("a batch that fails in the dup probe leaves no cache entry behind") {
+    // batchPlans persists the batch's shingle and band relations before
+    // the dup probe's first bucket collect; the planted row fails that
+    // job. The entries are registered even though nothing materialized
+    // them, so the check goes through the CacheManager.
+    val root = freshRoot()
+    IncrAttrTable.appendBatch(spark, root,
+      df(Seq(doc(1L, baseText("a")), doc(2L, baseText("b")))))
+    // read back from parquet: over a local relation the optimizer would
+    // evaluate the planted projection while planning the first action
+    val badDir = s"${freshRoot()}/bad"
+    df(Seq(doc(10L, baseText("c")), doc(11L, baseText("d")))).write.parquet(badDir)
+    val bad = spark.read.parquet(badDir)
+      .withColumn("text", when(col("doc_id") === 11L,
+        raise_error(lit("planted text failure"))).otherwise(col("text")))
+    val before = CacheEntries.count(spark)
+    val ex = intercept[Exception](IncrAttrTable.appendBatch(spark, root, bad))
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("planted text failure")), ex)
+    assert(ex.getStackTrace.exists(_.getMethodName.contains("dupProbe")),
+      "the planted failure surfaced outside the dup probe")
+    assert(CacheEntries.count(spark) == before,
+      s"${CacheEntries.count(spark) - before} cache entries left by the failed batch")
   }
 
   test("dup probe reads ONLY the batch's bucket dirs of the resident index (file-exact)") {

@@ -616,15 +616,9 @@ class PlanSpec extends AnyFunSuite {
       val out = Queries.byName("q139_srp_multi_lsh").fn(spark, sf)
       assert(out.columns.toSeq == Seq("vec_a", "vec_b", "cos"))
       out.collect()
-      // and the explicit opt-out skips the escalation tier entirely
-      spark.conf.unset(graft.queries.VectorQs.SrpMaxProbeRowsKey)
-      spark.conf.set(graft.queries.VectorQs.SrpEscalateKey, "false")
-      assert(!plan().contains("vec_srp_bits"),
-        "escalateMultiprobe=false still builds an SRP band relation")
     } finally {
       spark.conf.unset(graft.queries.VectorQs.SrpMaxCandsKey)
       spark.conf.unset(graft.queries.VectorQs.SrpMaxProbeRowsKey)
-      spark.conf.unset(graft.queries.VectorQs.SrpEscalateKey)
     }
   }
 
