@@ -18,9 +18,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, 
   * the masks whose flipped bits have the SMALLEST total margin — rank
   * all weight-≤2 masks by Σ|margin| of their flipped bits (ascending,
   * ties by mask value for determinism) and keep the first T. T=137 at
-  * w=16 degenerates to the full flip-2 ball; T=16 keeps ~1/9 of the
-  * expansion stream while retaining the high-probability probes, which
-  * is the whole cost of the escalated multiprobe form (§2.0.2).
+  * w=16 degenerates to the full flip-2 ball; T=16 keeps ~1/9 of it
+  * while retaining the high-probability probes.
+  *
+  * Oracle-graded as an expression: `q148_qd_probe_ranks` ranks band 0 of
+  * every vector at T=8 against a DuckDB mirror of the same margins. No
+  * candidate generator consumes it; the multiprobe join form it was
+  * written for, and its measurements, are in SURVEY §2.0.2.
   *
   * Returns `array<array<long>>`: outer index = band within this plane
   * matrix (numPlanes/bitsPerBand entries), inner = the ordered probe
@@ -30,11 +34,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, 
   * Eval-based (CodegenFallback), deliberately: unlike [[VecSrpBits]]'s
   * primitive-long result, the output here IS an allocation (nested
   * ArrayData), so codegen could not avoid the dominant cost; the per-row
-  * arithmetic (64 dots = the same 4096 multiplies vec_srp_bits runs,
-  * plus ~550 two-term sums) shares the row with vec_srp_bits in the same
-  * projection. Dot semantics are identical to [[VecDot]] (sequential
-  * fold, float widened to double), so margins are consistent with the
-  * sign bits bit-for-bit.
+  * arithmetic is 64 dots (the same 4096 multiplies vec_srp_bits runs)
+  * plus ~550 two-term sums. Dot semantics are identical to [[VecDot]]
+  * (sequential fold, float widened to double), so margins are consistent
+  * with the sign bits bit-for-bit.
   *
   * Arguments: (vec array<float>, planes array<array<float>> FOLDABLE,
   * bitsPerBand int FOLDABLE, maxProbes int FOLDABLE). Null vec → null.

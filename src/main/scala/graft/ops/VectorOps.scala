@@ -401,42 +401,4 @@ object VectorOps {
       .select(col(idCol), col("b.table_idx").as("table_idx"),
         col("b.bits").as("bits"))
   }
-
-  /** [[srpBandsMulti]] plus a per-band QUERY-DIRECTED probe sequence
-    * ([[graft.expressions.VecSrpProbeMasks]]): each (id, table_idx, bits)
-    * row carries the `maxProbes` most-probable flip masks from its band's
-    * weight-≤2 neighborhood, ranked by the vector's own hyperplane
-    * margins. Both expressions run in ONE projection over one corpus
-    * scan; the 64 per-matrix dots are computed twice (once for the sign
-    * pack, once for the margins) — a deliberate trade: a fused
-    * bits+masks expression would halve per-row arithmetic that is <2%
-    * of the escalated join's wall (the expansion stream dominates,
-    * §2.0.2), at the cost of a struct-returning expression neither
-    * consumer wants whole.
-    */
-  def srpBandsMultiProbed(emb: DataFrame, idCol: String, vecCol: String,
-      planesL: Seq[Seq[Seq[Float]]], bandBits: Int, maxProbes: Int): DataFrame = {
-    require(bandBits > 0 && bandBits <= 32 && 64 % bandBits == 0,
-      s"bandBits must divide 64 and be <= 32, got $bandBits")
-    require(planesL.nonEmpty && planesL.forall(_.size == 64),
-      "each table set needs exactly 64 planes")
-    val perMatrix = 64 / bandBits
-    val mask = (1L << bandBits) - 1
-    val cols = planesL.zipWithIndex.flatMap { case (pl, l) =>
-      Seq(
-        call_function("vec_srp_bits", col(vecCol), typedlit(pl), lit(bandBits))
-          .as(s"__pk$l"),
-        call_function("vec_srp_probe_masks", col(vecCol), typedlit(pl),
-          lit(bandBits), lit(maxProbes)).as(s"__pm$l"))
-    }
-    emb.select((col(idCol) +: cols): _*)
-      .select(col(idCol), explode(array(planesL.indices.flatMap(l =>
-        (0 until perMatrix).map(t =>
-          struct(lit(l * perMatrix + t).as("table_idx"),
-            shiftrightunsigned(col(s"__pk$l"), t * bandBits)
-              .bitwiseAND(lit(mask)).as("bits"),
-            element_at(col(s"__pm$l"), t + 1).as("probes")))): _*)).as("b"))
-      .select(col(idCol), col("b.table_idx").as("table_idx"),
-        col("b.bits").as("bits"), col("b.probes").as("probes"))
-  }
 }

@@ -160,53 +160,9 @@ object IncrAttrTable {
   /** Root of `rel`'s live generation — every read and every per-batch
     * write resolves through this (never the bare `root/rel` tree, which
     * may briefly hold a half-written next generation or a
-    * not-yet-GC'd previous one). Artifacts written BEFORE the
-    * generational layout (flat `root/rel/batch_id=N` dirs, no `_gen`
-    * pointer) are migrated in place on first touch — without this, a
-    * long-lived ingest dir upgraded across the layout change would
-    * silently hide every committed row (reads resolve to a gen=0 dir
-    * that does not exist) and the LM-seed check would re-seed the
-    * frozen LM against a different basis. */
-  private[graft] def liveRelDir(s: SparkSession, root: String, rel: String): String = {
-    val g = relGen(s, root, rel)
-    if (g == 0L) migrateLegacyFlat(s, s"$root/$rel")
-    s"$root/$rel/gen=$g"
-  }
-
-  /** One-time legacy-layout migration: move flat `batch_id=N` dirs under
-    * `gen=0`. Idempotent (a second pass finds none), driver-side renames
-    * only, and memoized per (session, rel dir) so the steady-state
-    * gen-0 path (every fresh artifact before its first compaction) pays
-    * ONE listing per session, not one per read. A failed rename THROWS
-    * before the memo is written: `fs.rename` reports failure as a
-    * `false` return (dest exists, permissions, cross-FS move), and
-    * swallowing it would leave those batch dirs invisible to gen-0
-    * readers — committed rows silently missing — with the per-session
-    * memo suppressing any retry. Loud-and-retryable beats
-    * quietly-partial. */
-  private val legacyChecked =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Boolean]()
-  private def migrateLegacyFlat(s: SparkSession, dir: String): Unit =
-    legacyChecked.computeIfAbsent((s, dir), { _ =>
-      val hc = hconf(s)
-      val flat = Fs.list(dir, hc).filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("batch_id="))
-      if (flat.nonEmpty) {
-        val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hc)
-        val gen0 = new org.apache.hadoop.fs.Path(s"$dir/gen=0")
-        fs.mkdirs(gen0)
-        flat.foreach { st =>
-          val dest = new org.apache.hadoop.fs.Path(gen0, st.getPath.getName)
-          if (!fs.rename(st.getPath, dest))
-            throw new java.io.IOException(
-              s"legacy migration: rename ${st.getPath} -> $dest failed " +
-                "(dest exists / permissions / cross-FS?) — aborting so the " +
-                "next read retries instead of hiding committed batches")
-        }
-        log.warn(s"migrated ${flat.size} pre-generational batch dirs under $dir/gen=0")
-      }
-      java.lang.Boolean.TRUE
-    })
+    * not-yet-GC'd previous one). */
+  private[graft] def liveRelDir(s: SparkSession, root: String, rel: String): String =
+    s"$root/$rel/gen=${relGen(s, root, rel)}"
 
   // the CANONICAL bucket conventions ([[IndexLayout.bucketExpr]]) — one
   // layout, two ingestion modes, and the re-bucketing compaction must

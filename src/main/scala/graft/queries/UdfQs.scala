@@ -221,14 +221,16 @@ object UdfQs {
       // previously completed slowly — `spark.graft.sketch.maxTypes`
       // lets an operator opt back into the slow regime explicitly
       // instead of hitting an untunable require.
-      val MaxSketchTypes = s.conf.getOption("spark.graft.sketch.maxTypes")
+      val MaxTypesKey = "spark.graft.sketch.maxTypes"
+      val MaxSketchTypes = s.conf.getOption(MaxTypesKey)
         .map(_.toInt).getOrElse(1000)
       val sketches = dst.groupBy("event_type")
         .agg(kmv(col("user_id").cast("string")).as("sk"))
         .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
       require(sketches.size <= MaxSketchTypes,
-        s"q87 driver-side pairwise overlap is bounded at $MaxSketchTypes event " +
-          s"types (got ${sketches.size}) — distribute the pair join past this")
+        s"q87 driver-side pairwise overlap is bounded at $MaxTypesKey=" +
+          s"$MaxSketchTypes event types (got ${sketches.size}) — raise it, or " +
+          "distribute the pair join past this")
       val estimates = sketches.keys.toSeq.sorted.combinations(2).map {
         case Seq(ta, tb) =>
           val (i, u) = graft.ops.SketchOps.KMinValues.overlap(

@@ -234,8 +234,8 @@ object VectorQs {
   /** Plane matrix for table set ℓ of the MULTI-table construction (seed
     * 7 + ℓ, so set 0 IS q43's matrix — q139's tables are a superset of
     * q43's structure at any width). Cached: the 64×64 gaussian draw is
-    * deterministic but not free, and the queries, their oracles and the
-    * multiprobe tier request the same matrices repeatedly. */
+    * deterministic but not free, and the queries and their oracles
+    * request the same matrices repeatedly. */
   private val srpPlanesCache =
     new java.util.concurrent.ConcurrentHashMap[Int, Seq[Seq[Float]]]()
   private[graft] def srpPlanesL(l: Int): Seq[Seq[Float]] =
@@ -380,158 +380,8 @@ object VectorQs {
     * the cell-bounded path (q78/q42's machinery). */
   private[graft] val SrpMaxCandsKey = "spark.graft.srp.maxCandidates"
 
-  /** Conf bound for the router's MULTIPROBE escalation tier: the
-    * expansion-row budget (vectors × tables × probes) the 16-bit
-    * query-directed form may cost before the router falls through to
-    * the cell-bounded path. The expansion stream is the escalated
-    * form's dominant cost (its candidate mass is tiny — 2^16-value
-    * buckets), measured ~0.8 s per ~1 M expanded rows at the 50 k/200 k
-    * tiers (§2.0.2 multiprobe tables), so the 2×10⁹ default bounds the
-    * escalated job at roughly half an hour — a maintenance-window cost,
-    * past which (≈490 k+ vectors at the 4×-table/T=32 budget — the
-    * same rows-per-vector as the old 2×/T=64 pairing)
-    * the cell path is the only family member left. `0` skips the tier
-    * entirely. */
-  private[graft] val SrpMaxProbeRowsKey = "spark.graft.srp.maxProbeRows"
-
-  /** Probes per band row for the escalation tier's QUERY-DIRECTED
-    * multiprobe (margin-ranked prefix of the weight-≤2 neighborhood;
-    * ≥ the 137-mask ball = the full flip-2 form). Default is
-    * HEAP-KEYED with the table multiplier (see the router): 32 at four
-    * times the query's table budget on a ≥40 GiB heap — the measured
-    * recall-per-row optimum (round 18, §2.0.2: at the 200 k cliff and
-    * the IDENTICAL 819 M expansion-row budget, 128 tables/T=32 reads
-    * recall 0.987 where 64 tables/T=64 reads 0.948 — table diversity
-    * beats probe depth at equal rows, the Indyk–Motwani amplifier
-    * prediction measured both ways at two tiers) — and 64 at twice the
-    * budget below it, the form measured to SURVIVE a default 8 GiB
-    * heap. */
-  private val SrpQdProbesKey = "spark.graft.srp.qdProbes"
-
-  /** Conf override for the escalation tier's TABLE MULTIPLIER — the
-    * heap-keyed 4×-vs-2× choice ([[qdForm]]) becomes the DEFAULT only.
-    * Together with [[SrpQdProbesKey]] this pins the FULL escalated form
-    * explicitly, so a routed query's candidate set and recall are
-    * reproducible by configuration alone across machines with different
-    * heaps (round-18 ADVICE: nothing could pin the multiplier). */
-  private val SrpQdTableMultKey = "spark.graft.srp.qdTableMultiplier"
-
-  /** Conf override (bytes) for the scratch-space budget the escalation's
-    * DISK gate prices against — see [[qdScratchBudgetBytes]]. */
-  private[graft] val SrpQdScratchKey = "spark.graft.srp.qdScratchBytes"
-
-  /** Measured shuffle-scratch cost per expansion row for the escalated
-    * qd form, keyed on the SHUFFLE COMPRESSION CODEC (round-19 ADVICE:
-    * the single lz4 constant was conservative by ~1.6× under zstd and
-    * refused escalations that fit). Two measured points:
-    *  - lz4 (Spark's default `spark.io.compression.codec`): round-18
-    *    §2.0.2 calibration — the 128-table/T=64 rung at 200 k vectors
-    *    = 1.638 G expansion rows died at ENOSPC with ~77 GB written
-    *    → ~47 B/row, rounded up to 48;
-    *  - zstd: round-19 per-task instrumentation (§2.0.2) measured
-    *    28.6–29.0 B/row at the 50 k 32/128-table rungs → 32, still
-    *    rounded up.
-    * Unknown codecs take the larger lz4 constant — over-refusing is
-    * the safe direction for an ENOSPC gate. The dominant term is the
-    * expansion join's shuffle spill — slim (vec_a, table_idx, bits)
-    * rows, but written once per sort pass on both the expansion and
-    * distinct exchanges. */
-  private[graft] def qdScratchBytesPerRow(codec: String): Long =
-    // contains, not equals: spark.io.compression.codec legally holds the
-    // short name OR the fully-qualified class name
-    // (org.apache.spark.io.ZstdCompressionCodec) — an exact match would
-    // silently price a zstd cluster at the lz4 constant
-    if (codec.toLowerCase.contains("zstd")) 32L else 48L
-
-  /** The JVM heap the escalated form's hash builds will actually get —
-    * the EXECUTOR's, because the OOM this key guards against is
-    * executor-side (134–165 MB dedicated hash-map pages × tasks in the
-    * 128-table build, captured round 18). In local mode the driver JVM
-    * IS the executor, so `Runtime.maxMemory` is exact — every measured
-    * configuration. On a real cluster the planner runs on the driver
-    * and its own heap is irrelevant: the key reads
-    * `spark.executor.memory` (the executor JVM's -Xmx; Spark's default
-    * 1g when unset). Round-19 fix — the round-18 form read
-    * `Runtime.maxMemory` unconditionally, so a 64 g-driver/8 g-executor
-    * deployment would have shipped the measured-OOM form and an
-    * 8 g-driver/64 g-executor one silently forfeited 0.04 recall. */
-  private[graft] def qdEffectiveHeapBytes(master: String,
-      executorMemory: Option[String], runtimeMax: Long): Long =
-    // `local-cluster[n,c,mem]` is NOT local for this purpose: its
-    // executors are separate JVMs sized independently of the driver —
-    // exactly the split this key exists to respect
-    if (master.startsWith("local") && !master.startsWith("local-cluster"))
-      runtimeMax
-    else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      executorMemory.getOrElse("1g"))
-
-  /** The escalated form — (table multiplier, probes per band row) — for
-    * an effective executor heap, with conf overrides applied. Pure so
-    * VecProbeSpec pins BOTH cluster regimes without a second JVM: the
-    * (4×, T=32) pairing is the measured recall-per-row optimum (0.987
-    * at the 200 k cliff) but its 128-table hash builds measured-OOM an
-    * 8 GiB heap, while (2×, T=64) is measured-survivable there (0.948);
-    * the boundary sits above the failing point with margin. */
-  private[graft] def qdForm(effectiveHeap: Long, confMult: Option[Int],
-      confProbes: Option[Int]): (Int, Int) = {
-    // loud on nonsense overrides: a zero/negative multiplier or T would
-    // silently produce an empty probe stream (recall 0, no error)
-    confMult.foreach(m => require(m > 0,
-      s"$SrpQdTableMultKey must be positive, got $m"))
-    confProbes.foreach(t => require(t > 0,
-      s"$SrpQdProbesKey must be positive, got $t"))
-    val bigHeap = effectiveHeap >= (40L << 30)
-    (confMult.getOrElse(if (bigHeap) 4 else 2),
-      confProbes.getOrElse(if (bigHeap) 32 else 64))
-  }
-
-  /** The scratch budget the escalated tier's expansion shuffle must fit
-    * (the HEAP lesson applied to disk — round-18 measured the dense
-    * 128-table/T=64 rung dying at ENOSPC, ~77 GB on a 78 GB disk, with
-    * nothing gating it: a user raising [[SrpQdProbesKey]] re-created the
-    * death). In local mode the budget is the measured usable space of
-    * the shuffle dirs (`spark.local.dir`, default java.io.tmpdir) — the
-    * JVM writing the spill is THIS one. On a real cluster executor
-    * disks parallelize the scratch (exactly the resource the single-node
-    * ceiling identified), and the driver's own disk says nothing about
-    * them — so the default is unbounded and [[SrpQdScratchKey]] is the
-    * explicit per-deployment bound. */
-  private def qdScratchBudgetBytes(s: SparkSession): Long =
-    s.conf.getOption(SrpQdScratchKey).map(_.toLong).getOrElse {
-      if (!s.conf.get("spark.master", "local").startsWith("local"))
-        Long.MaxValue
-      else {
-        val dirs = s.conf.getOption("spark.local.dir")
-          .orElse(sys.env.get("SPARK_LOCAL_DIRS"))
-          .getOrElse(System.getProperty("java.io.tmpdir"))
-          .split(",").map(_.trim).filter(_.nonEmpty).distinct
-        usableSpaceByStore(dirs)
-      }
-    }
-
-  /** Sum of usable space across `dirs`, counted ONCE per underlying
-    * FILESYSTEM (round-19 ADVICE: two `spark.local.dir` entries on the
-    * same volume double-counted its free space, inflating the budget
-    * and letting the disk gate re-admit the ENOSPC form it exists to
-    * block — `getUsableSpace` reports the STORE's free bytes, not the
-    * directory's share). A dir that does not exist yet (Spark creates
-    * local dirs lazily) resolves through its deepest existing ancestor;
-    * a store that cannot be resolved at all contributes 0 — under-
-    * counting is the safe direction for an ENOSPC gate. */
-  private[graft] def usableSpaceByStore(dirs: Seq[String]): Long =
-    dirs.flatMap { p =>
-      var f = new java.io.File(p).getAbsoluteFile
-      while (f != null && !f.exists()) f = f.getParentFile
-      if (f == null) None
-      else
-        // FileStore.toString is "mountpoint (device)" — distinct per
-        // mount even when devices share a name (multiple tmpfs mounts)
-        try Some(java.nio.file.Files.getFileStore(f.toPath).toString ->
-          f.getUsableSpace)
-        catch { case scala.util.control.NonFatal(_) => None }
-    }.toMap.values.sum
-
-  /** Non-blocking memo fill for the per-corpus verdict maps below:
+  /** Non-blocking memo fill for the per-corpus estimate maps
+    * ([[vecBroadcastEst]], [[srpCandEst]]):
     * `computeIfAbsent` holds the hash bin's lock for the mapping
     * function's whole duration, and these fills run FULL SPARK JOBS — a
     * concurrent caller hashing to the same bin would stall behind the
@@ -553,21 +403,6 @@ object VectorQs {
 
   private val srpCandEst =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
-  /** Memoized "no bucket exceeds the cap" verdicts for the qd path's cap
-    * elision — per (session, corpus, band tag), same immutable-corpus
-    * convention as [[srpCandEst]]/[[embCount]]. */
-  private val srpCapNoop =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Boolean]()
-  /** Memoized corpus cardinality for the escalation gate's probe-row
-    * pricing — without it every escalated call pays a full embeddings
-    * count scan, in exactly the large-corpus regime the tier exists
-    * for. Per-(session, corpus) bounded, like [[srpCandEst]] — and it
-    * SHARES srpCandEst's immutable-corpus-per-dir convention: a corpus
-    * regenerated in place under the same dir within one session would
-    * price the gate on the stale count (and serve stale candidate
-    * estimates anyway). Writers that regenerate use a fresh dir. */
-  private val embCount =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
   private val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
 
   /** q139's body with width and table count as parameters — the graded
@@ -587,7 +422,10 @@ object VectorQs {
     * cell-bounded path owns that regime; this puts the conclusion in
     * the operator. The graded 1×/bench densities sit orders of
     * magnitude under the default bound, so oracle-graded plans are
-    * untouched (PlanSpec pins both sides). */
+    * untouched (PlanSpec pins both sides). There is no middle tier: the
+    * best in-family escape SURVEY §2.0.2 measured (16-bit query-directed
+    * multiprobe) costs 1,217 s for recall 0.987 at 200 k vectors on a
+    * ≥40 GiB heap, a maintenance-window trade no graded query reaches. */
   private def srpMultiQuery(s: SparkSession, d: String,
       bandBits: Int, numMatrices: Int): DataFrame = {
     val planesL = (0 until numMatrices).map(srpPlanesL)
@@ -608,112 +446,10 @@ object VectorQs {
       Long.box(if (row.isNullAt(0)) 0L else row.getLong(0))
     }
     if (est > bound) {
-      // ESCALATION TIER (round 17, measured at §2.0.2's multiprobe
-      // table): before conceding the density to the recall-poor cell
-      // fallback, try the width+multiprobe point — 16-bit codes at the
-      // SAME table budget (w 8→16 halves tables per matrix, so 2L
-      // matrices keep tables = L·64/8 constant) with flip-2 Hamming-ball
-      // probes buying the recall exact 16-bit matching loses. At the
-      // 200 k-vector tier where the 8-bit join reads 595 s / recall
-      // 0.444 (cap-truncated), this form reads 1 812 s / recall 0.808;
-      // the cell path reads ~1 s / 0.062. The escalated form's cost is
-      // the probe-expansion stream, priced below against its own bound.
-      // The escalated form (round 18 measurements, §2.0.2's default-heap
-      // table): 16-bit codes at FOUR times the query's table budget with
-      // T=32 margin-ranked probes per band, pairs normalized
-      // least/greatest (either side's probes may discover the pair). The
-      // (4×, 32) pairing is the measured recall-per-row optimum: at the
-      // 200k cliff and the IDENTICAL 819 M expansion-row budget it reads
-      // recall 0.987 where (2×, 64) reads 0.948 — table diversity beats
-      // probe depth at equal rows, measured both ways at two tiers
-      // (§2.0.2). The round-17 form needed a 48 g driver; the round-18
-      // restructure (slim-only caching, cap elision) runs the tier at
-      // the DEFAULT 8 GiB heap, spill-bound — and what extra heap buys
-      // under this form is RECALL, not wall (measured: 2×/T=64 reads
-      // 1 384 s at 8 g vs 1 151 s at 48 g — the shuffle pipeline is
-      // disk-bound either way; the heap-keyed 4×/T=32 upgrade spends
-      // the same rows for 0.987). The full flip-2 ball at 1× tables
-      // reads 1 812 s / 0.808 (48 g) for MORE expansion rows
-      // (vectors·tables·137 vs vectors·4tables·32), so the qd form
-      // dominates it on probe rows and recall simultaneously.
-      // spark.graft.srp.qdProbes tunes T (>= the 137-mask ball = the
-      // full flip-2 form).
-      val tables = numMatrices * 64 / bandBits
-      val probeBudget = s.conf.getOption(SrpMaxProbeRowsKey).map(_.toLong)
-        .getOrElse(2000000000L)
-      // FORM SELECTION IS HEAP-KEYED (round 18; round 19 made the key
-      // CLUSTER-CORRECT and conf-pinnable): the (4×-table, T=32) pairing
-      // wins on recall-per-row at the identical expansion budget (0.987
-      // vs 0.948 at the 200 k cliff), but its 128-table hash builds were
-      // MEASURED to OOM a default 8 GiB heap (134–165 MB dedicated
-      // hash-map pages × 32 tasks), while the (2×, T=64) form is
-      // measured-survivable there (1 384 s / 0.948 at 8 g) and the
-      // (4×, 32) form is measured-good at 48 g (1 217 s / 0.987).
-      // Shipping the optimum unconditionally would recreate the
-      // round-17 default-heap OOM this router exists to prevent, so the
-      // form keys on the heap the EXECUTORS actually have
-      // ([[qdEffectiveHeapBytes]] — the hash builds are executor-side;
-      // `spark.executor.memory` when the master is not local, this JVM
-      // otherwise), boundary above the measured-failing point with
-      // margin. spark.graft.srp.qdTableMultiplier / qdProbes pin the
-      // full form explicitly (reproducibility across heaps). probeRows
-      // is identical for both default pairings, so the budget gate is
-      // form-blind.
-      val effHeap = qdEffectiveHeapBytes(s.conf.get("spark.master", "local"),
-        s.conf.getOption("spark.executor.memory"),
-        Runtime.getRuntime.maxMemory())
-      val (qdMult, qdProbes) = qdForm(effHeap,
-        s.conf.getOption(SrpQdTableMultKey).map(_.toInt),
-        s.conf.getOption(SrpQdProbesKey).map(_.toInt))
-      val escTables = qdMult * tables
-      val perRow = math.min(qdProbes, srpFlipMasks(16, 2).size)
-      val probeRows = memoFill(embCount, (s, d))(
-        Long.box(Tables.embeddings(s, d).count())) * escTables * perRow
-      // DISK GATE (round 19): the expansion shuffle's spill must also
-      // FIT — the 128-table/T=64 rung died twice at ENOSPC (~77 GB
-      // scratch on a 78 GB disk, §2.0.2) and nothing guarded it; a user
-      // raising qdProbes re-created the death. Divide (not multiply) so
-      // the product can't overflow. Budget semantics in
-      // [[qdScratchBudgetBytes]].
-      val scratchBudget = qdScratchBudgetBytes(s)
-      val shuffleCodec = s.conf.get("spark.io.compression.codec", "lz4")
-      val scratchPerRow = qdScratchBytesPerRow(shuffleCodec)
-      val fitsScratch = probeRows <= scratchBudget / scratchPerRow
-      if (probeRows <= probeBudget && fitsScratch) {
-        log.warn(s"SRP density router: estimated candidate mass $est exceeds " +
-          s"$SrpMaxCandsKey=$bound for corpus $d — escalating to the " +
-          s"16-bit query-directed multiprobe form ($escTables tables = " +
-          s"${qdMult}x the query's budget, T=$perRow margin-ranked probes; " +
-          s"$probeRows expansion rows <= $SrpMaxProbeRowsKey=$probeBudget, " +
-          s"~${probeRows * scratchPerRow >> 30} GiB scratch at " +
-          s"$scratchPerRow B/row ($shuffleCodec) <= " +
-          s"budget ${scratchBudget >> 30} GiB). Measured trades at 200k " +
-          "vectors: (4x, T=32) = recall 0.987 at 1217 s on a >=40g heap; " +
-          "(2x, T=64) = recall 0.948 at 1384 s at the default 8g, " +
-          "spill-bound — vs the 8-bit join's 595 s / 0.444 (cap-" +
-          "truncated) and the full flip-2 ball's 1812 s / 0.808. Set " +
-          s"$SrpMaxProbeRowsKey=0 to route straight to the cell-bounded " +
-          s"path; $SrpQdTableMultKey/$SrpQdProbesKey pin the form.")
-        srpMultiProbePairs(s, d, bandBits = 16,
-          numMatrices = math.max(1, escTables * 16 / 64), flipRadius = 2,
-          maxProbes = perRow)
-      } else {
-        log.warn(s"SRP density router: estimated candidate mass $est exceeds " +
-          s"$SrpMaxCandsKey=$bound for corpus $d" +
-          (if (probeRows > probeBudget)
-            s" and the multiprobe escalation's $probeRows expansion rows " +
-              s"exceed $SrpMaxProbeRowsKey=$probeBudget" else "") +
-          (if (!fitsScratch)
-            s" and the escalation's estimated shuffle scratch " +
-              s"(~${probeRows * scratchPerRow >> 30} GiB at " +
-              s"$scratchPerRow B/row, codec $shuffleCodec) exceeds the " +
-              s"${scratchBudget >> 30} GiB budget ($SrpQdScratchKey; the " +
-              "measured ENOSPC class this gate exists for)" else "") +
-          " — the SRP family is past its measured feasibility point at this " +
-          "density. Routing to the cell-bounded semantic path; raise the " +
-          "bounds to force an SRP form.")
-        cellBoundedPairs(s, d, tau = 0.45)
-      }
+      log.warn(s"SRP density router: estimated candidate mass $est exceeds " +
+        s"$SrpMaxCandsKey=$bound for corpus $d; routing to the cell-bounded " +
+        "semantic path (raise the bound to force the SRP band join).")
+      cellBoundedPairs(s, d, tau = 0.45)
     } else {
       def side(n: String): DataFrame =
         capped.select(col("vec_id").as(s"vec_$n"), col("table_idx"), col("bits"))
@@ -726,8 +462,7 @@ object VectorQs {
 
   /** The SRP family's shared exact-cosine verify over a candidate-pair
     * relation: broadcast-guarded embedding joins (`maybeBVec`), cos ≥
-    * 0.45, canonical output shape. One definition so the exact-match and
-    * multiprobe candidate generators cannot diverge on the verify. */
+    * 0.45, canonical output shape. */
   private def srpCosVerify(s: SparkSession, d: String,
       cands: DataFrame): DataFrame = {
     val ea = maybeBVec(s, d, Tables.embeddings(s, d)
@@ -739,133 +474,6 @@ object VectorQs {
       .filter(col("cos") >= 0.45)
       .select("vec_a", "vec_b", "cos")
       .orderBy("vec_a", "vec_b")
-  }
-
-  /** All XOR masks of Hamming weight ≤ `radius` over `bits`-bit codes —
-    * the multiprobe neighborhood (Lv et al. 2007's multi-probe LSH,
-    * specialized to sign-random-projection bands: a near pair's codes
-    * differ in FEW bits, so probing the Hamming ball recovers the pairs
-    * a single exact-bucket lookup loses to one flipped bit). */
-  private def srpFlipMasks(bits: Int, radius: Int): Seq[Long] = {
-    require(radius >= 1 && radius <= 2, s"unsupported flip radius $radius")
-    val one = (0 until bits).map(i => 1L << i)
-    val two = if (radius < 2) Seq.empty else
-      for { i <- 0 until bits; j <- (i + 1) until bits } yield (1L << i) | (1L << j)
-    (0L +: one) ++ two
-  }
-
-  /** MULTIPROBE SRP near-dup pairs: the q139 candidate generator with the
-    * exact-bucket equality relaxed to a Hamming ball — the probe side
-    * expands each capped band row into its ≤`flipRadius`-flip code
-    * variants and joins the unexpanded side, so a pair collides in a
-    * table iff its codes there differ in at most `flipRadius` bits. Same
-    * cap, same exact verify, same output shape as [[srpMultiQuery]]'s
-    * join form.
-    *
-    * The trade this buys (SURVEY §2.0.2 measures it at the 100×-density
-    * tier): per-table collision probability rises from p^w to
-    * Σ_{k≤r} C(w,k) p^(w−k) (1−p)^k, so WIDER bands — whose tiny bucket
-    * occupancy makes the join itself cheap but whose exact-match recall
-    * on weak-cosine targets is ~zero — become usable: width prices the
-    * join, the flip radius buys the recall back. The candidate mass
-    * multiplies by at most the probe count (9 at w=8/r=1, 137 at
-    * w=16/r=2) but over buckets ~2^w sparser. */
-  private[graft] def srpMultiProbePairs(s: SparkSession, d: String,
-      bandBits: Int, numMatrices: Int, flipRadius: Int,
-      maxProbes: Int = Int.MaxValue): DataFrame = {
-    val planesL = (0 until numMatrices).map(srpPlanesL)
-    if (maxProbes < srpFlipMasks(bandBits, 2).size) {
-      // QUERY-DIRECTED tier (Lv et al. 2007 §4.2): instead of the whole
-      // Hamming ball, each band row carries only its `maxProbes` most
-      // probable flips — ranked per vector by the hyperplane margins of
-      // the flipped bits (graft.expressions.VecSrpProbeMasks), so the
-      // expansion stream (the escalated form's dominant cost) shrinks by
-      // ball/maxProbes while keeping the probes that find near pairs.
-      // The flipRadius arg is subsumed: the neighborhood is weight <= 2
-      // and maxProbes truncates it.
-      // CACHE ONLY SLIM RELATIONS (round 18 — the default-heap fix
-      // behind SURVEY §2.0.2's old 48g footnote): the round-17 form
-      // memoized the probed relation itself — corpus×tables rows each
-      // carrying a T-long probe array (~530 B/row of UnsafeArrayData) —
-      // and at the 200k/64-table tier the cache builder's columnar
-      // batches alone OOM'd an 8 GiB local[32] JVM (ColumnBuilder
-      // .ensureFreeSpace in the captured stack), at ANY storage level,
-      // because in local mode the "executor" heap IS the driver heap.
-      // Now the cached relations are the 3-long-column band/capped-band
-      // relations the full-ball branch below already memoizes (SHARED
-      // tags, so the qd and ball forms reuse one cache), the probe
-      // masks are computed in ONE fresh streaming pass that feeds the
-      // expansion join's shuffle directly (never materialized, never
-      // cached), and the cap reaches the probe side by a semi-join on
-      // the slim (vec_id, table_idx, bits) key — identical candidate
-      // semantics, heap cost flat in corpus density.
-      val tag = s"srp_multi_b${bandBits}_L$numMatrices"
-      val bands = graft.Memo.cached(s, d, tag) {
-        VectorOps.srpBandsMulti(Tables.embeddings(s, d), "vec_id",
-          "embedding", planesL, bandBits)
-      }
-      // CAP ELISION (round 18, after the 128-table disk-ceiling deaths):
-      // when NO bucket exceeds the cap — the common case at the 16-bit
-      // width, where occupancy is corpus/2^16 per table — capBuckets is
-      // the identity, so both its count+semi-join shuffle AND the
-      // probe-side cap semi-join (which must shuffle the T-long probe
-      // ARRAYS, ~550 B/row) are pure disk cost for nothing. One bounded
-      // aggregate over the memoized slim bands decides (memoized per
-      // corpus like srpCandEst); when a bucket IS overfull both sides
-      // keep the full cap discipline unchanged.
-      val capNoop: Boolean = memoFill(srpCapNoop, (s, d, tag))(
-        java.lang.Boolean.valueOf(
-          bands.groupBy("table_idx", "bits").agg(count(lit(1)).as("c"))
-            .filter(col("c") > 1000).isEmpty))
-      val capped =
-        if (capNoop) bands
-        else graft.Memo.cached(s, d, tag + "_capped") {
-          graft.ops.DedupOps.capBuckets(bands, Seq("table_idx", "bits"), 1000)
-        }
-      val probedRaw = VectorOps.srpBandsMultiProbed(Tables.embeddings(s, d),
-        "vec_id", "embedding", planesL, bandBits, maxProbes)
-      val probe = (if (capNoop) probedRaw
-        else probedRaw.join(capped, Seq("vec_id", "table_idx", "bits"),
-          "left_semi"))
-        .select(col("vec_id").as("vec_a"), col("table_idx"),
-          explode(transform(col("probes"), m => col("bits").bitwiseXOR(m)))
-            .as("bits"))
-      // normalize with least/greatest, do NOT pre-filter on vec_a <
-      // vec_b: unlike the full-ball form (uniform masks make probing
-      // symmetric, so the a<b filter loses nothing), qd probe sets are
-      // PER-VECTOR — a pair counts when EITHER side's probe prefix
-      // reaches the other's exact bucket, and keeping only the
-      // smaller-id side's discoveries threw away roughly half the
-      // matches for the identical expansion-row budget (round-18 fix;
-      // measured below in §2.0.2's qd tables).
-      val cands = probe
-        .join(capped.select(col("vec_id").as("vec_b"), col("table_idx"),
-          col("bits")), Seq("table_idx", "bits"))
-        .filter(col("vec_a") =!= col("vec_b"))
-        .select(least(col("vec_a"), col("vec_b")).as("vec_a"),
-          greatest(col("vec_a"), col("vec_b")).as("vec_b"))
-        .distinct()
-      return srpCosVerify(s, d, cands)
-    }
-    val tag = s"srp_multi_b${bandBits}_L$numMatrices"
-    val bands = graft.Memo.cached(s, d, tag) {
-      VectorOps.srpBandsMulti(Tables.embeddings(s, d), "vec_id", "embedding",
-        planesL, bandBits)
-    }
-    val capped = graft.Memo.cached(s, d, tag + "_capped") {
-      graft.ops.DedupOps.capBuckets(bands, Seq("table_idx", "bits"), 1000)
-    }
-    val masks = srpFlipMasks(bandBits, flipRadius)
-    val probe = capped.select(col("vec_id").as("vec_a"), col("table_idx"),
-        col("bits"), explode(lit(masks.toArray)).as("flip_mask"))
-      .select(col("vec_a"), col("table_idx"),
-        col("bits").bitwiseXOR(col("flip_mask")).as("bits"))
-    val cands = probe
-      .join(capped.select(col("vec_id").as("vec_b"), col("table_idx"),
-        col("bits")), Seq("table_idx", "bits"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select("vec_a", "vec_b").distinct()
-    srpCosVerify(s, d, cands)
   }
 
   /** The density router's fail-over target: within-cell exact-cosine
@@ -1587,10 +1195,10 @@ object VectorQs {
     },
     headline = true)
 
-  /** The QUERY-DIRECTED probe ranking itself, oracle-graded: for every
-    * vector, the 8 most-probable flip masks of band 0's weight-≤2
-    * neighborhood ([[graft.expressions.VecSrpProbeMasks]]) — the novel
-    * mechanism of the multiprobe escalation tier, hash-matched against a
+  /** QUERY-DIRECTED multiprobe ranking (Lv et al. 2007, §4.2), graded as
+    * an expression: for every vector, the 8 most-probable flip masks of
+    * band 0's weight-≤2 neighborhood
+    * ([[graft.expressions.VecSrpProbeMasks]]), hash-matched against a
     * DuckDB mirror that enumerates the same 137-mask neighborhood in
     * SQL, computes the same 16 hyperplane margins (|sequential-fold
     * dot|, q43's plane-literal convention), and ranks by the identical

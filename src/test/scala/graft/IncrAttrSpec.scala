@@ -44,37 +44,6 @@ class IncrAttrSpec extends AnyFunSuite {
     r
   }
 
-  test("pre-generational flat attrs dirs migrate under gen=0 on first touch") {
-    // build a real artifact, then reconstruct the LEGACY shape (flat
-    // batch_id dirs directly under root/attrs, no _gen pointer) at a
-    // fresh root — the layout every pre-generational artifact has
-    val rootA = freshRoot()
-    IncrAttrTable.appendBatch(spark, rootA,
-      df(Seq(doc(1L, baseText("mig")), doc(2L, baseText("rate")))))
-    val nA = IncrAttrTable.attrsOf(spark, rootA).count()
-    assert(nA > 0)
-    val rootB = freshRoot()
-    val srcGen = java.nio.file.Paths.get(rootA, "attrs", "gen=0")
-    val dstRel = java.nio.file.Paths.get(rootB, "attrs")
-    java.nio.file.Files.createDirectories(dstRel)
-    java.nio.file.Files.walk(srcGen).forEach { p =>
-      val rel = srcGen.relativize(p)
-      val dst = dstRel.resolve(rel.toString)
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
-      else java.nio.file.Files.copy(p, dst)
-    }
-    assert(java.nio.file.Files.list(dstRel).anyMatch(p =>
-      p.getFileName.toString.startsWith("batch_id=")), "legacy shape not built")
-    // first touch through the live resolver migrates and reads the rows
-    val nB = IncrAttrTable.attrsOf(spark, rootB).count()
-    assert(nB == nA, s"migrated artifact lost rows: $nB vs $nA")
-    assert(java.nio.file.Files.exists(dstRel.resolve("gen=0")),
-      "flat dirs were not moved under gen=0")
-    assert(!java.nio.file.Files.list(dstRel).anyMatch(p =>
-      p.getFileName.toString.startsWith("batch_id=")),
-      "flat batch dirs remain beside the migrated generation")
-  }
-
   test("frozen LM: identical later text scores the seed ppl; unseen vocabulary scores lq(V)") {
     val root = freshRoot()
     val seedTxt = "alpha beta gamma delta epsilon zeta eta theta"

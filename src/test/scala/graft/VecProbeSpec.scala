@@ -4,12 +4,9 @@ import graft.queries.VectorQs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins for the QUERY-DIRECTED multiprobe sequence
-  * ([[graft.expressions.VecSrpProbeMasks]] + the `maxProbes` tier of
-  * `VectorQs.srpMultiProbePairs`): the ranked masks match an in-Scala
-  * margin reference exactly, the T-probe candidate set nests between the
-  * exact-bucket join and the full Hamming ball, and recall on the real
-  * corpus is monotone in T.
+/** Pins the QUERY-DIRECTED multiprobe sequence
+  * ([[graft.expressions.VecSrpProbeMasks]], graded by q148): the ranked
+  * masks match an in-Scala margin reference exactly.
   */
 class VecProbeSpec extends AnyFunSuite {
   private lazy val spark = SparkSessions.spark
@@ -64,158 +61,4 @@ class VecProbeSpec extends AnyFunSuite {
   private def b4all(bands: Seq[Seq[Long]]): Unit =
     bands.foreach(_.foreach(m =>
       assert(java.lang.Long.bitCount(m) <= 2, s"mask $m outside the weight-2 neighborhood")))
-
-  test("the escalated form's heap key is CLUSTER-correct: executor memory governs off local, this JVM on local") {
-    // the OOM the key guards is EXECUTOR-side (134–165 MB hash-map pages
-    // × tasks), so on a real cluster the form must key on
-    // spark.executor.memory, never the planner's own heap — a
-    // 64g-driver/8g-executor deployment must NOT ship the measured-OOM
-    // (4x, T=32) form, and an 8g-driver/64g-executor one must not
-    // forfeit its 0.987-recall upgrade (round-18 verdict's top ask)
-    val big = 64L << 30
-    val small = 8L << 30
-    // non-local: conf governs, driver heap is irrelevant either way
-    assert(VectorQs.qdEffectiveHeapBytes("yarn", Some("8g"), big) === small)
-    assert(VectorQs.qdEffectiveHeapBytes("yarn", Some("64g"), small) === big)
-    assert(VectorQs.qdEffectiveHeapBytes("k8s://https://host", Some("48g"), small)
-      === (48L << 30))
-    // unset executor memory off-local = Spark's 1g default (never the
-    // driver's heap)
-    assert(VectorQs.qdEffectiveHeapBytes("spark://host:7077", None, big) === (1L << 30))
-    // local: the driver JVM IS the executor
-    assert(VectorQs.qdEffectiveHeapBytes("local[32]", Some("64g"), small) === small)
-    assert(VectorQs.qdEffectiveHeapBytes("local", None, big) === big)
-    // local-cluster is NOT local: its executors are separate JVMs
-    assert(VectorQs.qdEffectiveHeapBytes("local-cluster[2,1,1024]", Some("8g"), big)
-      === small)
-    // form selection at the measured 40 GiB boundary, and the conf pins
-    assert(VectorQs.qdForm(big, None, None) === ((4, 32)))
-    assert(VectorQs.qdForm(small, None, None) === ((2, 64)))
-    assert(VectorQs.qdForm((40L << 30), None, None) === ((4, 32)))
-    assert(VectorQs.qdForm((40L << 30) - 1, None, None) === ((2, 64)))
-    assert(VectorQs.qdForm(small, Some(4), Some(32)) === ((4, 32)),
-      "the conf overrides must pin the full form regardless of heap")
-    assert(VectorQs.qdForm(big, Some(2), None) === ((2, 32)))
-    // nonsense overrides fail loudly instead of silently emitting an
-    // empty probe stream (recall 0 with no error)
-    intercept[IllegalArgumentException](VectorQs.qdForm(big, Some(0), None))
-    intercept[IllegalArgumentException](VectorQs.qdForm(big, None, Some(-1)))
-  }
-
-  test("the disk-gate constant keys on the shuffle codec; scratch sums once per filesystem") {
-    // the two MEASURED points (lz4 ~47 B/row round 18, zstd 28.6–29.0
-    // round 19), and the safe default for codecs never calibrated
-    assert(VectorQs.qdScratchBytesPerRow("lz4") === 48L)
-    assert(VectorQs.qdScratchBytesPerRow("zstd") === 32L)
-    assert(VectorQs.qdScratchBytesPerRow("ZSTD") === 32L)
-    assert(VectorQs.qdScratchBytesPerRow("snappy") === 48L,
-      "uncalibrated codecs must take the conservative lz4 constant")
-    // two spark.local.dir entries on one filesystem must not double the
-    // budget (getUsableSpace reports the STORE's free bytes)
-    val tmp = java.nio.file.Files.createTempDirectory("scratch-dedup")
-    val a = java.nio.file.Files.createDirectory(tmp.resolve("a")).toString
-    val b = java.nio.file.Files.createDirectory(tmp.resolve("b")).toString
-    val one = VectorQs.usableSpaceByStore(Seq(a))
-    assert(one > 0)
-    // snapshots are taken live a moment apart, so allow the store to
-    // drift a little between calls — the failure mode under test is a
-    // ~2x DOUBLING, orders of magnitude past this tolerance
-    def close(x: Long, y: Long): Boolean = math.abs(x - y) < one / 4
-    val both = VectorQs.usableSpaceByStore(Seq(a, b))
-    assert(close(both, one),
-      s"same-filesystem dirs double-counted: $one vs $both")
-    // a dir Spark has not created yet resolves through its ancestor
-    assert(close(VectorQs.usableSpaceByStore(Seq(s"$a/not/yet/created")), one))
-    // an unresolvable path contributes 0 (under-count = safe for ENOSPC)
-    assert(VectorQs.usableSpaceByStore(Nil) === 0L)
-  }
-
-  test("the qd tier's disk gate routes to the cell fallback when the expansion spill cannot fit") {
-    // mock a tiny scratch budget: the escalation's estimated shuffle
-    // footprint (probeRows x 48 B) exceeds it, so the router must land
-    // on cellBoundedPairs — the measured-ENOSPC class (77 GB on a 78 GB
-    // disk, round 18) a raised qdProbes used to re-create unguarded
-    spark.conf.set(VectorQs.SrpMaxCandsKey, "0")
-    spark.conf.set(VectorQs.SrpQdScratchKey, "1024")
-    try {
-      val routed = Queries.byName("q139_srp_multi_lsh").fn(spark, sf)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val cell = VectorQs.cellBoundedPairs(spark, sf, tau = 0.45)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(routed == cell,
-        "a scratch budget too small for the expansion spill must route " +
-          "to the cell-bounded path, not ship the ENOSPC form")
-    } finally {
-      spark.conf.unset(VectorQs.SrpMaxCandsKey)
-      spark.conf.unset(VectorQs.SrpQdScratchKey)
-    }
-  }
-
-  test("the router's escalation tier IS the qd form: routed output == direct srpMultiProbePairs") {
-    // force escalation (candidate bound 0) and pin that the routed
-    // answer equals the directly-invoked 16-bit qd form the router's
-    // HEAP-KEYED selection picks on this JVM — (4×-table, T=32) on a
-    // ≥40 GiB heap, the measured-survivable (2×, T=64) below it — the
-    // wiring identity PlanSpec's shape pin can't see
-    val bigHeap = Runtime.getRuntime.maxMemory() >= (40L << 30)
-    val (nm, t) = if (bigHeap) (32, 32) else (16, 64)
-    val direct = VectorQs.srpMultiProbePairs(spark, sf, bandBits = W,
-        numMatrices = nm, flipRadius = 2, maxProbes = t)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    spark.conf.set(VectorQs.SrpMaxCandsKey, "0")
-    try {
-      val routed = Queries.byName("q139_srp_multi_lsh").fn(spark, sf)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(routed == direct,
-        "escalated router output diverged from the direct query-directed form")
-    } finally spark.conf.unset(VectorQs.SrpMaxCandsKey)
-  }
-
-  test("query-directed candidates nest: exact bucket ⊆ T=16 ⊆ full flip-2, recall monotone") {
-    def pairs(maxProbes: Int): Set[(Long, Long)] =
-      VectorQs.srpMultiProbePairs(spark, sf, bandBits = W, numMatrices = 4,
-          flipRadius = 2, maxProbes = maxProbes)
-        .select("vec_a", "vec_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exactBucket = pairs(1)
-    val qd16 = pairs(16)
-    val full = pairs(Int.MaxValue)
-    assert(exactBucket.subsetOf(qd16),
-      "T=16 lost pairs the exact-bucket join finds (mask 0 must always probe)")
-    assert(qd16.subsetOf(full),
-      "query-directed probes found pairs outside the full Hamming ball")
-    // on the planted corpus the directed probes buy real recall over
-    // exact 16-bit matching (the regime the escalation exists for)
-    assert(qd16.size >= exactBucket.size)
-  }
-
-  test("cap elision must NOT elide when a bucket genuinely exceeds the cap") {
-    // plant a corpus where 1100 identical vectors share every band
-    // bucket (occupancy 1100 > the 1000 cap): the round-18 elision
-    // predicate must come back false and the capped path must DROP the
-    // over-cap bucket's candidates — the identical vectors' pairs are
-    // absent while a distinct under-cap near pair still verifies. An
-    // incorrect always-elide would emit ~604 k identical-vector pairs.
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("vecprobe-cap").toString
-    val base = Array.tabulate(64)(i => math.sin(i + 1).toFloat)
-    val nearA = base.clone(); val nearB = base.map(f => (f * 1.001f))
-    val hot = Array.tabulate(64)(i => math.cos(3 * i + 2).toFloat)
-    val rows =
-      Seq(1L -> nearA.toSeq, 2L -> nearB.toSeq) ++
-        (10L until 1110L).map(id => id -> hot.toSeq)
-    rows.toDF("vec_id", "embedding")
-      .withColumn("label", lit(0L))
-      .repartition(4)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val pairs = VectorQs.srpMultiProbePairs(spark, dir, bandBits = W,
-        numMatrices = 1, flipRadius = 2, maxProbes = 4)
-      .select("vec_a", "vec_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(!pairs.exists(p => p._1 >= 10L && p._2 >= 10L),
-      s"over-cap bucket's pairs leaked through (${pairs.size} pairs) — " +
-        "the elision predicate fired on an overfull corpus")
-    assert(pairs.contains((1L, 2L)),
-      "the under-cap near pair vanished — the capped path over-dropped")
-  }
 }
