@@ -85,6 +85,30 @@ object Tables {
       // sequential disk reads it prefetched are already the OS page
       // cache's job on a single node.
       .config("spark.unsafe.sorter.spill.read.ahead.enabled", "false")
+      // Generated-code cache size (see [[CodegenCacheEntries]]). A static
+      // conf: `CodeGenerator` reads it once, at its first use in the JVM,
+      // so only the builder can set it.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+
+  /** Entries in Spark's JVM-wide generated-code cache. Spark's default of
+    * 100 is far below a session's working set, and the cache evicts LRU,
+    * so a workload that cycles through more classes than that recompiles
+    * most of them on every pass, on the driver and again inside tasks.
+    * Measured working sets (classes one pass compiles into an empty
+    * cache, 4 cores): one `curation_session` round ≈ 576, of which ≈ 238
+    * were recompiled every hot round at the default (3.1–4.7 s a round);
+    * the 103-query headline suite at sf0.01 2,066; the whole 152-query
+    * registry at sf0.01 2,382. A second registry pass compiled 2,574
+    * classes (21.2 s of Janino) at 100 and 127 at 4096 (103 with no cap:
+    * plans the first pass never ran, such as hot plans over memoized
+    * relations), so 4096 holds the whole registry with ~1.7× headroom.
+    * Metaspace after that pass: 200 MB at 100, 221 MB at 4096 and with
+    * no cap. Bounded rather than unbounded: every pass still meets
+    * classes it has never seen (a third headline pass compiled 32), and
+    * an unbounded cache would keep each one-off class (and its
+    * metaspace) for the session's whole life, where LRU lets them age
+    * out. */
+  val CodegenCacheEntries = 4096
 
   def region(s: SparkSession, d: String): DataFrame    = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = read(s, d, "nation")
@@ -182,6 +206,27 @@ object Memo {
   def invalidate(s: SparkSession, d: String, tag: String): Unit = {
     val df = m.remove((s, d, tag))
     if (df != null) df.unpersist()
+  }
+
+  /** Non-blocking fill for a per-corpus estimate map (the broadcast
+    * guards' size estimates, q139's candidate-mass estimate):
+    * `computeIfAbsent` holds the hash bin's lock for the mapping
+    * function's whole duration, and these fills run FULL SPARK JOBS — a
+    * concurrent caller hashing to the same bin would stall behind the
+    * job (and ConcurrentHashMap documents mapping functions "short and
+    * simple"). Compute OUTSIDE the map instead: at worst two concurrent
+    * callers duplicate one bounded aggregate, and `putIfAbsent` keeps
+    * the first verdict so every caller agrees. */
+  def memoFill[K, V <: AnyRef](
+      map: java.util.concurrent.ConcurrentHashMap[K, V], k: K)(
+      compute: => V): V = {
+    val hit = map.get(k)
+    if (hit != null) hit
+    else {
+      val v = compute
+      val prev = map.putIfAbsent(k, v)
+      if (prev != null) prev else v
+    }
   }
 
   /** Persist `df` only if the CacheManager has no entry for its plan yet

@@ -628,10 +628,13 @@ object IncrAttrTable {
 
     val (pairsResident, pairsBatch) =
       dupProbe(sc, s, root, nb, newSh, newBands, broadcastProbe, eff)
-    val dupIds = dupIdsOf(pairsResident.unionByName(pairsBatch))
+    // verified ONCE: the label delta's pair read (its collect or CC size
+    // probe) and the attrs write's dup ids both read this entry instead
+    // of each re-running the probe-and-verify chain
+    val pairs = sc(pairsResident.unionByName(pairsBatch).distinct())
 
-    val attrs = attrRows(s, root, docs, Some(dupIds), broadcastProbe)
-    (attrs, newSh, newBands, pairsResident.unionByName(pairsBatch).distinct())
+    val attrs = attrRows(s, root, docs, Some(dupIdsOf(pairs)), broadcastProbe)
+    (attrs, newSh, newBands, pairs)
   }
 
   /** The dup probe against the CURRENT resident state: batch bands vs

@@ -145,10 +145,10 @@ object DedupQs {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
 
   private[graft] def docBroadcastOk(s: SparkSession, d: String): Boolean = {
-    val est = docBroadcastEst.computeIfAbsent((s, d), { _ =>
+    val est = graft.Memo.memoFill(docBroadcastEst, (s, d)) {
       val r = shingled(s, d).agg(sum(size(col("shingles")))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    })
+      Long.box(if (r.isNullAt(0)) 0L else r.getLong(0))
+    }
     val bound = s.conf.getOption("spark.graft.dedup.broadcastMaxShingles")
       .map(_.toLong).getOrElse(50000000L)
     est <= bound

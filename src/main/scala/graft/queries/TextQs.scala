@@ -947,9 +947,8 @@ object TextQs {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
 
   private[graft] def lmVocabBroadcastOk(s: SparkSession, d: String): Boolean = {
-    val est = lmVocabEst.computeIfAbsent((s, d), { _ =>
-      lmGramCounts(s, d).filter(col("gram_order") === 3).count()
-    })
+    val est = graft.Memo.memoFill(lmVocabEst, (s, d))(
+      Long.box(lmGramCounts(s, d).filter(col("gram_order") === 3).count()))
     val bound = s.conf.getOption("spark.graft.lm.broadcastMaxGrams")
       .map(_.toLong).getOrElse(10000000L)
     est <= bound

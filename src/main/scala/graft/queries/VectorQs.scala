@@ -49,9 +49,7 @@ object VectorQs {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
 
   private[graft] def vecBroadcastOk(s: SparkSession, d: String): Boolean = {
-    // memoFill, not computeIfAbsent: the fill runs a Spark count (see
-    // the non-blocking-memo note at [[memoFill]])
-    val est = memoFill(vecBroadcastEst, (s, d))(
+    val est = graft.Memo.memoFill(vecBroadcastEst, (s, d))(
       Long.box(Tables.embeddings(s, d).count() * 64L))
     val bound = s.conf.getOption("spark.graft.vec.broadcastMaxFloats")
       .map(_.toLong).getOrElse(64000000L)
@@ -380,27 +378,6 @@ object VectorQs {
     * the cell-bounded path (q78/q42's machinery). */
   private[graft] val SrpMaxCandsKey = "spark.graft.srp.maxCandidates"
 
-  /** Non-blocking memo fill for the per-corpus estimate maps
-    * ([[vecBroadcastEst]], [[srpCandEst]]):
-    * `computeIfAbsent` holds the hash bin's lock for the mapping
-    * function's whole duration, and these fills run FULL SPARK JOBS — a
-    * concurrent caller hashing to the same bin would stall behind the
-    * job (and ConcurrentHashMap documents mapping functions "short and
-    * simple"). Compute OUTSIDE the map instead: at worst two concurrent
-    * callers duplicate one bounded aggregate, and `putIfAbsent` keeps
-    * the first verdict so every caller agrees. */
-  private def memoFill[K, V <: AnyRef](
-      map: java.util.concurrent.ConcurrentHashMap[K, V], k: K)(
-      compute: => V): V = {
-    val hit = map.get(k)
-    if (hit != null) hit
-    else {
-      val v = compute
-      val prev = map.putIfAbsent(k, v)
-      if (prev != null) prev else v
-    }
-  }
-
   private val srpCandEst =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
   private val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
@@ -439,7 +416,7 @@ object VectorQs {
     }
     val bound = s.conf.getOption(SrpMaxCandsKey).map(_.toLong)
       .getOrElse(100000000L)
-    val est: Long = memoFill(srpCandEst, (s, d, tag)) {
+    val est: Long = graft.Memo.memoFill(srpCandEst, (s, d, tag)) {
       val row = capped.groupBy("table_idx", "bits")
         .agg(count(lit(1)).as("c"))
         .agg(sum(expr("c * (c - 1) div 2"))).head()

@@ -1,12 +1,15 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.scheduler._
 
 /** Dev profiler (not part of the library surface): run named registry
   * queries with a stage-level listener and print, per stage, the wall
   * span, summed task time, executor CPU, shuffle bytes and task count —
-  * the guide §1/§7 decomposition loop, runnable as
+  * the guide §1/§7 decomposition loop, plus the run's codegen compile
+  * count and Janino time, runnable as
   * `runMain graft.tools.ProfileQ <sfDir> <q>...`. One warm-up run, one
   * profiled run per query (cache cleared before the warm-up, not after,
   * so memoized relations are HOT like the bench's timed region).
@@ -51,12 +54,18 @@ object ProfileQ {
       stages.clear()
       s.sparkContext.addSparkListener(listener)
       System.gc()
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ct0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       noop(graft.Queries.byName(q).fn(s, d))
       val wall = (System.nanoTime() - t0) / 1e9
+      // a warm run that still compiles is thrashing the codegen cache
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      val compileS = (CodeGenerator.compileTime - ct0) / 1e9
       Thread.sleep(300) // let listener events drain
       s.sparkContext.removeSparkListener(listener)
-      println(f"%n==== $q: wall $wall%.3f s, ${stages.size} stages ====")
+      println(f"%n==== $q: wall $wall%.3f s, ${stages.size} stages, " +
+        f"$compiles codegen compiles ($compileS%.3f s) ====")
       println(f"${"span_ms"}%8s ${"tasktime"}%9s ${"cpu_ms"}%8s ${"tasks"}%5s " +
         f"${"sRd_MB"}%8s ${"sWr_MB"}%8s ${"in_MB"}%8s  name")
       stages.sortBy(_.submitted).foreach { st =>
