@@ -239,16 +239,17 @@ object DedupOps {
     * (per-round eager localCheckpoints, the changed-count job, the
     * symmetric-edge persist) measured ~1.7 s even over 50 LITERAL
     * edges (round-21 decomposition, OPTIMIZATION_r21.md), the same +2 s
-    * constant that split [[graft.pipeline.IncrAttrTable]]'s
-    * labelDeltaShard off in round 19. 200k edges ≈ a few MB collected —
+    * constant round 19 measured on every shard append's label delta
+    * ([[graft.pipeline.IncrAttrTable]], whose labels now build through
+    * this fast path). 200k edges ≈ a few MB collected —
     * far inside the q68 bounded-driver-action budget; a corpus whose
     * pair stream exceeds it takes the distributed loop unchanged. */
   private val DriverCcMaxEdgesDefault = 200000L
   private[graft] val DriverCcMaxEdgesKey = "spark.graft.cc.maxDriverEdges"
 
   /** Production entry: the distributed pointer-jump loop, with a
-    * DRIVER union-find fast path when the edge list is small (the
-    * labelDeltaShard posture generalized — `spark.graft.cc.maxDriverEdges`,
+    * DRIVER union-find fast path when the edge list is small (q68's
+    * bounded-collect posture — `spark.graft.cc.maxDriverEdges`,
     * default 200k, 0 disables). Identical labels either way: union by
     * min root IS min-reachable-id labeling; `DedupVectorSpec` pins the
     * two paths byte-equal on chains/cliques/forests. The size probe is

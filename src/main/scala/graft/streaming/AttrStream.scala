@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** STREAMING attribute tagging — [[graft.pipeline.IncrAttrTable]]'s shard
   * loop driven by Structured Streaming instead of a batch caller. Where
@@ -13,10 +14,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * byte-identical attribute tables (IncrAttrSpec pins a 2-batch streamed
   * build against the batch-loop build).
   *
-  * The delegation is total: `foreachBatch` hands each micro-batch plus
-  * its engine batchId to [[graft.pipeline.IncrAttrTable.appendBatch]],
-  * whose writes are all idempotent per batchId (dynamic partition
-  * overwrite for attrs and index slices, atomic rename for the manifest)
+  * The delegation is total: the tier's shared driver
+  * ([[IndexLayout.startStream]]) hands each micro-batch plus its engine
+  * batchId to [[graft.pipeline.IncrAttrTable.appendBatch]], whose
+  * writes are all idempotent per batchId (leaf-directory overwrites for
+  * attrs and index slices, atomic rename for the manifest)
   * and whose resident reads filter `batch_id < batchId` — so
   * foreachBatch's at-least-once delivery composes to effectively-exactly-
   * once, the same discipline as [[DocStream.admitBatch]]. The monotone-id
@@ -33,26 +35,8 @@ object AttrStream {
 
   /** The documents-contract row shape — the fallback when the stream
     * directory holds no files yet (a cold-started ingest loop). */
-  val DocumentsSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-
-  /** Infer the stream schema from the files already present, falling
-    * back to [[DocumentsSchema]] on a COLD START (absent or empty
-    * directory). Cold start is detected by the STRUCTURED error
-    * condition (`SparkThrowable.getCondition`), never by message-text
-    * matching — error wording is not a stable API across Spark versions,
-    * and a silent wording change would revert cold starts to throwing. */
-  private[streaming] def inferOrDefault(spark: SparkSession,
-      streamDir: String): org.apache.spark.sql.types.StructType =
-    try spark.read.parquet(streamDir).schema
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if Option(e.getCondition).exists(c =>
-            c.startsWith("PATH_NOT_FOUND") ||
-              c.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
-        DocumentsSchema
-    }
+  val DocumentsSchema: StructType = StructType.fromDDL(
+    "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
 
   /** Start tagging parquet files of documents (doc_id, text, lang,
     * source, n_chars) from `streamDir` into the artifact at `root`.
@@ -66,24 +50,37 @@ object AttrStream {
     * Pass a schema explicitly when the stream's shape differs from the
     * documents contract. */
   def start(spark: SparkSession, streamDir: String, root: String,
-      maxFilesPerTrigger: Int = 1,
-      schema: org.apache.spark.sql.types.StructType = null): StreamingQuery = {
-    val eff = Option(schema).getOrElse(inferOrDefault(spark, streamDir))
-    // an absent dir is a legitimate cold start (files land after the
-    // query does) — create it so the file source lists an empty set
-    // instead of failing the start
+      maxFilesPerTrigger: Int = 1, schema: StructType = null): StreamingQuery =
+    startDocuments(spark, streamDir, root, maxFilesPerTrigger, schema)(
+      (batch, batchId) => graft.pipeline.IncrAttrTable.appendBatch(
+        spark, root, batch, batchId = batchId))
+
+  /** [[IndexLayout.startStream]] over a documents stream into the
+    * artifact at `root` (checkpoint at `root/_checkpoint`) — the cold-start
+    * handling [[start]] and [[IngestStream.start]] share. Cold start is
+    * detected by the STRUCTURED error condition
+    * (`SparkThrowable.getCondition`), never by message-text matching —
+    * error wording is not a stable API across Spark versions, and a
+    * silent wording change would revert cold starts to throwing. An
+    * absent dir is a legitimate cold start (files land after the query
+    * does), so it is created and the file source lists an empty set
+    * instead of failing the start. */
+  private[streaming] def startDocuments(spark: SparkSession, streamDir: String,
+      root: String, maxFilesPerTrigger: Int, schema: StructType)(
+      batch: (DataFrame, Long) => Unit): StreamingQuery = {
+    val eff = Option(schema).getOrElse {
+      try spark.read.parquet(streamDir).schema
+      catch {
+        case e: org.apache.spark.sql.AnalysisException
+            if Option(e.getCondition).exists(c =>
+              c.startsWith("PATH_NOT_FOUND") ||
+                c.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
+          DocumentsSchema
+      }
+    }
     val p = new org.apache.hadoop.fs.Path(streamDir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-    spark.readStream
-      .schema(eff)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(streamDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: java.lang.Long) =>
-        graft.pipeline.IncrAttrTable.appendBatch(
-          spark, root, batch, broadcastProbe = true, batchId = batchId))
-      .option("checkpointLocation", s"$root/_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    IndexLayout.startStream(spark, eff, streamDir, s"$root/_checkpoint",
+      maxFilesPerTrigger)(batch)
   }
 }

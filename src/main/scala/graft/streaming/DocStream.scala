@@ -1,9 +1,11 @@
 package graft.streaming
 
 import graft.ops.{DedupOps, Fs, TextOps}
+import graft.queries.DedupQs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming ingest admission — q83's incremental dedup as a Structured
   * Streaming loop. Each micro-batch of incoming documents is classified
@@ -14,24 +16,25 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * corpus PLUS everything admitted before it: the grow-as-you-ingest
   * loop a production corpus runs.
   *
-  * `foreachBatch` is the engine's sanctioned form for exactly this
-  * read-classify-append transaction (the classification needs per-batch
-  * joins and aggregations that streaming-native operators would hold as
-  * unbounded state). foreachBatch delivery is AT-LEAST-once — a crash
-  * after any write but before the checkpoint commit re-runs the same
-  * batchId on restart — so every write here is made idempotent per
-  * batchId: all three outputs (admissions, index shingles, index bands)
-  * are PARTITIONED by batch_id and written with dynamic partition
-  * overwrite, so a replay replaces its own partition instead of
-  * appending beside a partial first attempt; and classification reads
-  * the index at `batch_id < batchId`, so a replayed batch never sees
-  * its own half-written index rows (a doc cannot classify itself
-  * `dup_corpus`). At-least-once delivery + per-batch idempotent writes
-  * = effectively-exactly-once, the same discipline as `Backfill`'s
-  * idempotent per-month overwrite. At 100 TB the partition overwrites
-  * become table-format transactions (Delta/Iceberg replaceWhere) and
-  * the index relation takes the same `capBuckets` straggler guard the
-  * batch paths apply — here they are plain parquet dirs at test scale.
+  * The transaction runs under the tier's shared driver
+  * ([[IndexLayout.startStream]]) and ends in the shared verdict commit
+  * ([[IndexLayout.commitVerdicts]]); its gates ([[gate]]) and band probe
+  * ([[dupProbe]]) are the SAME functions the fused ingest loop
+  * ([[graft.pipeline.IncrAttrTable.ingestBatch]]) and the tagging loop
+  * run. foreachBatch delivery is AT-LEAST-once — a crash after any
+  * write but before the checkpoint commit re-runs the same batchId on
+  * restart — so every write here is idempotent per batchId: the
+  * verdicts overwrite their own `batch_id=N` leaf dir and the index
+  * slices their own `batch_id=N` partitions (dynamic partition
+  * overwrite), so a replay replaces its own output instead of appending
+  * beside a partial first attempt; and classification reads the index
+  * at `batch_id < batchId`, so a replayed batch never sees its own
+  * half-written index rows (a doc cannot classify itself `dup_corpus`).
+  * At-least-once delivery + per-batch idempotent writes =
+  * effectively-exactly-once, the same discipline as `Backfill`'s
+  * idempotent per-month overwrite. At 100 TB the overwrites become
+  * table-format transactions (Delta/Iceberg replaceWhere) — here they
+  * are plain parquet dirs at test scale.
   *
   * BUCKETED LAYOUT — the index is the relation that grows without
   * bound, and an unbucketed layout makes every micro-batch SCAN the
@@ -100,18 +103,15 @@ object DocStream {
   // the canonical bucket assignments ([[IndexLayout.bucketExpr]]) — the
   // re-bucketing compaction reassigns with the identical expressions
   private def bandBucket(nb: Int): Column = IndexLayout.bucketExpr("bands", nb)
-  private def docBucket(nb: Int, id: Column = null): Column =
-    IndexLayout.bucketExpr("shingles", nb, id)
+  private def docBucket(nb: Int): Column = IndexLayout.bucketExpr("shingles", nb)
 
   /** Row shapes of the two index relations — the cold-start contract
     * [[IndexLayout.residentSlice]] falls back to when the index holds no
     * files yet (seeded from an empty corpus). */
-  private val BandsSchema =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, band_idx INT, band_hash INT")
-  private val ShinglesSchema =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, shingles ARRAY<BIGINT>")
+  private val BandsSchema = StructType.fromDDL(
+    "doc_id BIGINT, band_idx INT, band_hash INT")
+  private val ShinglesSchema = StructType.fromDDL(
+    "doc_id BIGINT, shingles ARRAY<BIGINT>")
 
   /** Seed the resident index from an existing corpus (doc_id, text).
     * Seed rows land in the `batch_id=-1` partition so every streamed
@@ -122,14 +122,12 @@ object DocStream {
     Seq("bands", "shingles").foreach(rel =>
       Fs.delete(s"$indexDir/$rel", spark.sparkContext.hadoopConfiguration))
     val nb = IndexLayout.initMeta(spark, indexDir)
-    val sh = corpus
-      .select(col("doc_id"), TextOps.shingleHashes(col("text")).as("shingles"))
-      .filter(size(col("shingles")) > 0)
+    val sh = DedupQs.shinglesOf(corpus).filter(size(col("shingles")) > 0)
     IndexLayout.writeSlice(
       sh.withColumn("bucket", docBucket(nb)).withColumn("batch_id", lit(-1L)),
       indexDir, "shingles", dynamic = false)
     IndexLayout.writeSlice(
-      DedupOps.minhashBands(sh, "doc_id", numPerm = 64, bands = 16)
+      DedupQs.minhashBandsOf(sh)
         .withColumn("bucket", bandBucket(nb)).withColumn("batch_id", lit(-1L)),
       indexDir, "bands", dynamic = false)
   }
@@ -152,26 +150,18 @@ object DocStream {
     IndexLayout.maybeCompact(spark, indexDir, Seq("bands", "shingles"),
       maxDirsPerBucket)
 
-  /** Start the admission stream over parquet files of (doc_id, text).
-    * AvailableNow + checkpoint: run-to-completion per invocation,
-    * resume-exactly-once across invocations. */
+  /** Start the admission stream over parquet files of (doc_id, text)
+    * ([[IndexLayout.startStream]]: AvailableNow + checkpoint). */
   def start(spark: SparkSession, streamDir: String, indexDir: String,
-      outDir: String, maxFilesPerTrigger: Int = 1): StreamingQuery = {
-    spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(streamDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: java.lang.Long) =>
-        admitBatch(batch, indexDir, outDir, batchId))
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      outDir: String, maxFilesPerTrigger: Int = 1): StreamingQuery =
+    IndexLayout.startStream(spark, StructType.fromDDL("doc_id LONG, text STRING"),
+      streamDir, s"$outDir/_checkpoint", maxFilesPerTrigger)(
+      admitBatch(_, indexDir, outDir, _))
 
-  /** One admission transaction: classify the micro-batch against the
-    * resident index, write the verdicts, write the admitted docs'
-    * bands+shingles — every write an idempotent overwrite of this
+  /** One admission transaction: gate, classify the micro-batch against
+    * the resident index ([[dupProbe]] in the streaming posture), commit
+    * the verdicts ([[IndexLayout.commitVerdicts]]), write the admitted
+    * docs' bands+shingles — every write an idempotent overwrite of this
     * batch's own partitions, so foreachBatch replaying the same batchId
     * (at-least-once delivery) converges to the same state. The batch's
     * band/candidate bucket sets are deterministic functions of its
@@ -180,125 +170,15 @@ object DocStream {
     * drive it directly. */
   private[graft] def admitBatch(docs: DataFrame, indexDir: String,
       outDir: String, batchId: Long): Unit = graft.Memo.scoped { sc =>
-    val spark = docs.sparkSession
-    val nb = IndexLayout.numBuckets(spark, indexDir)
-    // optional language gate FIRST (see LangAllowConfKey): rejected
-    // docs skip the quality scorer, the shingler, and the index —
-    // everything downstream of lang-id sees one language. Persisted for
-    // the same two consumers as the quality flag.
-    val wrongLang: Option[DataFrame] =
-      spark.conf.getOption(LangAllowConfKey).map { csv =>
-        val allow = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        sc(TextOps.langIdScoresOf(docs)
-          .filter(!col("pred_lang").isin(allow: _*))
-          .select(col("doc_id")))
-      }
-    val postLang = wrongLang match {
-      case Some(w) => docs.join(w, Seq("doc_id"), "left_anti")
-      case None => docs
-    }
-    // optional quality gate (see MinScoreConfKey): rejected docs are
-    // excluded from shingling, so they produce no candidates, classify
-    // as nothing but low_quality, and never enter the index. Persisted
-    // because the flag feeds both the eligibility anti-join and the
-    // final status projection.
-    val lowQ: Option[DataFrame] =
-      spark.conf.getOption(MinScoreConfKey).map(_.toLong).map { m =>
-        sc(TextOps.modelScoresOf(postLang).filter(col("score") <= m)
-          .select(col("doc_id")))
-      }
-    val eligible = lowQ match {
-      case Some(l) => postLang.join(l, Seq("doc_id"), "left_anti")
-      case None => postLang
-    }
-    val sh = sc(eligible
-      .select(col("doc_id"), TextOps.shingleHashes(col("text")).as("shingles"))
-      .filter(size(col("shingles")) > 0))
-    val bands = sc(DedupOps.minhashBands(sh, "doc_id", numPerm = 64, bands = 16))
-    // which index buckets can this batch's band lookups possibly hit?
-    // A bounded driver-side scalar (≤ nb ints) off the persisted batch
-    // bands — the price of turning the index read from O(index) into
-    // O(batch's buckets).
-    val streamBuckets = bands.select(bandBucket(nb).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-
-    // the index is the relation that grows without bound as admissions
-    // accumulate — the same oversized-bucket straggler guard the batch
-    // paths apply (inert below the cap, bounds per-trigger pair
-    // generation when a band bucket goes hot). Partition pruning on
-    // batch_id < batchId excludes any half-written rows a crashed
-    // first attempt of THIS batch left behind — replay classifies
-    // against exactly the pre-batch index.
-    val idxBands = DedupOps.capBuckets(
-      IndexLayout.residentSlice(spark, indexDir, "bands", batchId,
-        streamBuckets, BandsSchema),
-      Seq("band_idx", "band_hash"), 1000)
-
-    val streamSide = bands.select(col("doc_id").as("doc_b"), col("band_idx"), col("band_hash"))
-    val candsCorpus = sc(streamSide
-      .join(idxBands.select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash")),
-        Seq("band_idx", "band_hash"))
-      .select("doc_a", "doc_b").distinct())
-    val candsBatch = bands
-      .select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash"))
-      .join(streamSide, Seq("band_idx", "band_hash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-
-    // shingle verify reads only the candidate docs' id buckets —
-    // second bounded collect, off the persisted candidate relation
-    val candBuckets = candsCorpus
-      .select(docBucket(nb, col("doc_a")).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val idxSh = IndexLayout.residentSlice(spark, indexDir, "shingles",
-      batchId, candBuckets, ShinglesSchema)
-
-    // integer-exact J >= 4/5 with array_intersect appearing ONCE (the
-    // division form expands the intersect into both numerator and
-    // denominator of the join-time condition — see DedupQs.verified)
-    def verify(cands: DataFrame, aSh: DataFrame): DataFrame =
-      cands
-        .join(aSh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), "doc_a")
-        .join(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), "doc_b")
-        .filter(lit(9L) * size(array_intersect(col("sh_a"), col("sh_b"))) >=
-          lit(4L) * (size(col("sh_a")) + size(col("sh_b"))))
-        .select(col("doc_b").as("doc_id")).distinct()
-
-    val dupCorpus = verify(candsCorpus, idxSh).withColumn("__dc", lit(true))
-    val dupBatch = verify(candsBatch, sh).withColumn("__db", lit(true))
-
-    val withWl = wrongLang match {
-      case Some(w) => docs.select("doc_id")
-        .join(w.withColumn("__wl", lit(true)), Seq("doc_id"), "left")
-      case None => docs.select("doc_id")
-        .withColumn("__wl", lit(null).cast("boolean"))
-    }
-    val withLq = lowQ match {
-      case Some(l) => withWl
-        .join(l.withColumn("__lq", lit(true)), Seq("doc_id"), "left")
-      case None => withWl
-        .withColumn("__lq", lit(null).cast("boolean"))
-    }
-    withLq
-      .join(dupCorpus, Seq("doc_id"), "left")
-      .join(dupBatch, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("__wl"), "wrong_lang")
-          .when(col("__lq"), "low_quality")
-          .when(col("__dc"), "dup_corpus")
-          .when(col("__db"), "dup_batch")
-          .otherwise("new").as("status"),
-        lit(batchId).as("batch_id"))
-      .write.partitionBy("batch_id").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$outDir/admissions")
-
-    // re-read the just-committed verdicts: breaks the plan lineage to
-    // indexDir (Spark refuses to overwrite a path its plan reads) and
-    // makes the index writes a pure function of on-disk state
-    val admitted = spark.read.parquet(s"$outDir/admissions")
-      .filter(col("batch_id") === batchId && col("status") === "new")
-      .select("doc_id")
+    val nb = IndexLayout.numBuckets(docs.sparkSession, indexDir)
+    val (gated, eligible) = gate(sc, docs)
+    val sh = sc(DedupQs.shinglesOf(eligible).filter(size(col("shingles")) > 0))
+    val bands = sc(DedupQs.minhashBandsOf(sh))
+    val (corpus, batch) =
+      dupProbe(sc, indexDir, nb, sh, bands, broadcastProbe = true, batchId)
+    val admitted = IndexLayout.commitVerdicts(docs.select("doc_id"),
+      gated ++ Seq("dup_corpus" -> dupIdsOf(corpus), "dup_batch" -> dupIdsOf(batch)),
+      s"$outDir/admissions", batchId)
     IndexLayout.writeSlice(
       sh.join(admitted, "doc_id")
         .withColumn("bucket", docBucket(nb))
@@ -310,4 +190,107 @@ object DocStream {
         .withColumn("batch_id", lit(batchId)),
       indexDir, "bands", dynamic = true)
   }
+
+  /** The admission gates, in the CCNet/Dolma order: the optional
+    * language gate ([[LangAllowConfKey]]) FIRST, then the optional
+    * quality gate ([[MinScoreConfKey]]) over what passed it. Returns the
+    * gate flags in status precedence (`wrong_lang`, `low_quality` — each
+    * present only when its conf is set, persisted in `sc` because it
+    * feeds both the eligibility anti-join and the verdict commit) and the
+    * ELIGIBLE docs: rejected docs skip every later scorer and the
+    * shingler, so they produce no candidates, classify as nothing but
+    * their gate status, and never enter the index. */
+  private[graft] def gate(sc: graft.Memo.Scope,
+      docs: DataFrame): (Seq[(String, DataFrame)], DataFrame) = {
+    val conf = docs.sparkSession.conf
+    val wrongLang = conf.getOption(LangAllowConfKey).map { csv =>
+      val allow = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      sc(TextOps.langIdScoresOf(docs)
+        .filter(!col("pred_lang").isin(allow: _*))
+        .select(col("doc_id")))
+    }
+    val postLang = wrongLang.fold(docs)(docs.join(_, Seq("doc_id"), "left_anti"))
+    val lowQ = conf.getOption(MinScoreConfKey).map(_.toLong).map { m =>
+      sc(TextOps.modelScoresOf(postLang).filter(col("score") <= m)
+        .select(col("doc_id")))
+    }
+    val eligible = lowQ.fold(postLang)(postLang.join(_, Seq("doc_id"), "left_anti"))
+    (wrongLang.map("wrong_lang" -> _).toSeq ++ lowQ.map("low_quality" -> _), eligible)
+  }
+
+  /** The document tier's ONE band probe with exact verify, against the
+    * resident index at `batch_id < batchId`: the batch's bands (`bands`,
+    * from `sh` through [[DedupQs.minhashBandsOf]] — q36's banding) probe
+    * the bucket-pruned resident bands ([[IndexLayout.probeSlice]]) and
+    * the batch itself, then every candidate pair passes the integer-exact
+    * J >= 4/5 verify against the shingle sets. Keep-first: within the
+    * batch only a LOWER-id partner marks a doc; against the resident
+    * index any partner does (a replayed batch never sees its own rows,
+    * so a doc cannot mark itself, and under [[graft.pipeline
+    * .IncrAttrTable]]'s enforced monotone ids every resident id is lower
+    * anyway).
+    *
+    * The [[DedupOps.capBuckets]] straggler bound applies to the BATCH
+    * side only (a batch-sized aggregate): a band bucket holding more than
+    * [[DedupQs.MaxBucket]] batch docs produces no candidates. Capping the
+    * resident side instead would cost two index-sized exchanges per
+    * batch, and dropping it only ADDS candidates (the exact verify keeps
+    * the answer exact).
+    *
+    * `broadcastProbe` is the shard posture: the capped batch bands, the
+    * candidate pairs and the batch's shingles are hinted, so candidate
+    * generation and verify are map-side hash probes over the pruned
+    * resident reads and the resident side never shuffles. A corpus-sized
+    * "batch" passes `false` and every join takes the shuffled form.
+    *
+    * Returns (resident-dup PAIRS, within-batch-dup PAIRS), each
+    * (doc_a, doc_b) with doc_b the batch doc; the resident candidate
+    * relation both reads share is persisted in `sc` (one resident band
+    * scan per batch). Callers grade the two sides separately (admission:
+    * `dup_corpus` vs `dup_batch`) or union them (tagging: `is_dup`, and
+    * the pairs are the label stream's union-find edges). */
+  private[graft] def dupProbe(sc: graft.Memo.Scope, indexDir: String, nb: Int,
+      sh: DataFrame, bands: DataFrame, broadcastProbe: Boolean,
+      batchId: Long): (DataFrame, DataFrame) = {
+    def hinted(df: DataFrame): DataFrame = if (broadcastProbe) broadcast(df) else df
+    val bSide = hinted(DedupOps.capBuckets(
+        bands, Seq("band_idx", "band_hash"), DedupQs.MaxBucket)
+      .select(col("doc_id").as("doc_b"), col("band_idx"), col("band_hash")))
+    def aSide(df: DataFrame): DataFrame =
+      df.select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash"))
+    val candsResident = sc(aSide(IndexLayout.probeSlice(bands, indexDir, "bands",
+        nb, batchId, BandsSchema))
+      .join(bSide, Seq("band_idx", "band_hash"))
+      .select("doc_a", "doc_b").distinct())
+    val candsBatch = aSide(bands)
+      .join(bSide, Seq("band_idx", "band_hash"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select("doc_a", "doc_b").distinct()
+
+    // integer-exact J >= 4/5 with array_intersect appearing ONCE (the
+    // division form re-evaluates the intersect per reference when
+    // Catalyst inlines it into the join condition — DedupQs.verified
+    // history); the size bound is J's necessary condition min/max >= 4/5
+    val sb = hinted(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")))
+    def verify(cands: DataFrame, aSh: DataFrame): DataFrame = {
+      val nInter = size(array_intersect(col("sh_a"), col("sh_b")))
+      val sizeOk = lit(5) * least(size(col("sh_a")), size(col("sh_b"))) >=
+        lit(4) * greatest(size(col("sh_a")), size(col("sh_b")))
+      aSh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"))
+        .join(hinted(cands), "doc_a").join(sb, "doc_b")
+        .filter(sizeOk && (lit(9) * nInter >=
+          lit(4) * (size(col("sh_a")) + size(col("sh_b")))))
+        .select(col("doc_a"), col("doc_b")).distinct()
+    }
+    // the resident shingle verify reads only the candidate docs' id
+    // buckets — second bounded collect, off the persisted candidates
+    val residentSh = IndexLayout.probeSlice(candsResident, indexDir, "shingles",
+      nb, batchId, ShinglesSchema, key = col("doc_a"))
+    (verify(candsResident, residentSh), verify(candsBatch, sh))
+  }
+
+  /** The distinct dup doc ids of a verified pair relation — the doc_b
+    * side (keep-first: the higher-id member of a pair is the dup). */
+  private[graft] def dupIdsOf(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_b").as("doc_id")).distinct()
 }

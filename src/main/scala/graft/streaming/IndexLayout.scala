@@ -3,9 +3,14 @@ package graft.streaming
 import graft.ops.Fs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** On-disk layout shared by the resident streaming indexes ([[DocStream]]
-  * bands+shingles, [[VecStream]] vectors): hash-bucketed partition dirs
+  * bands+shingles, [[VecStream]] vectors, [[MediaStream]] fingerprints),
+  * plus the admission transaction's shared steps: the one stream driver
+  * ([[startStream]]), the bounded probe read ([[probeSlice]]) and the
+  * verdict commit ([[commitVerdicts]]). Layout: hash-bucketed partition dirs
   * under a GENERATION root with an atomic-pointer swap — a minimal form
   * of the metadata transaction a table format (Delta/Iceberg) provides,
   * which is exactly what these dirs become at 100 TB.
@@ -191,8 +196,7 @@ private[graft] object IndexLayout {
     * the caller declares `schema`, the read skips footer-based
     * inference (one less I/O pass per probe). */
   def residentSlice(spark: SparkSession, indexDir: String, rel: String,
-      batchId: Long, buckets: Seq[Int],
-      schema: org.apache.spark.sql.types.StructType = null): DataFrame = {
+      batchId: Long, buckets: Seq[Int], schema: StructType = null): DataFrame = {
     val root = dataDir(spark, indexDir, rel)
     val present = Fs.list(root, hconf(spark))
       .map(_.getPath.getName).filter(_.startsWith("bucket=")).toSet
@@ -221,6 +225,72 @@ private[graft] object IndexLayout {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
   }
+
+  /** The bounded probe read every admission transaction makes: which
+    * `rel` buckets can the batch's `probes` rows possibly hit (the
+    * canonical [[bucketExpr]], `key` overriding its key column), as ONE
+    * driver-side collect of ≤ nb distinct ints — then [[residentSlice]]
+    * of exactly those buckets. The collect is the price of turning the
+    * resident read from O(index) into O(the batch's buckets); persist
+    * `probes` first, or the collect recomputes it. */
+  def probeSlice(probes: DataFrame, indexDir: String, rel: String, nb: Int,
+      batchId: Long, schema: StructType, key: Column = null): DataFrame = {
+    val buckets = probes.select(bucketExpr(rel, nb, key).cast("int"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    residentSlice(probes.sparkSession, indexDir, rel, batchId, buckets, schema)
+  }
+
+  /** The verdict commit every admission transaction ends in. `ids` is
+    * the batch's single id column; `flags` is the status precedence, a
+    * list of (status, distinct ids) relations, the first match winning
+    * and an unflagged id reading `new`. The (id, status) rows are a
+    * plain LEAF-DIRECTORY overwrite of `dir/batch_id=N` (the on-disk
+    * layout a dynamic partitioned write on batch_id makes, without its
+    * listing of the whole tree), so a replayed batchId replaces exactly
+    * its own verdicts. Returns the committed `new` ids RE-READ from disk: that
+    * breaks the plan lineage to the index (Spark refuses to overwrite a
+    * path its plan reads) and makes every later write of the transaction
+    * a pure function of on-disk state. `broadcastFlags` hints the flag
+    * joins for shard-sized batches. */
+  def commitVerdicts(ids: DataFrame, flags: Seq[(String, DataFrame)],
+      dir: String, batchId: Long, broadcastFlags: Boolean = false): DataFrame = {
+    val id = ids.columns.head
+    val marked = flags.zipWithIndex.foldLeft(ids.select(id)) {
+      case (acc, ((_, f), i)) =>
+        val m = f.select(col(id), lit(true).as(s"__v$i"))
+        acc.join(if (broadcastFlags) broadcast(m) else m, Seq(id), "left")
+    }
+    val status = coalesce(flags.zipWithIndex.map { case ((st, _), i) =>
+      when(col(s"__v$i"), st) } :+ lit("new"): _*)
+    val verdicts = marked.select(col(id), status.as("status"))
+    val leaf = s"$dir/batch_id=$batchId"
+    verdicts.write.mode("overwrite").parquet(leaf)
+    // the written row shape is known: declaring it skips footer inference
+    ids.sparkSession.read.schema(verdicts.schema).parquet(leaf)
+      .filter(col("status") === "new").select(id)
+  }
+
+  /** The streaming tier's one driver: parquet files of `schema` from
+    * `streamDir`, each micro-batch handed with its engine batchId to
+    * `batch` through `foreachBatch` — the engine's sanctioned form for a
+    * read-classify-append transaction, whose per-batch joins and
+    * aggregations streaming-native operators would hold as unbounded
+    * state. Delivery is at-least-once (a crash before the checkpoint
+    * commit re-runs the same batchId), so `batch` must be idempotent per
+    * batchId. `Trigger.AvailableNow` + checkpoint: run-to-completion per
+    * invocation, resume-exactly-once across invocations. */
+  def startStream(spark: SparkSession, schema: StructType, streamDir: String,
+      checkpointDir: String, maxFilesPerTrigger: Int)(
+      batch: (DataFrame, Long) => Unit): StreamingQuery =
+    spark.readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .parquet(streamDir)
+      .writeStream
+      .foreachBatch((df: DataFrame, batchId: java.lang.Long) => batch(df, batchId))
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
 
   /** Fold every batch partition of `rels` into ONE file per bucket dir
     * of generation G+1, then atomically swap the `_gen` pointer and GC

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** FUSED streaming ingest — admission AND tagging in one foreachBatch
   * transaction ([[graft.pipeline.IncrAttrTable.ingestBatch]]). Where
@@ -10,9 +11,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * a production ingest does both — and tags ONLY what it admits.
   * Composing the two loops costs two band probes and two index writes
   * per batch for the same dedup decision; this loop makes the decision
-  * once: classify against the resident index (quality gate →
-  * dup_corpus → dup_batch → new, DocStream's exact precedence), write
-  * the verdicts to `root/admissions`, tag the `new` survivors with the
+  * once: classify against the resident index with DocStream's own
+  * gate and band probe functions (precedence wrong_lang → low_quality →
+  * dup_corpus → dup_batch → new), commit the verdicts to
+  * `root/admissions` through the tier's shared verdict commit, tag the
+  * `new` survivors with the
   * full attribute row (model score, cascade mask, frozen-LM perplexity;
   * `is_dup` false by construction — admission already removed every
   * J ≥ 0.8 partner), and append the survivors' bands+shingles once.
@@ -38,21 +41,8 @@ object IngestStream {
     * inferred from present files, [[AttrStream.DocumentsSchema]] on an
     * empty/absent cold start, explicit override wins. */
   def start(spark: SparkSession, streamDir: String, root: String,
-      maxFilesPerTrigger: Int = 1,
-      schema: org.apache.spark.sql.types.StructType = null): StreamingQuery = {
-    val eff = Option(schema).getOrElse(AttrStream.inferOrDefault(spark, streamDir))
-    val p = new org.apache.hadoop.fs.Path(streamDir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-    spark.readStream
-      .schema(eff)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(streamDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: java.lang.Long) =>
-        graft.pipeline.IncrAttrTable.ingestBatch(
-          spark, root, batch, broadcastProbe = true, batchId = batchId))
-      .option("checkpointLocation", s"$root/_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Int = 1, schema: StructType = null): StreamingQuery =
+    AttrStream.startDocuments(spark, streamDir, root, maxFilesPerTrigger, schema)(
+      (batch, batchId) => graft.pipeline.IncrAttrTable.ingestBatch(
+        spark, root, batch, batchId = batchId))
 }

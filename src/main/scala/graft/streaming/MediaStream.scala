@@ -4,7 +4,8 @@ import graft.ops.{DedupOps, Fs, MultimodalOps}
 import graft.ops.MultimodalOps.MediaRow
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming MEDIA admission — q152/q153's perceptual near-dup as a
   * grow-as-you-ingest loop, the fingerprint-tier twin of [[DocStream]]
@@ -23,9 +24,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * dropped in an earlier batch is `new` — you cannot duplicate a
   * payload the corpus rejected.
   *
-  * Same idempotence discipline as the twins: foreachBatch delivery is
-  * AT-LEAST-once, so the verdict write is an idempotent overwrite of
-  * this batch's own `batch_id` partition, classification reads the
+  * Same idempotence discipline, driver and verdict commit as the other
+  * tiers: foreachBatch delivery is AT-LEAST-once, so the verdict write
+  * is an idempotent overwrite of this batch's own `batch_id` leaf dir
+  * ([[IndexLayout.commitVerdicts]]), classification reads the
   * index at `batch_id < batchId` (a replayed batch never sees its own
   * half-written rows), and the index write derives from the COMMITTED
   * verdicts re-read off disk.
@@ -64,9 +66,8 @@ object MediaStream {
 
   /** Row shape of the fingerprint index — [[IndexLayout.residentSlice]]'s
     * cold-start fallback contract. */
-  private val FingerprintsSchema =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "media_id BIGINT, phash BIGINT, band_idx INT, band_bits BIGINT")
+  private val FingerprintsSchema = StructType.fromDDL(
+    "media_id BIGINT, phash BIGINT, band_idx INT, band_bits BIGINT")
 
   /** (media_id, phash) of a raw media relation via the decode pass. */
   private def hashesOf(media: DataFrame): DataFrame = {
@@ -103,41 +104,29 @@ object MediaStream {
     IndexLayout.maybeCompact(spark, indexDir, Seq("fingerprints"), maxDirsPerBucket)
 
   /** Start the admission stream over parquet files of
-    * (media_id, kind, uri, bytes). AvailableNow + checkpoint:
-    * run-to-completion per invocation, resume-exactly-once across
-    * invocations. */
+    * (media_id, kind, uri, bytes) ([[IndexLayout.startStream]]:
+    * AvailableNow + checkpoint). */
   def start(spark: SparkSession, streamDir: String, indexDir: String,
-      outDir: String, maxFilesPerTrigger: Int = 1): StreamingQuery = {
-    spark.readStream
-      .schema("media_id LONG, kind STRING, uri STRING, bytes BINARY")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(streamDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: java.lang.Long) =>
-        admitBatch(batch, indexDir, outDir, batchId))
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      outDir: String, maxFilesPerTrigger: Int = 1): StreamingQuery =
+    IndexLayout.startStream(spark,
+      StructType.fromDDL("media_id LONG, kind STRING, uri STRING, bytes BINARY"),
+      streamDir, s"$outDir/_checkpoint", maxFilesPerTrigger)(
+      admitBatch(_, indexDir, outDir, _))
 
   /** One admission transaction: decode-hash the micro-batch, probe the
     * resident fingerprint index on the batch's own band buckets,
-    * classify (`dup_corpus` > `dup_batch` > `new`), write the verdicts
-    * idempotently, index the admitted fingerprints. Package-visible so
-    * specs and the graded q154 drive it directly. */
+    * classify (`dup_corpus` > `dup_batch` > `new`), commit the verdicts
+    * ([[IndexLayout.commitVerdicts]]), index the admitted fingerprints.
+    * Package-visible so specs and the graded q154 drive it directly. */
   private[graft] def admitBatch(media: DataFrame, indexDir: String,
       outDir: String, batchId: Long): Unit = graft.Memo.scoped { sc =>
-    val spark = media.sparkSession
-    val nb = IndexLayout.numBuckets(spark, indexDir)
+    val nb = IndexLayout.numBuckets(media.sparkSession, indexDir)
     val batchBands = sc(MultimodalOps.phashBands(hashesOf(media)))
     // the batch can only collide inside its own band buckets — read
-    // only those bucket dirs (bounded driver-side scalar off the
-    // persisted bands, ≤ min(4·batch, nb) ints; DocStream's posture)
-    val probeBuckets = batchBands.select(bucket(nb).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    // only those bucket dirs (≤ min(4·batch, nb) of them)
     val idx = DedupOps.capBuckets(
-      IndexLayout.residentSlice(spark, indexDir, "fingerprints", batchId,
-        probeBuckets, FingerprintsSchema),
+      IndexLayout.probeSlice(batchBands, indexDir, "fingerprints", nb, batchId,
+        FingerprintsSchema),
       Seq("band_idx", "band_bits"), MaxBucket)
 
     def near = bit_count(col("a_ph").bitwiseXOR(col("b_ph"))) <= MaxHamming
@@ -149,7 +138,6 @@ object MediaStream {
       .join(b, Seq("band_idx", "band_bits"))
       .filter(near)
       .select(col("b_id").as("media_id")).distinct()
-      .withColumn("__dc", lit(true))
     // keep-first within the batch: a LOWER-id near neighbor marks
     // this one, the neighbor's own verdict notwithstanding
     val dupBatch = batchBands
@@ -158,25 +146,10 @@ object MediaStream {
       .join(b, Seq("band_idx", "band_bits"))
       .filter(col("a_id") < col("b_id") && near)
       .select(col("b_id").as("media_id")).distinct()
-      .withColumn("__db", lit(true))
 
-    media.select(col("media_id"))
-      .join(dupCorpus, Seq("media_id"), "left")
-      .join(dupBatch, Seq("media_id"), "left")
-      .select(col("media_id"),
-        when(col("__dc"), "dup_corpus")
-          .when(col("__db"), "dup_batch")
-          .otherwise("new").as("status"),
-        lit(batchId).as("batch_id"))
-      .write.partitionBy("batch_id").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$outDir/admissions")
-
-    // re-read the committed verdicts: breaks plan lineage to indexDir
-    // and makes the index write a pure function of on-disk state
-    val admitted = spark.read.parquet(s"$outDir/admissions")
-      .filter(col("batch_id") === batchId && col("status") === "new")
-      .select("media_id")
+    val admitted = IndexLayout.commitVerdicts(media.select("media_id"),
+      Seq("dup_corpus" -> dupCorpus, "dup_batch" -> dupBatch),
+      s"$outDir/admissions", batchId)
     IndexLayout.writeSlice(
       batchBands.join(admitted, "media_id")
         .withColumn("bucket", bucket(nb))

@@ -3,7 +3,8 @@ package graft.streaming
 import graft.ops.{DedupOps, Fs, VectorOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming SEMANTIC admission — q78's cell-keyed SemDeDup as a
   * Structured Streaming loop, the embedding-tier twin of [[DocStream]]
@@ -14,9 +15,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * index before the next trigger, so every batch deduplicates against
   * the corpus PLUS everything admitted before it.
   *
-  * Same idempotence discipline as [[DocStream]]: foreachBatch delivery
-  * is AT-LEAST-once, so every write is an idempotent overwrite of this
-  * batch's own `batch_id` partition (dynamic partition overwrite), and
+  * Same idempotence discipline, driver and verdict commit as
+  * [[DocStream]]: foreachBatch delivery is AT-LEAST-once, so every write
+  * is an idempotent overwrite of this batch's own `batch_id` output, and
   * classification reads the index at `batch_id < batchId` — a replayed
   * batch never sees its own half-written rows, and a vector can never
   * classify ITSELF `dup_corpus`. At 100 TB the partition overwrites
@@ -66,9 +67,11 @@ object VecStream {
   /** Row shape of the vector index — [[IndexLayout.residentSlice]]'s
     * cold-start fallback contract (vec element type matches the stream's
     * `ARRAY<FLOAT>` embeddings). */
-  private val VectorsSchema =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "id BIGINT, vec ARRAY<FLOAT>, sq_norm DOUBLE, cell BIGINT")
+  private val VectorsSchema = StructType.fromDDL(
+    "id BIGINT, vec ARRAY<FLOAT>, sq_norm DOUBLE, cell BIGINT")
+
+  /** Row shape of the stream's input files. */
+  private val StreamSchema = StructType.fromDDL("vec_id LONG, embedding ARRAY<FLOAT>")
 
   /** Seed the centroid set (q78's every-50th policy over the seed
     * corpus) and the resident index. Seed rows land in the
@@ -115,27 +118,19 @@ object VecStream {
     IndexLayout.maybeCompact(spark, indexDir, Seq("vectors"), maxDirsPerBucket)
 
   /** Start the admission stream over parquet files of
-    * (vec_id, embedding). AvailableNow + checkpoint: run-to-completion
-    * per invocation, resume-exactly-once across invocations. */
+    * (vec_id, embedding) ([[IndexLayout.startStream]]: AvailableNow +
+    * checkpoint). */
   def start(spark: SparkSession, streamDir: String, indexDir: String,
-      outDir: String, maxFilesPerTrigger: Int = 1): StreamingQuery = {
-    spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(streamDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, batchId: java.lang.Long) =>
-        admitBatch(batch, indexDir, outDir, batchId))
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      outDir: String, maxFilesPerTrigger: Int = 1): StreamingQuery =
+    IndexLayout.startStream(spark, StreamSchema, streamDir,
+      s"$outDir/_checkpoint", maxFilesPerTrigger)(admitBatch(_, indexDir, outDir, _))
 
   /** One admission transaction: assign the micro-batch to its frozen
     * cells, classify within-cell against the resident index and the
-    * batch itself, write the verdicts, index the admitted vectors —
-    * every write an idempotent overwrite of this batch's `batch_id`
-    * partition. Package-visible so specs can drive it directly.
+    * batch itself, commit the verdicts ([[IndexLayout.commitVerdicts]]),
+    * index the admitted vectors — every write an idempotent overwrite
+    * of this batch's `batch_id` partition. Package-visible so specs can
+    * drive it directly.
     *
     * Vectors with a NULL embedding are admitted `new` but never
     * indexed (nothing to compare) — the same convention as DocStream's
@@ -149,13 +144,10 @@ object VecStream {
         .select(col("vec_id").as("id"), col("embedding").as("vec")),
       spark.read.parquet(s"$indexDir/centroids")))
     // the batch can only collide inside its own assigned cells — read
-    // only those cells' bucket dirs (bounded driver-side scalar off
-    // the persisted assignment, ≤ nb ints; DocStream's posture)
-    val batchBuckets = assigned.select(cellBucket(nb).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    // only those cells' bucket dirs
     val idx = DedupOps.capBuckets(
-      IndexLayout.residentSlice(spark, indexDir, "vectors", batchId,
-        batchBuckets, VectorsSchema),
+      IndexLayout.probeSlice(assigned, indexDir, "vectors", nb, batchId,
+        VectorsSchema),
       Seq("cell"), MaxCell)
 
     def sideA(df: DataFrame): DataFrame = df.select(col("cell"),
@@ -168,34 +160,18 @@ object VecStream {
 
     val dupCorpus = sideA(idx).join(b, "cell")
       .filter(close)
-      .select(col("b_id").as("id")).distinct()
-      .withColumn("__dc", lit(true))
+      .select(col("b_id").as("vec_id")).distinct()
     // q78's keep-first: a LOWER-id batch neighbor marks this one, the
     // neighbor's own verdict notwithstanding (DocStream's precedence)
     val dupBatch = sideA(assigned).join(b, "cell")
       .filter(col("a_id") < col("b_id") && close)
-      .select(col("b_id").as("id")).distinct()
-      .withColumn("__db", lit(true))
+      .select(col("b_id").as("vec_id")).distinct()
 
-    vecs.select(col("vec_id").as("id"))
-      .join(dupCorpus, Seq("id"), "left")
-      .join(dupBatch, Seq("id"), "left")
-      .select(col("id").as("vec_id"),
-        when(col("__dc"), "dup_corpus")
-          .when(col("__db"), "dup_batch")
-          .otherwise("new").as("status"),
-        lit(batchId).as("batch_id"))
-      .write.partitionBy("batch_id").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$outDir/admissions")
-
-    // re-read the committed verdicts: breaks plan lineage to indexDir
-    // and makes the index write a pure function of on-disk state
-    val admitted = spark.read.parquet(s"$outDir/admissions")
-      .filter(col("batch_id") === batchId && col("status") === "new")
-      .select(col("vec_id").as("id"))
+    val admitted = IndexLayout.commitVerdicts(vecs.select("vec_id"),
+      Seq("dup_corpus" -> dupCorpus, "dup_batch" -> dupBatch),
+      s"$outDir/admissions", batchId)
     IndexLayout.writeSlice(
-      assigned.join(admitted, "id")
+      assigned.join(admitted.withColumnRenamed("vec_id", "id"), "id")
         .withColumn("bucket", cellBucket(nb))
         .withColumn("batch_id", lit(batchId)),
       indexDir, "vectors", dynamic = true)
@@ -221,7 +197,7 @@ object VecStream {
   def streamingFeatureHistogram(spark: SparkSession, streamDir: String,
       maxFilesPerTrigger: Int = 1): DataFrame =
     spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>")
+      .schema(StreamSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(streamDir)
       .select(posexplode(col("embedding")).as(Seq("dim", "f")))

@@ -226,19 +226,16 @@ class BackfillSpec extends AnyFunSuite {
     assert(fetched.toSeq == Seq("2023-01-01", "2023-02-01", "2023-03-01"))
   }
 
-  test("progress listener counts real work; per-month callback fires") {
+  test("per-month progress callback fires; master rows counted") {
     val dir = Files.createTempDirectory("bf").toString
     val cp = s"$dir/cp.json"
     val seen = scala.collection.mutable.ArrayBuffer[(String, Int, Int)]()
-    val (result, snap) = graft.ops.Progress.track(spark) {
-      Backfill.run(spark, dir, cp, "2023-01-01", "2023-02-28",
-        "https://cdn/", "w500", Map.empty, (_, _) => raw(Seq(1L, 2L)),
-        onProgress = (k, d, t) => seen += ((k, d, t)))
-    }
+    val result = Backfill.run(spark, dir, cp, "2023-01-01", "2023-02-28",
+      "https://cdn/", "w500", Map.empty, (_, _) => raw(Seq(1L, 2L)),
+      onProgress = (k, d, t) => seen += ((k, d, t)))
     assert(result.masterRows == 2)
     assert(seen.toSeq == Seq(
       ("2023-01-01_2023-01-31", 1, 2), ("2023-02-01_2023-02-28", 2, 2)))
-    assert(snap.stages > 0 && snap.tasks > 0 && snap.recordsRead > 0)
   }
 
   test("cross-month duplicates collapse in the master") {

@@ -774,23 +774,24 @@ class IncrAttrSpec extends AnyFunSuite {
       s"clustered attrs wrong: $at")
   }
 
-  test("the distributed label form (corpus-sized builds) emits the same labels as the shard form") {
-    // appendBatch(broadcastProbe = false) routes labelDelta through the
-    // distributed CC instead of the driver union-find — the two forms
-    // must produce identical resolved labels on the same merge fixture
-    // (the posture split is round-19 profiling: the CC loop's fixed
-    // overhead cost ~2 s on every ~100-edge shard append)
+  test("both CC paths emit the same labels on the merge fixture") {
+    // every label delta builds through DedupOps.connectedComponents: a
+    // shard's few pairs take its driver union-find, a corpus-sized build
+    // the distributed loop. maxDriverEdges=0 forces the distributed loop,
+    // which must resolve the merge fixture to the driver path's answer
+    // (the previous test)
     val root = freshRoot()
-    Seq(
+    spark.conf.set(graft.ops.DedupOps.DriverCcMaxEdgesKey, "0")
+    try Seq(
       Seq(labDoc(1L, "a1 a2 a3 a4 a5"), labDoc(2L, "a1 a2 a3 a4 ax")),
       Seq(labDoc(10L, "b1 b2 b3 b4 b5"), labDoc(11L, "b1 b2 b3 b4 by")),
       Seq(labDoc(20L, "a1 b3 b4 b5"))
-    ).foreach(b => IncrAttrTable.appendBatch(spark, root, df(b),
-      broadcastProbe = false))
+    ).foreach(b => IncrAttrTable.appendBatch(spark, root, df(b)))
+    finally spark.conf.unset(graft.ops.DedupOps.DriverCcMaxEdgesKey)
     val resolved = IncrAttrTable.labelsResolved(spark, root)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(resolved == Map(1L -> 1L, 2L -> 1L, 10L -> 1L, 11L -> 1L, 20L -> 1L),
-      s"distributed label form diverged from the shard form's answer: $resolved")
+      s"distributed CC path diverged from the driver path's answer: $resolved")
   }
 
   test("labels survive the compaction fold resolved: superseded merge rows die, answers do not change") {

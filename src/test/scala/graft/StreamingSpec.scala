@@ -281,6 +281,25 @@ class StreamingSpec extends AnyFunSuite {
       9104L -> ("new", 1L)))
   }
 
+  test("a resident near-dup with a HIGHER doc_id still makes a batch doc dup_corpus") {
+    // DocStream has no monotone-id contract: the index can hold ids above
+    // a batch's, and the resident side of the band probe must not filter
+    // on id order (only the within-batch side is keep-first)
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("doc-admit-higher-id")
+    val (indexDir, outDir) = (s"$root/index", s"$root/out")
+    val tokens = (1 to 40).map(i => s"w$i")
+    graft.streaming.DocStream.seedIndex(
+      Seq((500L, tokens.mkString(" "))).toDF("doc_id", "text"), indexDir)
+    // J = 37/39 against the resident doc 500
+    val near = (tokens.dropRight(1) :+ "zz").mkString(" ")
+    graft.streaming.DocStream.admitBatch(
+      Seq((7L, near)).toDF("doc_id", "text"), indexDir, outDir, batchId = 0L)
+    val got = spark.read.parquet(s"$outDir/admissions")
+      .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("status")).toMap
+    assert(got == Map(7L -> "dup_corpus"), s"got $got")
+  }
+
   test("quality-gated admission: low scorers recorded, never classified, never indexed") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("doc-admit-gate")
