@@ -208,23 +208,27 @@ object Memo {
     if (df != null) df.unpersist()
   }
 
-  /** Non-blocking fill for a per-corpus estimate map (the broadcast
-    * guards' size estimates, q139's candidate-mass estimate):
-    * `computeIfAbsent` holds the hash bin's lock for the mapping
-    * function's whole duration, and these fills run FULL SPARK JOBS — a
-    * concurrent caller hashing to the same bin would stall behind the
-    * job (and ConcurrentHashMap documents mapping functions "short and
-    * simple"). Compute OUTSIDE the map instead: at worst two concurrent
-    * callers duplicate one bounded aggregate, and `putIfAbsent` keeps
-    * the first verdict so every caller agrees. */
-  def memoFill[K, V <: AnyRef](
-      map: java.util.concurrent.ConcurrentHashMap[K, V], k: K)(
-      compute: => V): V = {
-    val hit = map.get(k)
+  private val estimates =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
+
+  /** Per-(session, corpus, tag) memo for the size estimates behind the
+    * broadcast guards and q139's density router: `compute` runs once per
+    * key and the first verdict serves every later caller.
+    *
+    * Non-blocking fill: `computeIfAbsent` holds the hash bin's lock for
+    * the mapping function's whole duration, and these fills run FULL
+    * SPARK JOBS — a concurrent caller hashing to the same bin would stall
+    * behind the job (and ConcurrentHashMap documents mapping functions
+    * "short and simple"). Compute OUTSIDE the map instead: at worst two
+    * concurrent callers duplicate one bounded aggregate, and
+    * `putIfAbsent` keeps the first verdict so every caller agrees. */
+  def estimate(s: SparkSession, d: String, tag: String)(compute: => Long): Long = {
+    val k = (s, d, tag)
+    val hit = estimates.get(k)
     if (hit != null) hit
     else {
-      val v = compute
-      val prev = map.putIfAbsent(k, v)
+      val v: java.lang.Long = compute
+      val prev = estimates.putIfAbsent(k, v)
       if (prev != null) prev else v
     }
   }

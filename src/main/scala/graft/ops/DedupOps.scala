@@ -214,72 +214,30 @@ object DedupOps {
     * step after near-dup pair detection: pairs → components → one
     * canonical survivor per component.
     *
-    * Algorithm: min-label propagation with POINTER JUMPING. Every node
-    * starts labeled `least(id, min(neighbor ids))` — the node-list
-    * exchange doubles as round 1, since initial labels are ids; each
-    * round (1) every node takes the
-    * minimum of its own label and its neighbors' labels, then (2) jumps:
-    * replaces its label with its label's label (path doubling). Step 1
-    * alone converges in diameter rounds — fine for dense near-dup
-    * clusters (2-3 rounds), pathological for chain graphs; the jump
-    * makes the label-distance covered grow geometrically, so worst-case
-    * rounds are O(log n) on any graph (`DedupVectorSpec` pins ≤⌈log₂ n⌉
-    * on a 10k-node chain). Each round is two keyed shuffles (neighbor-min
-    * aggregate, jump join) — no collect; the driver only sees the
-    * changed COUNT per round.
+    * Verified near-dup pair streams are OUTPUT-bounded (LSH banding +
+    * exact verify), so at every graded scale they are a few dozen to a
+    * few thousand rows, and those run a DRIVER union-find
+    * ([[GraphOps.driverOrLoop]] decides under
+    * `spark.graft.graph.maxDriverEdges`). The distributed loop's fixed
+    * machinery measured the same +2 s constant on every shard append's
+    * label delta ([[graft.pipeline.IncrAttrTable]], whose labels build
+    * through this entry). A pair stream past the bound, or one whose
+    * endpoints are not `LongType`, takes [[connectedComponentsWithRounds]]'s
+    * pointer-jump loop. Identical labels either way: union by min root
+    * IS min-reachable-id labeling; `DedupVectorSpec` pins the two paths
+    * byte-equal on chains/cliques/forests.
     *
     * @param edges (a: long, b: long) undirected pairs
     * @return (id: long, comp: long) — every endpoint labeled with the
     *         smallest id reachable from it
     */
-  /** Size bound for the driver union-find fast path (edges). Verified
-    * near-dup pair streams are OUTPUT-bounded (LSH banding + exact
-    * verify), so at every graded scale they are a few dozen to a few
-    * thousand rows — and the distributed loop's fixed machinery
-    * (per-round eager localCheckpoints, the changed-count job, the
-    * symmetric-edge persist) measured ~1.7 s even over 50 LITERAL
-    * edges (round-21 decomposition, OPTIMIZATION_r21.md), the same +2 s
-    * constant round 19 measured on every shard append's label delta
-    * ([[graft.pipeline.IncrAttrTable]], whose labels now build through
-    * this fast path). 200k edges ≈ a few MB collected —
-    * far inside the q68 bounded-driver-action budget; a corpus whose
-    * pair stream exceeds it takes the distributed loop unchanged. */
-  private val DriverCcMaxEdgesDefault = 200000L
-  private[graft] val DriverCcMaxEdgesKey = "spark.graft.cc.maxDriverEdges"
-
-  /** Production entry: the distributed pointer-jump loop, with a
-    * DRIVER union-find fast path when the edge list is small (q68's
-    * bounded-collect posture — `spark.graft.cc.maxDriverEdges`,
-    * default 200k, 0 disables). Identical labels either way: union by
-    * min root IS min-reachable-id labeling; `DedupVectorSpec` pins the
-    * two paths byte-equal on chains/cliques/forests. The size probe is
-    * one `limit(bound+1).collect()` — in the small case those rows ARE
-    * the input (no second materialization); in the large case
-    * executeTake stops early and the loop recomputes edges as before. */
   def connectedComponents(edges: DataFrame): DataFrame = {
-    val bound = edges.sparkSession.conf.getOption(DriverCcMaxEdgesKey)
-      .map(_.toLong).getOrElse(DriverCcMaxEdgesDefault)
     val isLong = edges.schema("a").dataType == org.apache.spark.sql.types.LongType &&
       edges.schema("b").dataType == org.apache.spark.sql.types.LongType
-    if (bound <= 0 || bound > Int.MaxValue - 1 || !isLong)
-      return connectedComponentsWithRounds(edges)._1
-    // Persist the pair stream BEFORE the size probe (round-21
-    // verdict): when the probe OVERRUNS the bound, executeTake has
-    // already scanned most/all upstream partitions looking for bound+1
-    // rows — for an expensive-but-sparse pair pipeline (LSH banding +
-    // exact verify) that is a near-full pass. Persisting first turns
-    // every partition the probe touches into the fallback's
-    // materialization instead of thrown-away work (the distributed
-    // loop's `sym` union then reads the cache twice instead of
-    // recomputing the pipeline twice). In the small case the collected
-    // rows ARE the input and the entry is released as soon as the labels
-    // exist.
-    graft.Memo.scoped { sc =>
-      val pairs = sc(edges.select(col("a"), col("b")))
-      val rows = pairs.limit(bound.toInt + 1).collect()
-      if (rows.length <= bound) driverCc(edges.sparkSession, rows)
-      else connectedComponentsWithRounds(pairs)._1
-    }
+    if (!isLong) ccRounds(edges, () => ())._1
+    else GraphOps.driverOrLoop(edges.select(col("a"), col("b"))) { rows =>
+      driverCc(edges.sparkSession, rows.head)
+    } { (pairs, releaseInput) => ccRounds(pairs, releaseInput)._1 }
   }
 
   /** Single-machine union-find over a collected edge list: union by
@@ -313,43 +271,39 @@ object DedupOps {
     nodes.keys.toSeq.map(n => (n, find(n))).toDF("id", "comp")
   }
 
-  /** [[connectedComponents]] plus the number of propagation rounds it
-    * took — the hook the O(log n) convergence property-test needs.
+  /** The distributed form of [[connectedComponents]] plus the number of
+    * propagation rounds it took — the hook the O(log n) convergence
+    * property-test needs.
     *
-    * Each round ends in an EAGER checkpoint: an iterative dataflow must
-    * cut its lineage every round or the logical plan (which references
-    * the previous labels three times: neighbor-min, carry-through, jump
-    * lookup) grows geometrically and Catalyst analysis becomes the
-    * bottleneck long before the data does. The checkpoint doubles as
-    * the per-round materialization.
+    * Algorithm: min-label propagation with POINTER JUMPING. Every node
+    * starts labeled `least(id, min(neighbor ids))` — the node-list
+    * exchange doubles as round 1, since initial labels are ids; each
+    * round (1) every node takes the minimum of its own label and its
+    * neighbors' labels, then (2) jumps: replaces its label with its
+    * label's label (path doubling). Step 1 alone converges in diameter
+    * rounds — fine for dense near-dup clusters (2-3 rounds),
+    * pathological for chain graphs; the jump makes the label-distance
+    * covered grow geometrically, so worst-case rounds are O(log n) on
+    * any graph (`DedupVectorSpec` pins ≤⌈log₂ n⌉ on a 10k-node chain).
+    * Each round is two keyed shuffles (neighbor-min aggregate, jump
+    * join) — no collect; the driver only sees the changed COUNT per
+    * round.
     *
-    * @param checkpointDir when set, rounds cut lineage with a RELIABLE
-    *   `checkpoint` into this directory (any Hadoop scheme) — the
-    *   cluster-durable choice: a localCheckpoint's blocks die with
-    *   their executor, which on a real cluster can kill a long CC job
-    *   mid-flight. Sets the context's checkpoint dir if unset
-    *   (checkpoint location is SparkContext-global). Each superseded
-    *   round's checkpoint files are DELETED once the next round has
-    *   materialized — Spark only ever cleans checkpoints itself under
-    *   the non-default `spark.cleaner.referenceTracking.cleanCheckpoints`,
-    *   so without this a long job accretes O(rounds x |labels|) on the
-    *   cluster FS; only the returned round's checkpoint survives. When
-    *   None (the default, and the single-node bench posture), rounds use
-    *   eager `localCheckpoint` and superseded round blocks are
-    *   unpersisted deterministically (GC-driven ContextCleaner
-    *   unpersists landing mid-job measured as multi-second timing
-    *   noise).
+    * Each round ends in an EAGER `localCheckpoint`: an iterative
+    * dataflow must cut its lineage every round or the logical plan
+    * (which references the previous labels three times: neighbor-min,
+    * carry-through, jump lookup) grows geometrically and Catalyst
+    * analysis becomes the bottleneck long before the data does. The
+    * checkpoint doubles as the per-round materialization, and each
+    * superseded round's blocks are unpersisted deterministically.
     */
-  def connectedComponentsWithRounds(
-      edges: DataFrame,
-      checkpointDir: Option[String] = None): (DataFrame, Int) = graft.Memo.scoped { sc =>
-    checkpointDir.foreach { dir =>
-      val ctx = edges.sparkSession.sparkContext
-      if (ctx.getCheckpointDir.isEmpty) ctx.setCheckpointDir(dir)
-    }
-    def cut(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
+  def connectedComponentsWithRounds(edges: DataFrame): (DataFrame, Int) =
+    ccRounds(edges, () => ())
+
+  /** @param releaseInput releases the caller's cached copy of `edges`;
+    *   called once the loop's own `sym` relation has materialized */
+  private def ccRounds(edges: DataFrame,
+      releaseInput: () => Unit): (DataFrame, Int) = graft.Memo.scoped { sc =>
     val sym = sc(edges.select(col("a"), col("b"))
       .union(edges.select(col("b").as("a"), col("a").as("b"))))
     // Init folds round 1 in for free: the node list needs a keyed
@@ -359,21 +313,13 @@ object DedupOps {
     // whole join round. On clique-ish near-dup clusters (every member
     // adjacent to the cluster min) this alone IS the fixpoint, leaving
     // a single confirming loop round.
-    var labels = cut(sym.groupBy(col("a"))
+    var labels = sym.groupBy(col("a"))
       .agg(min(col("b")).as("__mn"))
-      .select(col("a").as("id"), least(col("a"), col("__mn")).as("comp")))
-    // Deterministic cleanup of SUPERSEDED rounds in both modes. Local:
-    // unpersist the blocks (GC-driven ContextCleaner unpersists land
-    // mid-job as multi-second bench noise). Reliable: delete the round's
-    // checkpoint files — Spark itself never does unless the non-default
-    // `spark.cleaner.referenceTracking.cleanCheckpoints` is on, so a long
-    // CC job would otherwise leave O(rounds x |labels|) on the cluster FS.
-    val hadoopConf = edges.sparkSession.sparkContext.hadoopConfiguration
-    def dropSuperseded(rdd: Option[org.apache.spark.rdd.RDD[_]]): Unit =
-      rdd.foreach { r =>
-        if (checkpointDir.isDefined) r.getCheckpointFile.foreach(Fs.delete(_, hadoopConf))
-        else r.unpersist(false)
-      }
+      .select(col("a").as("id"), least(col("a"), col("__mn")).as("comp"))
+      .localCheckpoint(true)
+    // that pass scanned every partition of `sym`, so it is fully cached
+    // and the input copy can go
+    releaseInput()
     var prevCp = checkpointRdd(labels)
     var changed = 1L
     var rounds = 0
@@ -391,26 +337,28 @@ object DedupOps {
       // time every round. The left join + coalesce is belt-and-braces
       // (every label IS a known node id).
       val lookup = labels.select(col("id").as("lid"), col("comp").as("lcomp"))
-      val next = cut(
-        stepped.join(lookup, stepped("comp1") === lookup("lid"), "left")
-          .select(stepped("id"), stepped("comp"),
-            coalesce(least(col("lcomp"), stepped("comp1")), stepped("comp1")).as("next_comp")))
+      val next = stepped.join(lookup, stepped("comp1") === lookup("lid"), "left")
+        .select(stepped("id"), stepped("comp"),
+          coalesce(least(col("lcomp"), stepped("comp1")), stepped("comp1")).as("next_comp"))
+        .localCheckpoint(true)
       changed = next.filter(col("next_comp") < col("comp")).count()
       rounds += 1
       labels = next.select(col("id"), col("next_comp").as("comp"))
-      dropSuperseded(prevCp)
+      // unpersist the superseded round now: GC-driven ContextCleaner
+      // unpersists landing mid-job measured as multi-second bench noise
+      prevCp.foreach(_.unpersist(false))
       prevCp = checkpointRdd(next)
     }
     (labels, rounds)
   }
 
-  /** The materialized RDD behind an eager `checkpoint`/`localCheckpoint` —
-    * resolved by matching the `LogicalRDD` the checkpointed Dataset
-    * analyzes to. This couples to a non-public plan shape on purpose:
+  /** The materialized RDD behind an eager `localCheckpoint` — resolved
+    * by matching the `LogicalRDD` the checkpointed Dataset analyzes to.
+    * This couples to a non-public plan shape on purpose:
     * `DedupVectorSpec` pins that the match still hits, so a Spark upgrade
     * that changes the shape fails CI loudly instead of silently reverting
     * the CC loop's round cleanup to GC-async (correctness-safe but
-    * bench-noisy locally, checkpoint-leaking on a cluster).
+    * bench-noisy).
     */
   private[graft] def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collectFirst {

@@ -71,6 +71,12 @@ object Fs {
     catch { case _: FileNotFoundException => Seq.empty }
   }
 
+  /** Whether `path` exists. */
+  def exists(path: String, conf: Configuration): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(conf).exists(p)
+  }
+
   /** Recursively delete `path`; false when it didn't exist. */
   def delete(path: String, conf: Configuration): Boolean = {
     val p = new Path(path)

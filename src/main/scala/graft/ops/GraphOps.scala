@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over edge-list DataFrames, built for the same posture
@@ -162,28 +162,17 @@ object GraphOps {
       .groupBy("node").agg(count(lit(1)).as("n_tri"))
   }
 
-  /** Bounded-hop BFS shortest paths from a seed set — frontier-synchronous
-    * traversal, the reachability/dissemination primitive beside
-    * [[pageRank]]'s importance and [[triangleCounts]]'s density.
+  /** Bounded-hop BFS shortest paths from a seed set — the
+    * reachability/dissemination primitive beside [[pageRank]]'s
+    * importance and [[triangleCounts]]'s density.
     *
-    * Per round the NEW frontier is exactly the unseen out-neighbors of the
-    * previous one: frontier ⋈ edges, distinct, anti-join against every
-    * prior layer. Layers are therefore DISJOINT by construction and each
-    * node's layer index IS its BFS distance — no min-aggregate over path
-    * enumerations, and nothing ever touches the (exponential) path space.
+    * Runs as [[sssp]] with every edge weighing 1 and `maxHops` rounds.
+    * With unit weights a node first reached in round r costs exactly r,
+    * and no later round can lower it, so sssp's improved-only frontier
+    * is BFS's disjoint layers and each node's cost IS its hop distance.
     * The oracle pays a recursive-CTE walk over (node, depth) pairs and
     * min-collapses; both land on the identical hop distances (exact
     * integers, hash-graded).
-    *
-    * Scale shape: `edges` is deduped, hash-partitioned on `src` ONCE and
-    * cached; every round is a frontier-sized probe of that one relation
-    * plus two node-keyed exchanges (distinct + anti), all bounded by the
-    * frontier's out-neighborhood — never edges × rounds. Each layer ends
-    * in an eager `localCheckpoint` (the [[DedupOps.connectedComponents]]
-    * lesson: an iterative dataflow must cut lineage per round or plan
-    * growth outpaces the data; here the anti-join side would otherwise
-    * re-derive every prior round). The loop exits early on an empty
-    * frontier, so `maxHops` is a bound, not a cost.
     *
     * @param edges (src: long, dst: long) directed edges; dupes tolerated
     * @param seeds (node: long) distance-0 nodes; dupes tolerated
@@ -191,129 +180,66 @@ object GraphOps {
     * @return (node: long, dist: long) — every node within `maxHops` of a
     *         seed, at its minimal hop count (seeds at 0)
     */
-  /** Size bound for the bfs/sssp driver fast paths (edges AND seeds,
-    * after dedup/aggregation). The frontier loops pay the same fixed
-    * per-round machinery the CC loop does (eager localCheckpoints, an
-    * isEmpty job per round, the cached-edge materialization — see
-    * [[DedupOps.connectedComponents]]'s round-21 decomposition: ~1.7 s
-    * for the loop alone on a trivial graph), so small graphs run the
-    * identical synchronous recurrence on the driver (the q68
-    * bounded-action posture). Past the bound the distributed loop runs
-    * unchanged. 0 disables. */
+  def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
+    require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
+    sssp(edges.select(col("src"), col("dst"), lit(1L).as("w")), seeds, maxHops)
+      .withColumnRenamed("cost", "dist")
+  }
+
+  /** Size bound for the graph layer's driver paths ([[sssp]], [[bfs]]
+    * through it, and [[DedupOps.connectedComponents]]), in rows of each
+    * probed input. The distributed loops pay fixed per-round machinery
+    * (eager localCheckpoints, a count or isEmpty job per round, the
+    * cached-edge materialization): ~1.7 s for the CC loop alone over 50
+    * literal edges (round-21 decomposition, OPTIMIZATION_r21.md). Small
+    * graphs therefore run the identical recurrence on the driver (the
+    * q68 bounded-action posture); 200k edges is a few MB collected. */
   private val DriverGraphMaxEdgesDefault = 200000L
   private[graft] val DriverGraphMaxEdgesKey = "spark.graft.graph.maxDriverEdges"
 
-  private def driverBound(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.getOption(DriverGraphMaxEdgesKey).map(_.toLong)
-      .getOrElse(DriverGraphMaxEdgesDefault)
-
-  /** `df.limit(bound+1).collect()` if that stays within `bound`, else
-    * None — in the small case the rows ARE the input (no second
-    * materialization); in the large case executeTake stops early. */
-  private def collectIfSmall(df: DataFrame, bound: Long)
-      : Option[Array[org.apache.spark.sql.Row]] = {
-    if (bound <= 0 || bound > Int.MaxValue - 1) return None
-    val rows = df.limit(bound.toInt + 1).collect()
-    if (rows.length <= bound) Some(rows) else None
-  }
-
-  def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val eDist = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct()
-    val bound = driverBound(edges.sparkSession)
-    if (bound <= 0 || bound > Int.MaxValue - 1)
-      return bfsDistributed(eDist, seeds, maxHops)
-    // Persist the deduped edge relation BEFORE the size probe (round-21
-    // verdict): an over-bound `limit(bound+1)` probe scans most upstream
-    // partitions; persisting first hands that scan to the distributed
-    // fallback instead of throwing it away. Small case: the collected
-    // rows are the input and the entry is released right after.
-    graft.Memo.scoped { sc =>
-      val cached = sc(eDist)
-      val small = for {
-        e <- collectIfSmall(cached, bound)
-        s <- collectIfSmall(seeds.select(col("node").cast("long").as("node"))
-          .distinct(), bound)
-      } yield (e, s)
-      small match {
-        case Some((e, s)) => driverBfs(edges.sparkSession, e, s, maxHops)
-        case None => bfsDistributed(cached, seeds, maxHops)
-      }
+  /** The graph layer's one driver-or-distributed decision. When `input`
+    * and each of `more` hold at most [[DriverGraphMaxEdgesKey]] rows,
+    * `small` gets their collected rows in that order: one
+    * `limit(bound+1).collect()` per relation, whose rows ARE the input.
+    * Otherwise `large` runs over `input`. A bound <= 0, or one too large
+    * for an `Int` limit, disables the driver path.
+    *
+    * `input` is persisted for the call BEFORE its probe (round-21
+    * verdict): an over-bound probe has already scanned most upstream
+    * partitions looking for bound+1 rows, and persisting first hands
+    * that scan to the distributed loop instead of throwing it away.
+    * `large`'s second argument releases that copy. The loop calls it
+    * once its own persisted relation has materialized, so the rest of
+    * the traversal holds one cached copy of the edges, not two. */
+  private[ops] def driverOrLoop[T](input: DataFrame, more: DataFrame*)(
+      small: Seq[Array[Row]] => T)(large: (DataFrame, () => Unit) => T): T = {
+    val bound = input.sparkSession.conf.getOption(DriverGraphMaxEdgesKey)
+      .map(_.toLong).getOrElse(DriverGraphMaxEdgesDefault)
+    if (bound <= 0 || bound > Int.MaxValue - 1) large(input, () => ())
+    else graft.Memo.scoped { sc =>
+      val cached = sc(input)
+      val rows = (cached +: more).iterator
+        .map(_.limit(bound.toInt + 1).collect())
+        .takeWhile(_.length <= bound).toSeq
+      if (rows.length == more.length + 1) small(rows)
+      else large(cached, () => sc.release(cached))
     }
-  }
-
-  /** Driver form of [[bfs]]: the identical layered traversal (layers
-    * disjoint, layer index = distance) over collected edges/seeds. */
-  private def driverBfs(sp: org.apache.spark.sql.SparkSession,
-      eRows: Array[org.apache.spark.sql.Row],
-      sRows: Array[org.apache.spark.sql.Row], maxHops: Int): DataFrame = {
-    val adj = scala.collection.mutable.LongMap
-      .empty[scala.collection.mutable.ArrayBuffer[Long]]
-    eRows.foreach { r =>
-      if (!r.isNullAt(0) && !r.isNullAt(1))
-        adj.getOrElseUpdate(r.getLong(0),
-          scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
-    }
-    val dist = scala.collection.mutable.LongMap.empty[Long]
-    var frontier = sRows.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSeq
-    frontier.foreach(n => dist(n) = 0L)
-    var h = 0
-    while (h < maxHops && frontier.nonEmpty) {
-      h += 1
-      val nxt = scala.collection.mutable.LongMap.empty[Boolean]
-      frontier.foreach { n =>
-        adj.get(n).foreach(_.foreach { d =>
-          if (!dist.contains(d)) nxt(d) = true
-        })
-      }
-      frontier = nxt.keys.toSeq
-      frontier.foreach(n => dist(n) = h.toLong)
-    }
-    import sp.implicits._
-    dist.toSeq.map { case (n, d) => (n, d) }.toDF("node", "dist")
-  }
-
-  /** @param eDist the already-normalized `(src, dst)` DISTINCT edge
-    *   relation ([[bfs]] builds it once so the probe and the fallback
-    *   share one materialization). */
-  private def bfsDistributed(eDist: DataFrame, seeds: DataFrame,
-      maxHops: Int): DataFrame = graft.Memo.scoped { sc =>
-    // every layer is an eager localCheckpoint, so the returned union
-    // never reads `e` and the entry is released before returning
-    val e = sc(eDist.repartition(col("src")))
-    var frontier = seeds.select(col("node").cast("long").as("node"))
-      .distinct().localCheckpoint(true)
-    val layers = scala.collection.mutable.ArrayBuffer((frontier, 0))
-    var reached = frontier
-    var h = 0
-    while (h < maxHops && !frontier.isEmpty) {
-      h += 1
-      val nxt = frontier.join(e, frontier("node") === e("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(reached, Seq("node"), "left_anti")
-        .localCheckpoint(true)
-      layers += ((nxt, h))
-      reached = reached.union(nxt)
-      frontier = nxt
-    }
-    layers.map { case (df, dist) => df.withColumn("dist", lit(dist.toLong)) }
-      .reduce(_ union _)
   }
 
   /** Bounded-round WEIGHTED shortest paths (Bellman-Ford with a
-    * changed-vertex frontier) — [[bfs]]'s cost-aware sibling: after R
-    * rounds every node holds the exact minimum cost over paths of <= R
-    * edges from the seed set. Non-negative INTEGER weights only, so the
-    * result is hash-exact against an oracle that unrolls the same
-    * synchronous recurrence (no float accumulation order to diverge).
+    * changed-vertex frontier): after R rounds every node holds the exact
+    * minimum cost over paths of <= R edges from the seed set.
+    * Non-negative INTEGER weights only, so the result is hash-exact
+    * against an oracle that unrolls the same synchronous recurrence (no
+    * float accumulation order to diverge).
     *
     * Only nodes whose cost IMPROVED last round relax their out-edges
     * (classical queue-based Bellman-Ford: an unimproved node re-relaxes
     * to exactly what it already contributed), so per-round work is
     * frontier x out-degree, not nodes x edges, and the loop exits early
-    * once no cost improves. Same per-round `localCheckpoint` lineage
-    * cuts and the same once-partitioned cached edge relation as [[bfs]].
+    * once no cost improves; `rounds` is a bound, not a cost. Small graphs
+    * run [[driverSssp]], larger ones [[ssspDistributed]]
+    * ([[driverOrLoop]] decides).
     *
     * @param edges (src, dst, w) directed weighted edges, w >= 0 integer;
     *              parallel edges tolerated (min is taken implicitly)
@@ -326,32 +252,17 @@ object GraphOps {
     val eAgg = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
       .groupBy("src", "dst").agg(min(col("w")).as("w"))
-    val bound = driverBound(edges.sparkSession)
-    if (bound <= 0 || bound > Int.MaxValue - 1)
-      return ssspDistributed(eAgg, seeds, rounds)
-    // Same probe-then-reuse posture as [[bfs]]: the min-aggregated edge
-    // relation is persisted before the size probe so an over-bound
-    // probe's scan feeds the distributed fallback.
-    graft.Memo.scoped { sc =>
-      val cached = sc(eAgg)
-      val small = for {
-        e <- collectIfSmall(cached, bound)
-        s <- collectIfSmall(seeds.select(col("node").cast("long").as("node"))
-          .distinct(), bound)
-      } yield (e, s)
-      small match {
-        case Some((e, s)) => driverSssp(edges.sparkSession, e, s, rounds)
-        case None => ssspDistributed(cached, seeds, rounds)
-      }
-    }
+    val sNodes = seeds.select(col("node").cast("long").as("node")).distinct()
+    driverOrLoop(eAgg, sNodes) { rows =>
+      driverSssp(edges.sparkSession, rows(0), rows(1), rounds)
+    } { (e, releaseInput) => ssspDistributed(e, sNodes, rounds, releaseInput) }
   }
 
   /** Driver form of [[sssp]]: the identical round-bounded synchronous
     * Bellman-Ford with an improved-only frontier over collected
     * min-aggregated edges — exact integer costs, same early exit. */
   private def driverSssp(sp: org.apache.spark.sql.SparkSession,
-      eRows: Array[org.apache.spark.sql.Row],
-      sRows: Array[org.apache.spark.sql.Row], rounds: Int): DataFrame = {
+      eRows: Array[Row], sRows: Array[Row], rounds: Int): DataFrame = {
     val adj = scala.collection.mutable.LongMap
       .empty[scala.collection.mutable.ArrayBuffer[(Long, Long)]]
     eRows.foreach { r =>
@@ -382,19 +293,21 @@ object GraphOps {
     best.toSeq.map { case (n, c) => (n, c) }.toDF("node", "cost")
   }
 
-  /** @param eAgg the already min-aggregated `(src, dst, w)` relation
-    *   ([[sssp]] builds it once so the probe and the fallback share one
-    *   materialization). */
-  private def ssspDistributed(eAgg: DataFrame, seeds: DataFrame,
-      rounds: Int): DataFrame = graft.Memo.scoped { sc =>
-    // Unlike pageRank (whose RETURNED plan still references the cached
-    // edge relation, so the caller owns the entry), the result is an
-    // eager localCheckpoint — nothing downstream reads `e`, so repeated
-    // sssp calls over different edge sets do not accumulate
-    // MEMORY_AND_DISK entries until an external clearCache.
+  /** Distributed form of [[sssp]]: `eAgg` is hash-partitioned on `src`
+    * ONCE and cached; every round is a frontier-sized probe of it plus
+    * node-keyed exchanges, and ends in eager `localCheckpoint`s (an
+    * iterative dataflow must cut lineage per round or plan growth
+    * outpaces the data). The result is such a checkpoint, so nothing
+    * downstream reads `e` and it is released before returning.
+    *
+    * @param eAgg the min-aggregated `(src, dst, w)` relation
+    * @param seeds distinct `(node)` sources
+    * @param releaseInput releases the caller's cached copy of `eAgg`
+    */
+  private def ssspDistributed(eAgg: DataFrame, seeds: DataFrame, rounds: Int,
+      releaseInput: () => Unit): DataFrame = graft.Memo.scoped { sc =>
     val e = sc(eAgg.repartition(col("src")))
-    var best = seeds.select(col("node").cast("long").as("node"))
-      .distinct().withColumn("cost", lit(0L)).localCheckpoint(true)
+    var best = seeds.withColumn("cost", lit(0L)).localCheckpoint(true)
     var frontier = best
     var r = 0
     while (r < rounds && !frontier.isEmpty) {
@@ -406,6 +319,9 @@ object GraphOps {
         .join(best.withColumnRenamed("cost", "old"), Seq("node"), "left")
         .filter(col("old").isNull || col("cost") < col("old"))
         .select("node", "cost").localCheckpoint(true)
+      // round 1 scanned every partition of `e`, so it is fully cached
+      // and the input copy can go (a no-op in later rounds)
+      releaseInput()
       best = best.join(improved.select(col("node").as("n2")),
           col("node") === col("n2"), "left_anti")
         .union(improved).localCheckpoint(true)

@@ -125,15 +125,15 @@ object IncrAttrTable {
 
   private def hconf(s: SparkSession) = s.sparkContext.hadoopConfiguration
 
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    path.getFileSystem(hconf(s)).exists(path)
-  }
-
-  private def delete(s: SparkSession, p: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    path.getFileSystem(hconf(s)).delete(path, true)
-  }
+  /** The leaf dirs under `dir` that hold committed rows: the folded
+    * `batch_id=-1` and every `batch_id=N` (N >= 0) with `committed(N)`. */
+  private def committedBatchDirs(s: SparkSession, dir: String)(
+      committed: Long => Boolean): Seq[org.apache.hadoop.fs.Path] =
+    Fs.list(dir, hconf(s)).map(_.getPath).filter { p =>
+      val n = p.getName
+      n == "batch_id=-1" || (n.startsWith("batch_id=") &&
+        n.stripPrefix("batch_id=").toLongOption.exists(id => id >= 0 && committed(id)))
+    }
 
   private def indexDir(root: String): String = s"$root/index"
 
@@ -141,7 +141,7 @@ object IncrAttrTable {
     * (DocStream's seed-once discipline: conf key
     * spark.graft.stream.indexBuckets, persisted in index/_buckets). */
   private def indexBuckets(s: SparkSession, idx: String): Int =
-    if (exists(s, s"$idx/_buckets")) IndexLayout.numBuckets(s, idx)
+    if (Fs.exists(s"$idx/_buckets", hconf(s))) IndexLayout.numBuckets(s, idx)
     else IndexLayout.initMeta(s, idx)
   private def metaDir(root: String): String = s"$root/_batchmeta"
 
@@ -252,18 +252,18 @@ object IncrAttrTable {
       .filterNot(committed.contains)
       .foreach { j =>
         ArtifactRels.foreach(rel =>
-          delete(s, s"${liveRelDir(s, root, rel)}/batch_id=$j"))
+          Fs.delete(s"${liveRelDir(s, root, rel)}/batch_id=$j", hconf(s)))
         val idx = indexDir(root)
-        if (exists(s, s"$idx/_buckets")) Seq("bands", "shingles").foreach { rel =>
+        if (Fs.exists(s"$idx/_buckets", hconf(s))) Seq("bands", "shingles").foreach { rel =>
           val g = IndexLayout.dataDir(s, idx, rel)
           Fs.list(g, hconf(s))
             .filter(_.getPath.getName.startsWith("bucket="))
             .foreach { b =>
-              delete(s, s"${b.getPath}/batch_id=$j")
+              Fs.delete(s"${b.getPath}/batch_id=$j", hconf(s))
               // a bucket whose ONLY slice was the dead batch must go too:
               // residentSlice treats a present bucket dir as readable data
               if (Fs.list(b.getPath.toString, hconf(s)).isEmpty)
-                delete(s, b.getPath.toString)
+                Fs.delete(b.getPath.toString, hconf(s))
             }
         }
       }
@@ -398,7 +398,7 @@ object IncrAttrTable {
     * session's memoized copy — a re-seed after a crash heal must not
     * keep serving the dead attempt's counts from cache. */
   private def seedLm(s: SparkSession, root: String, docs: DataFrame): Unit = {
-    delete(s, s"$root/lm")
+    Fs.delete(s"$root/lm", hconf(s))
     TextQs.lmGramCountsOf(docs).write.mode("overwrite").parquet(s"$root/lm")
     graft.Memo.invalidate(s, root, "incr_lm")
   }
@@ -503,12 +503,8 @@ object IncrAttrTable {
           val cum = cumulative(s, root)
           val cumMax = cum.map(_.maxBatch).getOrElse(Long.MinValue)
           val tagged = cum.exists(_.lmSeeded) ||
-            Fs.list(liveRelDir(s, root, "attrs"), hconf(s)).exists { st =>
-              val n = st.getPath.getName
-              n == "batch_id=-1" || (n.startsWith("batch_id=") &&
-                n.stripPrefix("batch_id=").toLongOption.exists(id =>
-                  id >= 0 && (meta.contains(id) || id <= cumMax)))
-            }
+            committedBatchDirs(s, liveRelDir(s, root, "attrs"))(id =>
+              meta.contains(id) || id <= cumMax).nonEmpty
           if (!tagged) seedLm(s, root, survivors)
           val attrs = attrRows(s, root, survivors, None, broadcastProbe)
           val keepSh = newSh.join(hinted(admitted), "doc_id")
@@ -591,12 +587,7 @@ object IncrAttrTable {
   private[graft] def labelsResolved(s: SparkSession, root: String,
       upTo: Long = Long.MaxValue): DataFrame = {
     val live = liveRelDir(s, root, "labels")
-    val dirs = Fs.list(live, hconf(s)).map(_.getPath).filter { p =>
-      val n = p.getName
-      n == "batch_id=-1" || (n.startsWith("batch_id=") &&
-        n.stripPrefix("batch_id=").toLongOption.exists(id =>
-          id >= 0 && id < upTo))
-    }
+    val dirs = committedBatchDirs(s, live)(_ < upTo)
     if (dirs.isEmpty)
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         LabelsSchema)
@@ -677,9 +668,10 @@ object IncrAttrTable {
     * shared DataFrame-parameterized builders, + the frozen-LM ppl +
     * is_dup (from the probe's dup ids; `None` = a pre-deduplicated doc
     * set, the admission loop's survivors, where is_dup is false by
-    * construction). The repetition gate reads the SAME fingerprint-width
-    * conf as q84/q136/AttrTable, so an incremental build under
-    * fingerprintBits=128 cannot diverge from the full build. */
+    * construction). The repetition gate takes its fingerprint width from
+    * [[TextQs.wideFingerprints]], as q84/q136 do, so an
+    * incremental build under fingerprintBits=128 cannot diverge from the
+    * full build. */
   private def attrRows(s: SparkSession, root: String, docs: DataFrame,
       dupIds: Option[DataFrame], broadcastProbe: Boolean): DataFrame = {
     // The frozen LM, gram-partitioned ONCE per (session, root) and
@@ -691,8 +683,7 @@ object IncrAttrTable {
     val lm = graft.Memo.cached(s, root, "incr_lm") {
       s.read.parquet(s"$root/lm").repartition(col("gram"))
     }
-    val wide = s.conf.getOption("spark.graft.repetition.fingerprintBits")
-      .contains("128")
+    val wide = TextQs.wideFingerprints(s)
     val base = docs.select(col("doc_id"), col("lang"), col("source"),
       col("n_chars"),
       size(TextOps.tokens(col("text"))).cast("int").as("n_tokens"),
@@ -799,12 +790,8 @@ object IncrAttrTable {
     val g = relGen(s, root, rel)
     val cur = s"$root/$rel/gen=$g"
     val cumMax = cumulativeMeta(s, root).map(_._1).getOrElse(Long.MinValue)
-    val committed = Fs.list(cur, hconf(s)).map(_.getPath).filter { p =>
-      val n = p.getName
-      n == "batch_id=-1" || (n.startsWith("batch_id=") &&
-        n.stripPrefix("batch_id=").toLongOption.exists(id =>
-          id >= 0 && (meta.contains(id) || id <= cumMax)))
-    }
+    val committed = committedBatchDirs(s, cur)(id =>
+      meta.contains(id) || id <= cumMax)
     // committed dirs always hold rows (appends never write an empty
     // slice), so gating the fold on dir presence keeps the invariant
     // "a batch_id=-1 dir exists iff committed rows exist" — which is
@@ -853,7 +840,7 @@ object IncrAttrTable {
     // did (see compactRel's gate), so "live attrs fold present || prior
     // flag" is exactly "some batch has ever survived to tagging"
     val seeded = cumulativeLmSeeded(s, root) ||
-      exists(s, s"${liveRelDir(s, root, "attrs")}/batch_id=-1")
+      Fs.exists(s"${liveRelDir(s, root, "attrs")}/batch_id=-1", hconf(s))
     Fs.writeAtomic(s"${metaDir(root)}/_cumulative",
       s"${meta.keys.max} ${meta.values.max} ${if (seeded) 1 else 0}"
         .getBytes("UTF-8"), hconf(s))
@@ -896,7 +883,7 @@ object IncrAttrTable {
   private def buildHalves(s: SparkSession, d: String, root: String)(
       append: DataFrame => Unit): String =
     built.computeIfAbsent((s, root), { _ =>
-      delete(s, root)
+      Fs.delete(root, hconf(s))
       val docs = graft.Tables.documents(s, d)
       val row = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val mid = (row.getAs[Number](0).longValue + row.getAs[Number](1).longValue) / 2

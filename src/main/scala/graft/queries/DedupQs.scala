@@ -141,13 +141,10 @@ object DedupQs {
     * comfortably inside a production executor's broadcast budget, far
     * outside any graded corpus). PlanSpec pins both sides of the
     * threshold. */
-  private val docBroadcastEst =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-
   private[graft] def docBroadcastOk(s: SparkSession, d: String): Boolean = {
-    val est = graft.Memo.memoFill(docBroadcastEst, (s, d)) {
+    val est = graft.Memo.estimate(s, d, "doc_broadcast_shingles") {
       val r = shingled(s, d).agg(sum(size(col("shingles")))).head()
-      Long.box(if (r.isNullAt(0)) 0L else r.getLong(0))
+      if (r.isNullAt(0)) 0L else r.getLong(0)
     }
     val bound = s.conf.getOption("spark.graft.dedup.broadcastMaxShingles")
       .map(_.toLong).getOrElse(50000000L)

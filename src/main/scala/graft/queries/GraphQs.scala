@@ -158,10 +158,10 @@ object GraphQs {
     * transition graph ([[GraphOps.bfs]], ≤ 4 hops) — the traversal
     * primitive the graph family lacked beside ranking (q63) and density
     * (q90): "how far does influence propagate from these sources"
-    * (contamination spread, recommendation reach). The engine runs a
-    * frontier-synchronous BFS whose disjoint layers make the layer index
-    * the distance; the oracle walks a recursive CTE over (node, depth)
-    * pairs and min-collapses. Identical integers — hash-graded.
+    * (contamination spread, recommendation reach). The engine runs it
+    * as unit-weight SSSP, whose improved-only frontier is BFS's disjoint
+    * layers; the oracle walks a recursive CTE over (node, depth) pairs
+    * and min-collapses. Identical integers — hash-graded.
     */
   val q95 = Q(
     "q95_bfs_hops",

@@ -155,9 +155,7 @@ object TextQs {
 
   val q84 = Q(
     "q84_cascade_repetition",
-    (s, d) => cascadeMaskOf(Tables.documents(s, d),
-      wide = s.conf.getOption("spark.graft.repetition.fingerprintBits")
-        .contains("128")),
+    (s, d) => cascadeMaskOf(Tables.documents(s, d), wide = wideFingerprints(s)),
     Some("""
       WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
       g2 AS (SELECT doc_id, g, count(*) AS c FROM (
@@ -452,11 +450,15 @@ object TextQs {
     * Documents with fewer than n tokens have no n-grams: their fractions
     * (and the gate) are NULL in both engines via the left join.
     */
-  private def repetitionFractions(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame =
-    repetitionFractionsOf(Tables.documents(s, d),
-      wide = s.conf.getOption("spark.graft.repetition.fingerprintBits")
-        .contains("128"))
+  private def repetitionFractions(s: SparkSession, d: String): DataFrame =
+    repetitionFractionsOf(Tables.documents(s, d), wide = wideFingerprints(s))
+
+  /** Whether `spark.graft.repetition.fingerprintBits` is `128`, i.e. the
+    * repetition signals group grams on [[TextOps.ngramHashes128]]. The
+    * one read of the key: q84, q136 and the incremental attribute build
+    * all take the width from here, so they cannot diverge. */
+  private[graft] def wideFingerprints(s: SparkSession): Boolean =
+    s.conf.getOption("spark.graft.repetition.fingerprintBits").contains("128")
 
   /** [[repetitionFractions]]'s DataFrame-parameterized core — per-doc
     * signals only, so a BATCH of documents scores identically whether
@@ -943,12 +945,9 @@ object TextQs {
     * executor's broadcast budget, far beyond any graded corpus). A
     * web-scale trigram vocabulary exceeds it and the score join
     * degrades to the shuffled form instead of OOMing an executor. */
-  private val lmVocabEst =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-
   private[graft] def lmVocabBroadcastOk(s: SparkSession, d: String): Boolean = {
-    val est = graft.Memo.memoFill(lmVocabEst, (s, d))(
-      Long.box(lmGramCounts(s, d).filter(col("gram_order") === 3).count()))
+    val est = graft.Memo.estimate(s, d, "lm_trigram_types")(
+      lmGramCounts(s, d).filter(col("gram_order") === 3).count())
     val bound = s.conf.getOption("spark.graft.lm.broadcastMaxGrams")
       .map(_.toLong).getOrElse(10000000L)
     est <= bound

@@ -45,12 +45,9 @@ object VectorQs {
     * packed — a few × that as a HashedRelation, inside a production
     * executor's broadcast budget, and 500 k × 64 = 32 M sits within it.
     * Past the bound the join degrades to the shuffled form. */
-  private val vecBroadcastEst =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-
   private[graft] def vecBroadcastOk(s: SparkSession, d: String): Boolean = {
-    val est = graft.Memo.memoFill(vecBroadcastEst, (s, d))(
-      Long.box(Tables.embeddings(s, d).count() * 64L))
+    val est = graft.Memo.estimate(s, d, "vec_broadcast_floats")(
+      Tables.embeddings(s, d).count() * 64L)
     val bound = s.conf.getOption("spark.graft.vec.broadcastMaxFloats")
       .map(_.toLong).getOrElse(64000000L)
     est <= bound
@@ -378,8 +375,6 @@ object VectorQs {
     * the cell-bounded path (q78/q42's machinery). */
   private[graft] val SrpMaxCandsKey = "spark.graft.srp.maxCandidates"
 
-  private val srpCandEst =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
   private val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
 
   /** q139's body with width and table count as parameters — the graded
@@ -416,11 +411,11 @@ object VectorQs {
     }
     val bound = s.conf.getOption(SrpMaxCandsKey).map(_.toLong)
       .getOrElse(100000000L)
-    val est: Long = graft.Memo.memoFill(srpCandEst, (s, d, tag)) {
+    val est = graft.Memo.estimate(s, d, tag + "_cand_mass") {
       val row = capped.groupBy("table_idx", "bits")
         .agg(count(lit(1)).as("c"))
         .agg(sum(expr("c * (c - 1) div 2"))).head()
-      Long.box(if (row.isNullAt(0)) 0L else row.getLong(0))
+      if (row.isNullAt(0)) 0L else row.getLong(0)
     }
     if (est > bound) {
       log.warn(s"SRP density router: estimated candidate mass $est exceeds " +

@@ -319,10 +319,10 @@ class DedupVectorSpec extends AnyFunSuite {
       val edges = spark.createDataFrame(es).toDF("a", "b")
       val fast = graft.ops.DedupOps.connectedComponents(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      spark.conf.set(graft.ops.DedupOps.DriverCcMaxEdgesKey, "0")
+      spark.conf.set(graft.ops.GraphOps.DriverGraphMaxEdgesKey, "0")
       val dist = try graft.ops.DedupOps.connectedComponents(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.unset(graft.ops.DedupOps.DriverCcMaxEdgesKey)
+      finally spark.conf.unset(graft.ops.GraphOps.DriverGraphMaxEdgesKey)
       assert(fast == dist, s"paths diverged on ${es.take(5)}...")
     }
   }
@@ -331,10 +331,10 @@ class DedupVectorSpec extends AnyFunSuite {
     // bound 10 < 39 chain edges → the distributed path must produce
     // the same labels (and the fast path's size probe must not lie)
     val edges = spark.range(1, 40).toDF("a").select(col("a"), (col("a") + 1).as("b"))
-    spark.conf.set(graft.ops.DedupOps.DriverCcMaxEdgesKey, "10")
+    spark.conf.set(graft.ops.GraphOps.DriverGraphMaxEdgesKey, "10")
     val got = try graft.ops.DedupOps.connectedComponents(edges)
       .filter(col("comp") =!= 1L).count()
-    finally spark.conf.unset(graft.ops.DedupOps.DriverCcMaxEdgesKey)
+    finally spark.conf.unset(graft.ops.GraphOps.DriverGraphMaxEdgesKey)
     assert(got == 0L)
   }
 
@@ -352,58 +352,20 @@ class DedupVectorSpec extends AnyFunSuite {
     val cnt = udf((x: Long) => { acc.add(1L); x })
     val edges = spark.range(1, 40).coalesce(1).toDF("x")
       .select(cnt(col("x")).as("a"), (col("x") + 1).as("b"))
-    spark.conf.set(graft.ops.DedupOps.DriverCcMaxEdgesKey, "10")
+    spark.conf.set(graft.ops.GraphOps.DriverGraphMaxEdgesKey, "10")
     val labels = try graft.ops.DedupOps.connectedComponents(edges).collect()
-    finally spark.conf.unset(graft.ops.DedupOps.DriverCcMaxEdgesKey)
+    finally spark.conf.unset(graft.ops.GraphOps.DriverGraphMaxEdgesKey)
     assert(labels.map(r => r.getLong(0) -> r.getLong(1)).forall(_._2 == 1L))
     assert(labels.length == 40)
     assert(acc.value == 39L,
       s"pair stream evaluated ${acc.value} row-times; expected exactly 39 (one materialization)")
   }
 
-  test("connected components: reliable checkpointDir variant writes rounds durably, same labels") {
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
-    val edges = spark.createDataFrame(Seq(
-      (1L, 2L), (2L, 3L), (10L, 11L))).toDF("a", "b")
-    val (labels, _) = graft.ops.DedupOps.connectedComponentsWithRounds(
-      edges, checkpointDir = Some(dir))
-    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    // the rounds really went through the reliable checkpoint path
-    assert(java.nio.file.Files.list(java.nio.file.Path.of(dir)).count() > 0)
-  }
-
-  test("reliable checkpoint mode deletes superseded round checkpoints") {
-    import scala.jdk.CollectionConverters._
-    // checkpoint location is SparkContext-global and may have been set by
-    // an earlier test — diff the rdd-* dirs under the ACTUAL location
-    def rddDirs(): Set[String] =
-      spark.sparkContext.getCheckpointDir.toSet[String].flatMap { d =>
-        val root = java.nio.file.Paths.get(new java.net.URI(d).getPath)
-        if (!java.nio.file.Files.exists(root)) Set.empty[String]
-        else java.nio.file.Files.walk(root).iterator().asScala
-          .filter(p => p.getFileName.toString.startsWith("rdd-"))
-          .map(_.toString).toSet
-      }
-    val before = rddDirs()
-    // a 64-node chain forces several pointer-jump rounds
-    val edges = spark.range(1, 64).toDF("a").select(col("a"), (col("a") + 1).as("b"))
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt-clean").toString
-    val (labels, rounds) = graft.ops.DedupOps.connectedComponentsWithRounds(
-      edges, checkpointDir = Some(dir))
-    assert(labels.filter(col("comp") =!= 1L).count() === 0)
-    assert(rounds >= 3, s"chain resolved in $rounds rounds — not exercising cleanup")
-    val added = rddDirs() -- before
-    // cut() ran rounds+1 times; every superseded round's files are gone
-    assert(added.size == 1,
-      s"expected only the final round's checkpoint to survive, found: $added")
-  }
-
   test("checkpoint cleanup still resolves a LogicalRDD (Spark-upgrade tripwire)") {
     // DedupOps.checkpointRdd pattern-matches execution.LogicalRDD out of
     // the analyzed plan — a non-public shape. If a Spark upgrade stops
     // this matching, round cleanup silently reverts to GC-async
-    // (bench-noisy locally, checkpoint-leaking on clusters): fail HERE.
+    // (bench-noisy): fail HERE.
     val local = spark.range(5).toDF("id").localCheckpoint(true)
     assert(graft.ops.DedupOps.checkpointRdd(local).isDefined,
       "localCheckpoint no longer analyzes to a LogicalRDD — update checkpointRdd")

@@ -284,6 +284,62 @@ class GraphOpsSpec extends AnyFunSuite {
     }
   }
 
+  /** Runs `body` and returns what it posted to the listener bus, in
+    * order: "job" at each job start, "unpersist <id>" at each RDD
+    * unpersist. Also returns the id of the first persisted RDD any of
+    * its jobs read, which for an over-bound graph op is the probe's
+    * cached copy of its input (the probe is the op's first job over a
+    * cached relation). */
+  private def busTrace(body: => Unit): (Seq[String], Int) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val trace = scala.collection.mutable.ArrayBuffer.empty[String]
+    var firstCached = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = trace.synchronized {
+        trace += "job"
+        val cached = e.stageInfos.flatMap(_.rddInfos)
+          .filter(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+        if (firstCached < 0 && cached.nonEmpty) firstCached = cached.map(_.id).min
+      }
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        trace.synchronized(trace += s"unpersist ${e.rddId}")
+    }
+    org.apache.spark.ListenerEvents.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.ListenerEvents.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    trace.synchronized((trace.toSeq, firstCached))
+  }
+
+  test("over-bound CC and sssp hold one cached edge copy: the probe's is released before the loop's last job") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    // chains, so both loops run several rounds past the release
+    val pairs = spark.range(1, 40).select(col("id").as("a"), (col("id") + 1).as("b"))
+    val edgesW = (0L until 12L).map(i => (i, i + 1, 1L)).toDF("src", "dst", "w")
+    val runs = Seq[(String, () => DataFrame)](
+      "cc" -> (() => graft.ops.DedupOps.connectedComponents(pairs)),
+      "sssp" -> (() => GraphOps.sssp(edgesW, Seq(0L).toDF("node"), 5)))
+    // both results are eager localCheckpoints; they are collected after
+    // the trace, so the op's own jobs are the last ones in it
+    val Seq(labels, cost) = runs.map { case (what, run) =>
+      var out: DataFrame = null
+      spark.conf.set(GraphOps.DriverGraphMaxEdgesKey, "3")
+      val (trace, probeCopy) = try busTrace(assertNoCacheLeft(what) { out = run() })
+      finally spark.conf.unset(GraphOps.DriverGraphMaxEdgesKey)
+      assert(probeCopy >= 0, s"$what: no job read a cached relation")
+      val released = trace.indexOf(s"unpersist $probeCopy")
+      val lastJob = trace.lastIndexOf("job")
+      assert(released >= 0 && released < lastJob,
+        s"$what: probe copy rdd $probeCopy released at event $released, " +
+          s"after the loop's last job (event $lastJob): ${trace.mkString(", ")}")
+      ranks(out)
+    }
+    assert(labels == (1L to 40L).map(_ -> 1L).toMap)
+    assert(cost == (0L to 5L).map(i => i -> i).toMap)
+  }
+
   test("CC and the doc/vector/media stream admissions leave no cached relation behind") {
     import spark.implicits._
     import graft.streaming.{DocStream, MediaStream, VecStream}
@@ -301,9 +357,9 @@ class GraphOpsSpec extends AnyFunSuite {
       "cc, driver path" -> (() =>
         graft.ops.DedupOps.connectedComponents(edges).collect()),
       "cc, probe then distributed loop" -> { () =>
-        spark.conf.set(graft.ops.DedupOps.DriverCcMaxEdgesKey, "2")
+        spark.conf.set(graft.ops.GraphOps.DriverGraphMaxEdgesKey, "2")
         try graft.ops.DedupOps.connectedComponents(edges).collect()
-        finally spark.conf.unset(graft.ops.DedupOps.DriverCcMaxEdgesKey)
+        finally spark.conf.unset(graft.ops.GraphOps.DriverGraphMaxEdgesKey)
       },
       "DocStream.admitBatch" -> { () =>
         val (indexDir, outDir) = dirs("cache-doc")

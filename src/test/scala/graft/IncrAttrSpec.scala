@@ -781,13 +781,13 @@ class IncrAttrSpec extends AnyFunSuite {
     // which must resolve the merge fixture to the driver path's answer
     // (the previous test)
     val root = freshRoot()
-    spark.conf.set(graft.ops.DedupOps.DriverCcMaxEdgesKey, "0")
+    spark.conf.set(graft.ops.GraphOps.DriverGraphMaxEdgesKey, "0")
     try Seq(
       Seq(labDoc(1L, "a1 a2 a3 a4 a5"), labDoc(2L, "a1 a2 a3 a4 ax")),
       Seq(labDoc(10L, "b1 b2 b3 b4 b5"), labDoc(11L, "b1 b2 b3 b4 by")),
       Seq(labDoc(20L, "a1 b3 b4 b5"))
     ).foreach(b => IncrAttrTable.appendBatch(spark, root, df(b)))
-    finally spark.conf.unset(graft.ops.DedupOps.DriverCcMaxEdgesKey)
+    finally spark.conf.unset(graft.ops.GraphOps.DriverGraphMaxEdgesKey)
     val resolved = IncrAttrTable.labelsResolved(spark, root)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(resolved == Map(1L -> 1L, 2L -> 1L, 10L -> 1L, 11L -> 1L, 20L -> 1L),
