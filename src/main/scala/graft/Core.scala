@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** One engine query: a Spark plan builder plus (optionally) the ANSI-SQL
   * oracle the driver runs in DuckDB over the same parquet tables.
@@ -20,8 +20,54 @@ case class Q(
   * reader is the single place that would change.
   */
 object Tables {
-  def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A fresh relation over `dir/name.parquet` on every call (fresh
+    * expression ids, so self-joins keep working), with the parquet schema
+    * inferred once per file version: inference runs a footer-reading Spark
+    * job on every `spark.read.parquet`, and the hot queries read the same
+    * tables many times per run (q66 reads `embeddings` five times). The
+    * memo is keyed on session, path, length and modification time, so a
+    * file rewritten at the same path is inferred again. */
+  def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    stamp(spark, path) match {
+      // absent: let the plain read raise Spark's own error
+      case None => spark.read.parquet(path)
+      case Some((len, mtime)) =>
+        val k = (spark, path, len, mtime)
+        var schema = schemas.get(k)
+        if (schema == null) {
+          schema = spark.read.parquet(path).schema
+          val prev = schemas.putIfAbsent(k, schema)
+          if (prev != null) schema = prev
+        }
+        spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long, Long), StructType]()
+
+  /** (length, modification time) of a file; for a directory dataset, the
+    * summed length and latest modification time of every file under it. */
+  private def stamp(spark: SparkSession, path: String): Option[(Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val st = fs.getFileStatus(p)
+      if (!st.isDirectory) Some((st.getLen, st.getModificationTime))
+      else {
+        val it = fs.listFiles(p, true)
+        var len = 0L
+        var mtime = st.getModificationTime
+        while (it.hasNext) {
+          val f = it.next()
+          len += f.getLen
+          mtime = math.max(mtime, f.getModificationTime)
+        }
+        Some((len, mtime))
+      }
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   /** Session settings every entry point (Verify/Bench/tests) must share.
     * `nanosAsLong`: earlier corpus generations wrote `events.ts` as parquet
@@ -89,6 +135,13 @@ object Tables {
       // conf: `CodeGenerator` reads it once, at its first use in the JVM,
       // so only the builder can set it.
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // Generated classes are named after their whole-stage codegen id,
+      // which numbers a stage by its position in the plan being compiled,
+      // so the same operator code planned at another position (an AQE
+      // re-plan, a plan over a memoized relation) is new source text and
+      // misses the cache above. Without the id in the name, one code
+      // shape compiles once per JVM.
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Entries in Spark's JVM-wide generated-code cache. Spark's default of
     * 100 is far below a session's working set, and the cache evicts LRU,

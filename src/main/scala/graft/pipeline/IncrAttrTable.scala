@@ -484,7 +484,7 @@ object IncrAttrTable {
         val admitted = IndexLayout.commitVerdicts(docs.select("doc_id"),
           gated ++ Seq("dup_corpus" -> DocStream.dupIdsOf(pairsResident),
             "dup_batch" -> DocStream.dupIdsOf(pairsBatch)),
-          liveRelDir(s, root, "admissions"), eff, broadcastFlags = broadcastProbe)
+          liveRelDir(s, root, "admissions"), eff)
         if (admitted.isEmpty) {
           // everything dropped: the admissions verdicts + manifest ARE
           // the batch's committed state (no attrs dir, no index slices,
@@ -566,7 +566,8 @@ object IncrAttrTable {
     // of each re-running the probe-and-verify chain
     val pairs = sc(pairsResident.unionByName(pairsBatch).distinct())
 
-    val attrs = attrRows(s, root, docs, Some(DocStream.dupIdsOf(pairs)), broadcastProbe)
+    val attrs = attrRows(s, root, docs, Some(DocStream.dupIdsOf(pairs).distinct()),
+      broadcastProbe)
     (attrs, newSh, newBands, pairs)
   }
 

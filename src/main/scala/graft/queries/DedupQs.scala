@@ -1059,13 +1059,16 @@ object DedupQs {
     * attribute artifact ([[graft.pipeline.AttrTable]]) can freeze the
     * SAME graded definition as columns (q149 then runs the split as a
     * narrow projection over the artifact — the q138 lesson applied to
-    * assembly). Components run on the PAIR-sized verified relation;
-    * singletons label themselves via left join + coalesce. */
+    * assembly). Components run on the PAIR-sized verified relation and
+    * depend only on the session and the corpus, so they are memoized
+    * (the iterative probe-and-label build runs once per session, not per
+    * call); singletons label themselves via left join + coalesce. */
   private[graft] def clusterLabels(s: SparkSession, d: String): DataFrame = {
-    val pairs = minhashNearDupPairs(s, d)
-      .select(col("doc_a").as("a"), col("doc_b").as("b"))
-    val comps = DedupOps.connectedComponents(pairs)
-      .select(col("id").as("doc_id"), col("comp"))
+    val comps = graft.Memo.cached(s, d, "minhash_components") {
+      DedupOps.connectedComponents(minhashNearDupPairs(s, d)
+          .select(col("doc_a").as("a"), col("doc_b").as("b")))
+        .select(col("id").as("doc_id"), col("comp"))
+    }
     val lab = Tables.documents(s, d).select("doc_id")
       .join(comps, Seq("doc_id"), "left")
       .select(col("doc_id"),

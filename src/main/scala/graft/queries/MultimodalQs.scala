@@ -1032,7 +1032,9 @@ object MultimodalQs {
         media.filter(col("media_id") <= mid), indexDir, outDir, 0L)
       graft.streaming.MediaStream.admitBatch(
         media.filter(col("media_id") > mid), indexDir, outDir, 1L)
-      s.read.parquet(s"$outDir/admissions")
+      // the verdict row shape is fixed: declaring it skips inference
+      s.read.schema("media_id BIGINT, status STRING")
+        .parquet(s"$outDir/admissions")
         .select("media_id", "status")
         .orderBy("media_id")
     },

@@ -638,11 +638,14 @@ object VectorQs {
       // expected pool keeps the ADC stage a real 2× prune while covering
       // the tie classes; both counts are driver-side scalars over
       // Memo-persisted relations (assigned) / the tiny centroid set, the
-      // q68 bounded-action posture. At the graded (sf0.01: 150-row pool)
-      // and benched (sf0.1: 150-row pool) scales the floor of 100 is the
-      // binding term, so this changes nothing there by construction.
-      val nCorpus = assigned.count()
-      val kCents = math.max(cents.count(), 1L)
+      // q68 bounded-action posture, and depend only on the session and
+      // the corpus, so they are counted once per session. At the graded
+      // (sf0.01: 150-row pool) and benched (sf0.1: 150-row pool) scales
+      // the floor of 100 is the binding term, so this changes nothing
+      // there by construction.
+      val nCorpus = graft.Memo.estimate(s, d, "pq_cells_rows")(assigned.count())
+      val kCents = math.max(
+        graft.Memo.estimate(s, d, "ivf_trained_cents_rows")(cents.count()), 1L)
       val shortlistK = math.max(100L, (nProbes.toLong * nCorpus) / (2L * kCents)).toInt
       val wShort = Window.partitionBy("qid").orderBy(
         (col("adc") / sqrt(col("recon"))).desc, col("id"))

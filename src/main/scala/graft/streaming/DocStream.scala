@@ -289,8 +289,10 @@ object DocStream {
     (verify(candsResident, residentSh), verify(candsBatch, sh))
   }
 
-  /** The distinct dup doc ids of a verified pair relation — the doc_b
-    * side (keep-first: the higher-id member of a pair is the dup). */
+  /** The dup doc ids of a verified pair relation — the doc_b side
+    * (keep-first: the higher-id member of a pair is the dup). An id
+    * repeats once per partner: [[IndexLayout.commitVerdicts]] takes
+    * repeats as they come, a join must dedup them first. */
   private[graft] def dupIdsOf(pairs: DataFrame): DataFrame =
-    pairs.select(col("doc_b").as("doc_id")).distinct()
+    pairs.select(col("doc_b").as("doc_id"))
 }

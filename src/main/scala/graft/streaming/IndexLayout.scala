@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Fs
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -172,9 +172,12 @@ private[graft] object IndexLayout {
     * regardless of bucket count, readers scan pruned buckets PLUS the
     * bounded tail ([[residentSlice]] includes it automatically), and
     * [[compact]] folds tail rows into real buckets — exactly a table
-    * format's small-file clustering job. Use this for shard-sized
-    * batches; the bucketed [[writeSlice]] form still wins for trickle
-    * batches that touch few buckets (DocStream's 1-doc admissions). */
+    * format's small-file clustering job. The tail's users: the
+    * incremental attribute table's bands and shingles
+    * ([[graft.pipeline.IncrAttrTable]], both its tagging append and the
+    * fused ingest) and [[MediaStream]]'s fingerprints. The bucketed
+    * [[writeSlice]] form still serves [[DocStream]] and [[VecStream]]
+    * batches. */
   def appendTailSlice(rows: DataFrame, indexDir: String, rel: String,
       batchId: Long): Unit = {
     val spark = rows.sparkSession
@@ -228,41 +231,58 @@ private[graft] object IndexLayout {
 
   /** The bounded probe read every admission transaction makes: which
     * `rel` buckets can the batch's `probes` rows possibly hit (the
-    * canonical [[bucketExpr]], `key` overriding its key column), as ONE
-    * driver-side collect of ≤ nb distinct ints — then [[residentSlice]]
+    * canonical [[bucketExpr]], `key` overriding its key column), as
+    * [[probeBuckets]]'s one driver-side collect — then [[residentSlice]]
     * of exactly those buckets. The collect is the price of turning the
     * resident read from O(index) into O(the batch's buckets); persist
     * `probes` first, or the collect recomputes it. */
   def probeSlice(probes: DataFrame, indexDir: String, rel: String, nb: Int,
-      batchId: Long, schema: StructType, key: Column = null): DataFrame = {
-    val buckets = probes.select(bucketExpr(rel, nb, key).cast("int"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    residentSlice(probes.sparkSession, indexDir, rel, batchId, buckets, schema)
-  }
+      batchId: Long, schema: StructType, key: Column = null): DataFrame =
+    residentSlice(probes.sparkSession, indexDir, rel, batchId,
+      probeBuckets(probes, rel, nb, key), schema)
+
+  /** The distinct `rel` buckets of `probes`' rows, in ONE job: each
+    * partition reduces to its own bucket set (≤ nb ints) and the driver
+    * merges them — a `distinct()` would add a shuffle stage for a set the
+    * driver receives whole anyway. */
+  private[graft] def probeBuckets(probes: DataFrame, rel: String, nb: Int,
+      key: Column = null): Seq[Int] =
+    probes.select(bucketExpr(rel, nb, key).cast("int")).as(Encoders.scalaInt)
+      .mapPartitions(_.toSet.iterator)(Encoders.scalaInt)
+      .collect().distinct.toSeq
 
   /** The verdict commit every admission transaction ends in. `ids` is
     * the batch's single id column; `flags` is the status precedence, a
-    * list of (status, distinct ids) relations, the first match winning
-    * and an unflagged id reading `new`. The (id, status) rows are a
-    * plain LEAF-DIRECTORY overwrite of `dir/batch_id=N` (the on-disk
-    * layout a dynamic partitioned write on batch_id makes, without its
-    * listing of the whole tree), so a replayed batchId replaces exactly
-    * its own verdicts. Returns the committed `new` ids RE-READ from disk: that
-    * breaks the plan lineage to the index (Spark refuses to overwrite a
-    * path its plan reads) and makes every later write of the transaction
-    * a pure function of on-disk state. `broadcastFlags` hints the flag
-    * joins for shard-sized batches. */
+    * list of (status, ids) relations, the first match winning and an
+    * unflagged id reading `new`. Flags may repeat an id, within one
+    * relation or across several: they are unioned as (id, rank) with the
+    * batch ids at rank `flags.size`, and ONE aggregate keeps each batch
+    * id's lowest rank (a flagged id that is not in the batch is dropped),
+    * so the commit costs one exchange however many flags it grades —
+    * a `distinct()` and a left join per flag cost one each. Every batch
+    * id gets exactly one verdict row.
+    *
+    * The (id, status) rows are a plain LEAF-DIRECTORY overwrite of
+    * `dir/batch_id=N` (the on-disk layout a dynamic partitioned write on
+    * batch_id makes, without its listing of the whole tree), so a
+    * replayed batchId replaces exactly its own verdicts. Returns the
+    * committed `new` ids RE-READ from disk: that breaks the plan lineage
+    * to the index (Spark refuses to overwrite a path its plan reads) and
+    * makes every later write of the transaction a pure function of
+    * on-disk state. */
   def commitVerdicts(ids: DataFrame, flags: Seq[(String, DataFrame)],
-      dir: String, batchId: Long, broadcastFlags: Boolean = false): DataFrame = {
+      dir: String, batchId: Long): DataFrame = {
     val id = ids.columns.head
-    val marked = flags.zipWithIndex.foldLeft(ids.select(id)) {
-      case (acc, ((_, f), i)) =>
-        val m = f.select(col(id), lit(true).as(s"__v$i"))
-        acc.join(if (broadcastFlags) broadcast(m) else m, Seq(id), "left")
-    }
-    val status = coalesce(flags.zipWithIndex.map { case ((st, _), i) =>
-      when(col(s"__v$i"), st) } :+ lit("new"): _*)
-    val verdicts = marked.select(col(id), status.as("status"))
+    val batchRank = flags.size
+    val ranked = (flags.map(_._2).zipWithIndex :+ (ids -> batchRank)).map {
+      case (f, i) => f.select(col(id), lit(i).as("rank"))
+    }.reduce(_ union _)
+    // the batch ids hold the highest rank, so max(rank) marks membership
+    val verdicts = ranked.groupBy(id)
+      .agg(min("rank").as("rank"), max("rank").as("top"))
+      .filter(col("top") === batchRank)
+      .select(col(id), element_at(typedLit(flags.map(_._1) :+ "new"),
+        col("rank") + 1).as("status"))
     val leaf = s"$dir/batch_id=$batchId"
     verdicts.write.mode("overwrite").parquet(leaf)
     // the written row shape is known: declaring it skips footer inference

@@ -36,7 +36,11 @@ import org.apache.spark.sql.types.StructType
   * index rows are the canonical 4×16-bit bands of each admitted
   * fingerprint ([[MultimodalOps.phashBands]] — the SAME banding as
   * q152's candidate join, so index and probe can never drift), 32
-  * bytes/row, bucketed on `xxhash64(band_idx, band_bits)`. A batch
+  * bytes/row, bucketed on `xxhash64(band_idx, band_bits)`. The seed is
+  * written bucketed; each batch APPENDS its admitted rows to the tail
+  * ([[IndexLayout.appendTailSlice]] — one leaf-dir write, no
+  * partitioned-write listing), which every probe reads and
+  * [[compactIndex]] folds into real buckets. A batch
   * reads ONLY the bucket dirs its own band probes land in (bounded
   * driver-side scalar, ≤ min(4·batch, nb) ints) — per-trigger I/O
   * tracks the batch's probe buckets, not the index's total size. With
@@ -130,14 +134,15 @@ object MediaStream {
       Seq("band_idx", "band_bits"), MaxBucket)
 
     def near = bit_count(col("a_ph").bitwiseXOR(col("b_ph"))) <= MaxHamming
-    val b = batchBands.select(col("band_idx"), col("band_bits"),
-      col("media_id").as("b_id"), col("phash").as("b_ph"))
+    // the batch side is batch-sized: both banded joins probe it map-side
+    val b = broadcast(batchBands.select(col("band_idx"), col("band_bits"),
+      col("media_id").as("b_id"), col("phash").as("b_ph")))
 
     val dupCorpus = idx
       .select(col("band_idx"), col("band_bits"), col("phash").as("a_ph"))
       .join(b, Seq("band_idx", "band_bits"))
       .filter(near)
-      .select(col("b_id").as("media_id")).distinct()
+      .select(col("b_id").as("media_id"))
     // keep-first within the batch: a LOWER-id near neighbor marks
     // this one, the neighbor's own verdict notwithstanding
     val dupBatch = batchBands
@@ -145,15 +150,12 @@ object MediaStream {
         col("media_id").as("a_id"), col("phash").as("a_ph"))
       .join(b, Seq("band_idx", "band_bits"))
       .filter(col("a_id") < col("b_id") && near)
-      .select(col("b_id").as("media_id")).distinct()
+      .select(col("b_id").as("media_id"))
 
     val admitted = IndexLayout.commitVerdicts(media.select("media_id"),
       Seq("dup_corpus" -> dupCorpus, "dup_batch" -> dupBatch),
       s"$outDir/admissions", batchId)
-    IndexLayout.writeSlice(
-      batchBands.join(admitted, "media_id")
-        .withColumn("bucket", bucket(nb))
-        .withColumn("batch_id", lit(batchId)),
-      indexDir, "fingerprints", dynamic = true)
+    IndexLayout.appendTailSlice(batchBands.join(admitted, "media_id"),
+      indexDir, "fingerprints", batchId)
   }
 }

@@ -160,12 +160,12 @@ object VecStream {
 
     val dupCorpus = sideA(idx).join(b, "cell")
       .filter(close)
-      .select(col("b_id").as("vec_id")).distinct()
+      .select(col("b_id").as("vec_id"))
     // q78's keep-first: a LOWER-id batch neighbor marks this one, the
     // neighbor's own verdict notwithstanding (DocStream's precedence)
     val dupBatch = sideA(assigned).join(b, "cell")
       .filter(col("a_id") < col("b_id") && close)
-      .select(col("b_id").as("vec_id")).distinct()
+      .select(col("b_id").as("vec_id"))
 
     val admitted = IndexLayout.commitVerdicts(vecs.select("vec_id"),
       Seq("dup_corpus" -> dupCorpus, "dup_batch" -> dupBatch),

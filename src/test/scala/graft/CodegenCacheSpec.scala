@@ -41,6 +41,28 @@ class CodegenCacheSpec extends AnyFunSuite {
   test("the session carries the codegen cache cap") {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
       Tables.CodegenCacheEntries.toString)
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
+  }
+
+  test("re-runs of a multi-stage AQE query compile no classes") {
+    import org.apache.spark.sql.functions._
+    // a shuffled join, an aggregate and a sort: several AQE query stages
+    def run(): Long = {
+      val c0 = compiles()
+      val l = spark.range(0, 20000, 1, 4)
+        .select((col("id") % 97).as("k"), col("id").as("v"))
+      val r = spark.range(0, 3000, 1, 3)
+        .select((col("id") % 89).as("k"), (col("id") * 3).as("w"))
+      l.hint("merge").join(r, "k")
+        .groupBy("k").agg(sum("v").as("sv"), max("w").as("mw"))
+        .orderBy(col("sv").desc)
+        .write.format("noop").mode("overwrite").save()
+      compiles() - c0
+    }
+    run()
+    val later = Seq.fill(3)(run())
+    assert(later == Seq(0L, 0L, 0L),
+      s"runs 2-4 compiled ${later.mkString(", ")} classes")
   }
 
   test("a second pass over a working set past Spark's default cap recompiles almost nothing") {

@@ -5,4 +5,17 @@ package org.apache.spark
   * been delivered. */
 object ListenerEvents {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** The number of Spark jobs started while `body` runs. */
+  def jobsDuring(sc: SparkContext)(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new scheduler.SparkListener {
+      override def onJobStart(e: scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    drain(sc)
+    sc.addSparkListener(listener)
+    try { body; drain(sc) } finally sc.removeSparkListener(listener)
+    n.get
+  }
 }
