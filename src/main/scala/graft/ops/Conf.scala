@@ -23,22 +23,6 @@ import scala.jdk.CollectionConverters._
   */
 object Conf {
 
-  /** Production default for SimHash banding width
-    * (`spark.graft.simhash.bandBits` on the ungraded
-    * [[graft.queries.DedupQs.simhashNearDupes]] path): 16-bit bands —
-    * 4 levels of 65 536 hash values each — divide random bucket
-    * occupancy ~256× vs the 8-bit form, collapsing the ~quadratic
-    * collision mass the band join materializes at production corpus
-    * scales (measured: the 10× tier drops 7.16 s → 1.72 s). The price
-    * is the deterministic-recall radius shrinking from Hamming ≤ 7 to
-    * ≤ 3 (~9% of verified J ≥ 0.8 pairs on this corpus live only in
-    * the 8-bit-reachable Hamming 4..15 band — SURVEY §2.0.2's
-    * found-pair-delta table). The GRADED q37 intentionally stays at
-    * 8 bits: its job is exact cross-validation against q36's MinHash
-    * answer, and q36 is the production dedup path.
-    */
-  val SimhashProductionBandBits = 16
-
   /** Parse `.env` content: `KEY=VALUE` lines, `#` comments and blanks
     * skipped, optional `export ` prefix, optional single/double quotes
     * around the value (the python-dotenv subset the reference relies on).

@@ -297,7 +297,7 @@ object DedupOps {
     * checkpoint doubles as the per-round materialization, and each
     * superseded round's blocks are unpersisted deterministically.
     */
-  def connectedComponentsWithRounds(edges: DataFrame): (DataFrame, Int) =
+  private[graft] def connectedComponentsWithRounds(edges: DataFrame): (DataFrame, Int) =
     ccRounds(edges, () => ())
 
   /** @param releaseInput releases the caller's cached copy of `edges`;

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.time.LocalDate
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 

@@ -775,22 +775,4 @@ object MultimodalOps {
     }
     h
   }
-
-  /** Frame/chunk sampling: every `stride`-th fixed-size slice of the
-    * payload (the shape of video frame-sampling), as exploded rows —
-    * a generator op, still fully distributed.
-    */
-  def sampleChunks(media: Dataset[MediaRow], chunkSize: Int, stride: Int): DataFrame = {
-    import media.sparkSession.implicits._
-    media.flatMap { r =>
-      r.bytes.grouped(chunkSize).zipWithIndex
-        .filter { case (_, i) => i % stride == 0 }
-        .map { case (chunk, i) => (r.media_id, i, chunk.length, java.util.Arrays.hashCode(chunk)) }
-    }.toDF("media_id", "chunk_idx", "chunk_len", "chunk_hash")
-  }
-
-  /** Attach a decoded-feature column set to a metadata DataFrame by key
-    * (the join-back step after extraction). */
-  def joinFeatures(meta: DataFrame, feats: Dataset[MediaFeatures]): DataFrame =
-    meta.join(feats.toDF(), Seq("media_id"), "left")
 }

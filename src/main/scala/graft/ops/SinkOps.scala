@@ -47,49 +47,4 @@ object SinkOps {
       .mode("overwrite")
       .parquet(out)
   }
-
-  /** Z-ORDER clustering for TWO pruning columns (the lakehouse
-    * `OPTIMIZE ZORDER BY` shape, in stock Spark): single-column range
-    * clustering gives one column tight per-file ranges and leaves the
-    * other spanning the whole domain in every file — a filter on the
-    * second column prunes nothing. Interleaving the bits of both
-    * columns' normalized positions puts each file on a small RECTANGLE
-    * of the (a, b) plane, so min/max statistics prune on EITHER column.
-    *
-    * Mechanics: each column maps to a 16-bit grid cell by the same
-    * integer scaling [[QuantileOps]] buckets with
-    * (`((v - lo) * 65536) div (hi - lo + 1)` — floor-exact, no IEEE
-    * boundary drift), the two cell ids bit-interleave into one 32-bit
-    * z-value (a codegen'd expression tree of shifts and ORs, no UDF),
-    * and the write is [[rangedSortedParquet]] on the z-value. Cost: the
-    * same two min/max scans + one range exchange as the single-column
-    * sink. Values must be integral; map decimals exactly first.
-    */
-  def zOrderedParquet(df: DataFrame, colA: String, colB: String, out: String,
-      parts: Int, maxRecordsPerFile: Long): Unit = {
-    require(parts >= 1 && maxRecordsPerFile >= 1)
-    val stats = df.agg(
-      min(col(colA)), max(col(colA)), min(col(colB)), max(col(colB))).head()
-    require(!stats.isNullAt(0) && !stats.isNullAt(2), "empty pruning column")
-    def cell(c: String, lo: Long, hi: Long) = {
-      val width = hi - lo + 1
-      require(width > 0, s"$c range overflows Long — shift values first")
-      expr(s"(($c - $lo) * 65536) div $width")
-    }
-    val ca = cell(colA, stats.getLong(0), stats.getLong(1))
-    val cb = cell(colB, stats.getLong(2), stats.getLong(3))
-    // interleave: bit i of a -> bit 2i+1, bit i of b -> bit 2i
-    val z = (0 until 16).map { i =>
-      shiftleft(shiftright(ca, i).bitwiseAND(lit(1L)), 2 * i + 1)
-        .bitwiseOR(shiftleft(shiftright(cb, i).bitwiseAND(lit(1L)), 2 * i))
-    }.reduce(_ bitwiseOR _)
-    val tagged = df.withColumn("__z", z)
-    tagged.repartitionByRange(parts, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .mode("overwrite")
-      .parquet(out)
-  }
 }

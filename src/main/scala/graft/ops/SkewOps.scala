@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew and co-location tools for the 100-TB posture (SURVEY.md §4).
@@ -49,13 +49,4 @@ object SkewOps {
         joinType)
       .drop("__salt")
   }
-
-  /** Top-N heavy-hitter keys of `df` by count — the diagnosis step that
-    * decides whether salting is worth it. One shuffle.
-    */
-  def heavyHitters(df: DataFrame, key: Column, topN: Int): DataFrame =
-    df.groupBy(key.as("key"))
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("key"))
-      .limit(topN)
 }

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Text-analysis operators for a large-scale training-data pipeline:
   * tokenization, n-gram shingling, quality metrics, language-ID scoring,

@@ -154,23 +154,16 @@ object IncrAttrTable {
     * superseded merge rows die with the generation they folded from). */
   private val ArtifactRels = Seq("attrs", "admissions", "labels")
 
-  /** Live generation of an artifact relation (`attrs` / `admissions`) —
-    * the same atomic-pointer convention as [[IndexLayout.gen]], one
-    * `_gen` file per relation (absent = 0, the pre-first-compaction
-    * state every fresh artifact starts in). The pointer is per-relation
-    * rather than shared because the relations are independent: a crash
-    * between two rels' swaps leaves each serving one complete
-    * generation. */
-  private def relGen(s: SparkSession, root: String, rel: String): Long =
-    Fs.readBytes(s"$root/$rel/_gen", hconf(s))
-      .map(b => new String(b, "UTF-8").trim.toLong).getOrElse(0L)
-
   /** Root of `rel`'s live generation — every read and every per-batch
     * write resolves through this (never the bare `root/rel` tree, which
     * may briefly hold a half-written next generation or a
-    * not-yet-GC'd previous one). */
+    * not-yet-GC'd previous one). Each relation keeps its own `_gen`
+    * pointer under [[IndexLayout.gen]]'s convention (absent = 0, the
+    * pre-first-compaction state every fresh artifact starts in): the
+    * relations are independent, so a crash between two rels' swaps
+    * leaves each serving one complete generation. */
   private[graft] def liveRelDir(s: SparkSession, root: String, rel: String): String =
-    s"$root/$rel/gen=${relGen(s, root, rel)}"
+    s"$root/$rel/gen=${IndexLayout.gen(s, s"$root/$rel")}"
 
   private val LabelsSchema =
     org.apache.spark.sql.types.StructType.fromDDL(
@@ -201,8 +194,8 @@ object IncrAttrTable {
           .map(b => id -> new String(b, "UTF-8").trim.toLong)
       }
     }.toMap
-    cumulativeMeta(s, root).fold(tail) { case (mb, mx) =>
-      tail + (mb -> math.max(mx, tail.getOrElse(mb, Long.MinValue)))
+    cumulative(s, root).fold(tail) { c =>
+      tail + (c.maxBatch -> math.max(c.maxDoc, tail.getOrElse(c.maxBatch, Long.MinValue)))
     }
   }
 
@@ -216,9 +209,6 @@ object IncrAttrTable {
       val parts = new String(b, "UTF-8").trim.split("\\s+")
       Cumulative(parts(0).toLong, parts(1).toLong, parts.lift(2).contains("1"))
     }
-
-  private def cumulativeMeta(s: SparkSession, root: String): Option[(Long, Long)] =
-    cumulative(s, root).map(c => (c.maxBatch, c.maxDoc))
 
   /** Whether the folded manifest records the frozen LM as seeded. The
     * flag exists because compaction destroys the evidence the live
@@ -370,7 +360,7 @@ object IncrAttrTable {
     // folded artifact would have those batches skipped here — hence
     // WARN, not info: the message is the loud trace such a
     // contract-violating restart leaves.
-    if (cumulativeMeta(s, root).exists { case (mb, _) => eff <= mb }) {
+    if (cumulative(s, root).exists(eff <= _.maxBatch)) {
       log.warn(s"batch $eff re-delivered at or below the compaction-folded " +
         "boundary — treating as a committed replay and skipping (no-op). " +
         "If this batch is NEW data under a re-numbered stream, the " +
@@ -788,9 +778,10 @@ object IncrAttrTable {
     * [[compactIndex]]. */
   private def compactRel(s: SparkSession, root: String, rel: String,
       meta: Map[Long, Long]): Unit = {
-    val g = relGen(s, root, rel)
-    val cur = s"$root/$rel/gen=$g"
-    val cumMax = cumulativeMeta(s, root).map(_._1).getOrElse(Long.MinValue)
+    val relDir = s"$root/$rel"
+    val g = IndexLayout.gen(s, relDir)
+    val cur = s"$relDir/gen=$g"
+    val cumMax = cumulative(s, root).fold(Long.MinValue)(_.maxBatch)
     val committed = committedBatchDirs(s, cur)(id =>
       meta.contains(id) || id <= cumMax)
     // committed dirs always hold rows (appends never write an empty
@@ -812,16 +803,11 @@ object IncrAttrTable {
       // scans a 32-task stage of pure reader-init overhead)
       SinkOps.rangedSortedParquet(
         folded, "doc_id",
-        s"$root/$rel/gen=${g + 1}/batch_id=-1",
+        s"$relDir/gen=${g + 1}/batch_id=-1",
         maxRecordsPerFile = 5000000L)
-      Fs.writeAtomic(s"$root/$rel/_gen",
+      Fs.writeAtomic(s"$relDir/_gen",
         (g + 1).toString.getBytes("UTF-8"), hconf(s))
-      Fs.list(s"$root/$rel", hconf(s))
-        .filter { st =>
-          val n = st.getPath.getName
-          n.startsWith("gen=") && n.stripPrefix("gen=").toLongOption.exists(_ <= g)
-        }
-        .foreach(st => Fs.delete(st.getPath.toString, hconf(s)))
+      IndexLayout.dropGenerations(s, relDir, "gen=", g)
     }
   }
 

@@ -236,6 +236,10 @@ object DedupQs {
     * through. Re-derive per scale tier before trusting a tighter cut. */
   private val SimHamMax = 16
 
+  /** q37's band width: 8 levels of 8 bits over the 64-bit signature,
+    * whose pigeonhole recall (Hamming ≤ 7) q37's oracle grades. */
+  private[graft] val SimBandBits = 8
+
   /** SimHash near-dup detection: 64-bit sign-hash of the token stream,
     * 8x8-bit banding (deterministic recall for Hamming <= 7), Hamming
     * post-filter at [[SimHamMax]], exact verify. Same oracle as q36 —
@@ -255,45 +259,7 @@ object DedupQs {
     * only ever reachable through a lucky band collision, and every
     * banding-reachable pair up to [[SimHamMax]] still verifies.
     */
-  /** q37's body with the band width as a parameter — the graded query
-    * runs the default 8 (Hamming ≤ 7 recall deterministic by
-    * pigeonhole); at production corpus scales the documented knob is
-    * WIDER bands (e.g. 16 → 4 levels of 65 536 hash values each), which
-    * divides random bucket occupancy by ~256 and with it the quadratic
-    * collision mass the band join materializes, at the price of the
-    * deterministic-recall radius shrinking to Hamming ≤ 3 (pairs further
-    * out remain reachable only by collision luck — measured on this
-    * corpus: 16-bit bands find 231 of the 255 verified pairs, the ~9%
-    * living at Hamming 4..15; SURVEY §2.0.2 records the counts per width
-    * so the trade is data, not assertion). Setting the session knob
-    * therefore CHANGES the graded answer — q37's oracle pins the 8-bit
-    * default, and a non-default width intentionally trades oracle-exact
-    * recall for candidate mass, the same opt-in posture as
-    * `spark.graft.ivf.probes` on q42/q66. Memo tags carry the width so
-    * variant runs never share cached relations with the graded path.
-    */
-  /** The PRODUCTION SimHash near-dup path: [[simhashQuery]] at the
-    * scale-safe banding width — `spark.graft.simhash.bandBits`
-    * defaulting to [[graft.ops.Conf.SimhashProductionBandBits]] (16).
-    * Ungraded on purpose: 16-bit bands deterministically reach only
-    * Hamming ≤ 3, so the answer is a documented ~9%-recall-reduced
-    * subset of the graded 8-bit q37 answer (the found-pair-delta table
-    * in SURVEY §2.0.2) in exchange for ~256× lower random bucket
-    * occupancy — the posture that survives production corpus density.
-    * `ConfSpec` pins the default resolution; q37 stays the 8-bit
-    * cross-validation grade.
-    */
-  def simhashNearDupes(s: SparkSession, d: String): DataFrame =
-    simhashQuery(s, d, bitsPerBand = productionBandBits(s))
-
-  /** `simhashNearDupes`'s width resolution: session knob, production
-    * default 16 (vs the graded q37's pinned default of 8). */
-  private[graft] def productionBandBits(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.simhash.bandBits")
-      .map(_.toInt).getOrElse(graft.ops.Conf.SimhashProductionBandBits)
-
-  private def simhashQuery(s: SparkSession, d: String,
-      bitsPerBand: Int): DataFrame = {
+  private def simhashQuery(s: SparkSession, d: String): DataFrame = {
     // capped form memoized directly (same rationale as
     // cappedBandsCached: the cap subplan re-derives per consumed side).
     // Cache width+key PINNED to hashpartitioning(doc_id, conf width)
@@ -313,13 +279,13 @@ object DedupQs {
     // instead costs a 20 MB pair exchange whose coalesced read
     // re-serializes the verify (measured: q37 2.0 s vs 1.25 here).
     // Width from conf, not a literal: resource-derived at any scale.
-    val capped = graft.Memo.cached(s, d, s"simhash_bands_capped_b$bitsPerBand") {
+    val capped = graft.Memo.cached(s, d, s"simhash_bands_capped_b$SimBandBits") {
       DedupOps.capBuckets(
-        graft.Memo.cached(s, d, s"simhash_bands_b$bitsPerBand") {
+        graft.Memo.cached(s, d, s"simhash_bands_b$SimBandBits") {
           DedupOps.simhashBands(
             Tables.documents(s, d)
               .select(col("doc_id"), TextOps.tokens(col("text")).as("tokens")),
-            "doc_id", bitsPerBand)
+            "doc_id", SimBandBits)
         }, Seq("band_idx", "band_hash"), MaxBucket)
         .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
     }
@@ -335,9 +301,7 @@ object DedupQs {
 
   val q37 = Q(
     "q37_simhash",
-    (s, d) => simhashQuery(s, d,
-      bitsPerBand = s.conf.getOption("spark.graft.simhash.bandBits")
-        .map(_.toInt).getOrElse(8)),
+    simhashQuery,
     Some(jaccardOracleSql(0.8)),
     // headline since round 9 (annex row in BASELINE.md)
     headline = true)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Det, Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

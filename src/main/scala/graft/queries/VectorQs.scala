@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Det, Q, Tables}
 import graft.ops.VectorOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -993,8 +993,7 @@ object VectorQs {
     * q115 decimal path grades the same assumption); a generator change
     * that introduces NaN/Inf shows up as an oracle hash mismatch here,
     * and the fix is an upstream `isnan`/`nanvl` guard, not a histogram
-    * change. Same contract for the streaming twin
-    * ([[graft.streaming.VecStream.streamingFeatureHistogram]]).
+    * change.
     *
     * Shape at scale: one posexplode scan into a (dim, bucket)-keyed
     * map-side-combined aggregate (≤ 64·32 keys); the share window runs

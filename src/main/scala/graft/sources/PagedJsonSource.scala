@@ -493,7 +493,7 @@ final class PagedReader(part: PagePartition, transport: PageTransport,
           PagedReader.rateLimitWaits.put(part.path, wait)
           PageTransport.sleep(wait)
           attempt += 1
-        case e: Exception if attempt < maxRetries =>
+        case _: Exception if attempt < maxRetries =>
           PageTransport.sleep(backoffBaseMs * (1L << attempt))
           attempt += 1
         case e: Exception =>

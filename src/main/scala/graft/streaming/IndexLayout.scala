@@ -383,21 +383,21 @@ private[graft] object IndexLayout {
     Fs.writeAtomic(s"$indexDir/_gen", (g + 1).toString.getBytes("UTF-8"),
       hconf(spark))
     // old generations are unreachable after the swap — best-effort GC
-    rels.foreach { rel =>
-      Fs.list(s"$indexDir/$rel", hconf(spark))
-        .filter { st =>
-          val n = st.getPath.getName
-          n.startsWith("gen=") && n.stripPrefix("gen=").toLong <= g
-        }
-        .foreach(st => Fs.delete(st.getPath.toString, hconf(spark)))
-    }
-    Fs.list(indexDir, hconf(spark))
+    rels.foreach(rel => dropGenerations(spark, s"$indexDir/$rel", "gen=", g))
+    dropGenerations(spark, indexDir, "_nb.g", g)
+  }
+
+  /** Delete every `<prefix>N` entry of `dir` with N ≤ `g`: the
+    * generations a `_gen` pointer swap to G+1 left unreachable. Entries
+    * whose suffix is not a number are left alone. */
+  def dropGenerations(spark: SparkSession, dir: String,
+      prefix: String, g: Long): Unit =
+    Fs.list(dir, hconf(spark))
       .filter { st =>
         val n = st.getPath.getName
-        n.startsWith("_nb.g") && n.stripPrefix("_nb.g").toLongOption.exists(_ <= g)
+        n.startsWith(prefix) && n.stripPrefix(prefix).toLongOption.exists(_ <= g)
       }
       .foreach(st => Fs.delete(st.getPath.toString, hconf(spark)))
-  }
 
   /** The operational trigger for [[compact]]: fold only when some bucket
     * of some rel has accrued more than `maxDirsPerBucket` batch

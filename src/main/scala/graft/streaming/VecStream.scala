@@ -176,33 +176,4 @@ object VecStream {
         .withColumn("batch_id", lit(batchId)),
       indexDir, "vectors", dynamic = true)
   }
-
-  /** Streaming per-dimension feature histograms — q118's twin as a
-    * plain built-in streaming aggregation (no custom state): posexplode
-    * each micro-batch, bucket on the same IEEE-determined fixed grid,
-    * `groupBy(dim, bucket).count` in Complete mode. Spark's stateful
-    * aggregation makes the running counts equal the batch aggregation
-    * over everything ingested so far under ANY trigger split — the
-    * strongest batch-equivalence class (commutative counts, no ordering
-    * assumptions at all), spec-pinned against q118's bucketing over the
-    * unioned files. The monitoring view a vector-ingest pipeline keeps
-    * live (drift shows up as bucket-mass movement between refreshes).
-    *
-    * PRECONDITION: features must be FINITE (q118's contract — see its
-    * docstring): a NaN lands in bucket 0 via Spark's non-ANSI cast and
-    * ±Inf clamps into the edge buckets, silently skewing the histogram
-    * rather than failing. Guard the ingest with `isnan`/`nanvl` if the
-    * producer can emit non-finite floats.
-    */
-  def streamingFeatureHistogram(spark: SparkSession, streamDir: String,
-      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(StreamSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(streamDir)
-      .select(posexplode(col("embedding")).as(Seq("dim", "f")))
-      .withColumn("bucket",
-        expr("greatest(0L, least(31L, CAST(floor((CAST(f AS DOUBLE) + 1.0D) * 16.0D) AS BIGINT)))"))
-      .groupBy("dim", "bucket")
-      .agg(count(lit(1)).as("n"))
 }

@@ -113,29 +113,4 @@ class ConfSpec extends AnyFunSuite {
     graft.ops.Logging.setupFromConf(Conf.Layered(Map.empty, Map.empty, Map.empty))
     assert(org.apache.logging.log4j.LogManager.getRootLogger.getLevel == before)
   }
-
-  test("simhash production band width: default 16, knob-overridable, q37 pinned at 8") {
-    val s = SparkSessions.spark
-    val knob = "spark.graft.simhash.bandBits"
-    s.conf.unset(knob)
-    try {
-      // the ungraded production path (simhashNearDupes) resolves to the
-      // scale-safe 16-bit width with no session knob set...
-      assert(Conf.SimhashProductionBandBits == 16)
-      assert(graft.queries.DedupQs.productionBandBits(s) == 16)
-      // ...and honors an explicit session override
-      s.conf.set(knob, "32")
-      assert(graft.queries.DedupQs.productionBandBits(s) == 32)
-      // the graded q37 meanwhile builds 8-bit bands by default: 8 band
-      // levels (band_idx 0..7) over the 64-bit signature, vs 4 for the
-      // production width — pinned structurally on a tiny corpus
-      s.conf.unset(knob)
-      import s.implicits._
-      val toks = Seq((1L, Seq("a", "b", "c"))).toDF("doc_id", "tokens")
-      def levels(bits: Int): Long =
-        graft.ops.DedupOps.simhashBands(toks, "doc_id", bits)
-          .select("band_idx").distinct().count()
-      assert(levels(8) == 8 && levels(Conf.SimhashProductionBandBits) == 4)
-    } finally s.conf.unset(knob)
-  }
 }

@@ -56,6 +56,14 @@ class DedupVectorSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  test("q37 bands its 64-bit SimHash signature at 8 bits: 8 band levels") {
+    import spark.implicits._
+    val toks = Seq((1L, Seq("a", "b", "c"))).toDF("doc_id", "tokens")
+    val levels = graft.ops.DedupOps.simhashBands(toks, "doc_id", DedupQs.SimBandBits)
+      .select("band_idx").distinct().count()
+    assert(DedupQs.SimBandBits == 8 && levels == 8)
+  }
+
   test("SRP-LSH near-dup candidates are a subset of brute-force pairs, recall measured") {
     val e = Tables.embeddings(spark, sf)
     val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("e_a"))

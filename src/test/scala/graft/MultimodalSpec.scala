@@ -217,24 +217,6 @@ class MultimodalSpec extends AnyFunSuite {
       "BM-magic audio payload was mis-sniffed as a decoded image")
   }
 
-  test("chunk sampling explodes every stride-th fixed-size slice") {
-    val chunks = MultimodalOps.sampleChunks(media(), chunkSize = 512, stride = 2)
-    val byId = chunks.collect().groupBy(_.getLong(0))
-    // 4096 bytes -> 8 chunks -> every 2nd -> 4
-    assert(byId(3L).length == 4)
-    // 256 bytes -> 1 chunk -> 1
-    assert(byId(1L).length == 1)
-    assert(byId(3L).forall(_.getInt(2) == 512))
-  }
-
-  test("join-back attaches features by key") {
-    import spark.implicits._
-    val meta = Seq((1L, "a"), (2L, "b"), (99L, "missing")).toDF("media_id", "tag")
-    val joined = MultimodalOps.joinFeatures(meta, MultimodalOps.extractFeatures(media()))
-    assert(joined.count() == 3)
-    assert(joined.filter($"media_id" === 99L).select("n_bytes").head().isNullAt(0))
-  }
-
   test("q132 cross-modal pairing: full top-3 per medium, valid cosines, deterministic") {
     def run() = graft.queries.MultimodalQs.q132.fn(spark, "unused")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq

@@ -75,13 +75,6 @@ class SkewBucketSpec extends AnyFunSuite {
     }
   }
 
-  test("heavy hitters finds the hot keys") {
-    val hh = SkewOps.heavyHitters(
-      Tables.lineitem(spark, sf), col("l_returnflag"), topN = 3).collect()
-    assert(hh.length == 3)
-    assert(hh.map(_.getLong(1)).toSeq == hh.map(_.getLong(1)).toSeq.sorted.reverse)
-  }
-
   test("bucketed tables join without a shuffle exchange") {
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lineitem")

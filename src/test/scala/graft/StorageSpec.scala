@@ -69,42 +69,6 @@ class StorageSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).count() == li.count())
   }
 
-  test("z-order sink: per-file rectangles prune BOTH columns; single-column sort cannot") {
-    val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
-    def fileRangeFractions(out: String): (Double, Double) = {
-      val g = li.agg(min("l_orderkey"), max("l_orderkey"),
-        min("l_partkey"), max("l_partkey")).head()
-      val (okW, pkW) = ((g.getLong(1) - g.getLong(0)).toDouble.max(1),
-        (g.getLong(3) - g.getLong(2)).toDouble.max(1))
-      val files = new java.io.File(out).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.toString)
-      assert(files.length >= 6, s"expected several files, got ${files.length}")
-      val fr = files.map { f =>
-        val r = spark.read.parquet(f).agg(
-          min("l_orderkey"), max("l_orderkey"), min("l_partkey"), max("l_partkey")).head()
-        ((r.getLong(1) - r.getLong(0)) / okW, (r.getLong(3) - r.getLong(2)) / pkW)
-      }
-      (fr.map(_._1).sum / fr.length, fr.map(_._2).sum / fr.length)
-    }
-    val zOut = java.nio.file.Files.createTempDirectory("zorder").toString
-    SinkOps.zOrderedParquet(li, "l_orderkey", "l_partkey", zOut,
-      parts = 16, maxRecordsPerFile = 1000000L)
-    val (zOk, zPk) = fileRangeFractions(zOut)
-    val sOut = java.nio.file.Files.createTempDirectory("singlesort").toString
-    SinkOps.rangedSortedParquet(li, "l_orderkey", sOut,
-      maxRecordsPerFile = 1000000L, parts = Some(16))
-    val (sOk, sPk) = fileRangeFractions(sOut)
-    info(f"z-order file-range fractions: orderkey $zOk%.2f partkey $zPk%.2f; " +
-      f"single-sort: orderkey $sOk%.2f partkey $sPk%.2f")
-    // single-column clustering: tight on its key, useless on the other
-    assert(sOk < 0.30, s"single-column sort should cluster its own key tightly: $sOk")
-    assert(sPk > 0.80, s"fixture surprise: partkey clustered without z-order: $sPk")
-    // z-order: BOTH columns land on sub-domain rectangles
-    assert(zOk < 0.75 && zPk < 0.75, s"z-order rectangles too wide: $zOk / $zPk")
-    assert(zPk < sPk / 2, "z-order did not improve the second column's pruning")
-    assert(spark.read.parquet(zOut).count() == li.count())
-  }
-
   test("orc round-trip is lossless and filters push into the ORC scan") {
     val out = java.nio.file.Files.createTempDirectory("orc-sink").toString
     val src = Tables.orders(spark, sf)

@@ -125,37 +125,4 @@ class VecStreamSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$indexDir/vectors")
       .select("id").collect().map(_.getLong(0)).toSet == Set(0L, 9002L))
   }
-
-  test("streaming feature histogram equals the batch bucketing under a 2-file split") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("vec-hist")
-    // values chosen to hit interior buckets, both clamp edges, and a
-    // bucket boundary (-0.5 -> exactly bucket 8)
-    val f0 = Seq((1L, Seq(0.1f, -0.5f)), (2L, Seq(0.99f, -3.0f)))
-    val f1 = Seq((3L, Seq(0.1f, 5.0f)), (4L, Seq(-0.5f, 0.0f)))
-    Seq(0 -> f0, 1 -> f1).foreach { case (i, rs) =>
-      rs.toDF("vec_id", "embedding").coalesce(1).write.parquet(s"$dir/f$i")
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/f$i"))
-        .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.move(part, java.nio.file.Paths.get(s"$dir/b$i.parquet"))
-    }
-    val q = graft.streaming.VecStream.streamingFeatureHistogram(spark, dir.toString)
-      .writeStream.format("memory").queryName("stream_hist")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark.table("stream_hist").collect()
-      .map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))).toMap
-    val batch = (f0 ++ f1).toDF("vec_id", "embedding")
-      .select(posexplode(col("embedding")).as(Seq("dim", "f")))
-      .withColumn("bucket",
-        expr("greatest(0L, least(31L, CAST(floor((CAST(f AS DOUBLE) + 1.0D) * 16.0D) AS BIGINT)))"))
-      .groupBy("dim", "bucket").agg(count(lit(1)).as("n"))
-      .collect().map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))).toMap
-    assert(streamed == batch, s"stream $streamed != batch $batch")
-    assert(streamed((1, 0L)) == 1L && streamed((1, 31L)) == 1L,
-      "clamp edges not in the edge buckets")
-  }
 }

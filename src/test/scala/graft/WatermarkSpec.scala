@@ -2,9 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.EventStream
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Watermark late-data semantics, driven batch-by-batch: an event that
@@ -21,6 +21,15 @@ class WatermarkSpec extends AnyFunSuite {
 
   private val Base = 1704103200000000000L // 2024-01-01 10:00:00 UTC, nanos
 
+  /** The events table shape with `ts` as epoch-nanos BIGINT. */
+  private val EventsSchema = StructType(Seq(
+    StructField("event_id", LongType),
+    StructField("ts", LongType),
+    StructField("user_id", LongType),
+    StructField("event_type", StringType),
+    StructField("value", DoubleType),
+    StructField("props", StringType)))
+
   private def nanos(minutesFromBase: Long): Long =
     Base + minutesFromBase * 60L * 1000000000L
 
@@ -28,7 +37,7 @@ class WatermarkSpec extends AnyFunSuite {
     spark.createDataFrame(
       spark.sparkContext.parallelize(
         rows.map { case (id, ts) => Row(id, ts, 1L, "view", 1.0, """{"k": 1}""") }, 1),
-      EventStream.EventsSchema)
+      EventsSchema)
 
   test("append-mode tumbling window drops events later than the watermark") {
     val src = Files.createTempDirectory("wm-src")
@@ -39,7 +48,7 @@ class WatermarkSpec extends AnyFunSuite {
       // each arriving batch is its own SUBDIRECTORY — the file source
       // does not recurse, so the path must glob into them
       val q = spark.readStream
-        .schema(EventStream.EventsSchema)
+        .schema(EventsSchema)
         .parquet(src.toString + "/*")
         .withColumn("event_ts", expr("timestamp_micros(ts div 1000)"))
         .withWatermark("event_ts", "30 minutes")
