@@ -33,15 +33,8 @@ object Logging {
         .withConfiguration(config)
         .withPattern("%d{yyyy-MM-dd HH:mm:ss} %-8p %m%n")
         .build()
-      // log4j2's recursive-generic builder defeats scalac inference; the
-      // builder mutates in place, so call setters statement-style
-      val b: FileAppender.Builder[_] =
-        FileAppender.newBuilder().asInstanceOf[FileAppender.Builder[_]]
-      b.setName("graft-log-file")
-      b.withFileName(f)
-      b.setLayout(layout)
-      b.setConfiguration(config)
-      val appender = b.build()
+      val appender = new FileBuilder().setName("graft-log-file")
+        .withFileName(f).setLayout(layout).setConfiguration(config).build()
       appender.start()
       config.addAppender(appender)
       config.getRootLogger.addAppender(appender, lvl, null)
@@ -49,6 +42,11 @@ object Logging {
     }
     Configurator.setRootLevel(lvl)
   }
+
+  /** log4j2's file-appender builder with its recursive type parameter
+    * bound: `FileAppender.newBuilder()` leaves it to inference, which
+    * scalac resolves to Nothing. */
+  private final class FileBuilder extends FileAppender.Builder[FileBuilder]
 
   /** Apply `--log-level` / `--log-file` from the layered config iff the
     * user set either (movie.py:314-315 wires the same two argparse flags

@@ -757,11 +757,12 @@ object MultimodalOps {
     * threshold the pigeonhole guarantee is EXACT recall. */
   private[graft] def phashBands(hashes: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    hashes.select(hashes.columns.map(col) :+
+    val cols = hashes.columns.toSeq.map(col)
+    hashes.select(cols :+
       explode(array((0 until 4).map(i => struct(lit(i).as("band_idx"),
         shiftrightunsigned(col("phash"), 16 * i)
           .bitwiseAND(lit(65535L)).as("band_bits"))): _*)).as("__b"): _*)
-      .select(hashes.columns.map(col) :+ col("__b.band_idx") :+ col("__b.band_bits"): _*)
+      .select(cols :+ col("__b.band_idx") :+ col("__b.band_bits"): _*)
   }
 
   /** FNV-1a 64 over raw bytes (q130's fingerprint convention). */

@@ -23,24 +23,18 @@ object SinkOps {
     * Result: per-file key ranges are disjoint and ordered, the shape
     * min/max row-group pruning wants.
     *
-    * `parts = None` (the default posture) leaves the partition count to
-    * AQE: `repartitionByRange` without an explicit count is
-    * coalescible, so the FILE count derives from DATA SIZE (advisory
-    * partition size) — a KB-scale fold lands as one file instead of
-    * `spark.sql.shuffle.partitions` near-empty ones (whose per-file
-    * reader init then taxes every downstream scan), while a 100-TB
-    * write keeps full width. AQE merges only ADJACENT range partitions,
-    * so per-file ranges stay disjoint and ordered either way. A pinned
-    * `Some(n)`, `n >= 1`, keeps the exact-width behavior.
+    * The partition count is left to AQE: `repartitionByRange` without an
+    * explicit count is coalescible, so the FILE count derives from DATA
+    * SIZE (advisory partition size) — a KB-scale fold lands as one file
+    * instead of `spark.sql.shuffle.partitions` near-empty ones (whose
+    * per-file reader init then taxes every downstream scan), while a
+    * 100-TB write keeps full width. AQE merges only ADJACENT range
+    * partitions, so per-file ranges stay disjoint and ordered.
     */
   def rangedSortedParquet(df: DataFrame, sortCol: String, out: String,
-      maxRecordsPerFile: Long, parts: Option[Int] = None): Unit = {
-    require(parts.forall(_ >= 1) && maxRecordsPerFile >= 1)
-    val ranged = parts match {
-      case None => df.repartitionByRange(col(sortCol))
-      case Some(n) => df.repartitionByRange(n, col(sortCol))
-    }
-    ranged
+      maxRecordsPerFile: Long): Unit = {
+    require(maxRecordsPerFile >= 1)
+    df.repartitionByRange(col(sortCol))
       .sortWithinPartitions(sortCol)
       .write
       .option("maxRecordsPerFile", maxRecordsPerFile)

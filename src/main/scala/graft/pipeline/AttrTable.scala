@@ -108,9 +108,6 @@ object AttrTable {
   def ensureWritten(s: SparkSession, d: String): String =
     written.computeIfAbsent((s, d, derivedLang(s)), { k =>
       val out = dir(d, k._3)
-      // parts = None: file count derives from data size via AQE (not the
-      // shuffle-partition constant — a small corpus's table is one
-      // file, not 32 near-empty ones taxing every downstream scan)
       graft.ops.SinkOps.rangedSortedParquet(build(s, d), "doc_id", out,
         maxRecordsPerFile = 5000000L)
       out

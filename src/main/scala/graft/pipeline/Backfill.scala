@@ -58,13 +58,6 @@ object Backfill {
     *                   source's `withOrdinals` option). Default keeps
     *                   the payload-ordered survivor, which is
     *                   deterministic without ingest-order columns.
-    * @param clusterMasterBy when set, the master PARQUET sink writes
-    *                   clustered by this column via
-    *                   [[graft.ops.SinkOps.rangedSortedParquet]] (disjoint
-    *                   per-file key ranges, files capped at
-    *                   `masterMaxRecordsPerFile` rows) — the layout that
-    *                   lets downstream key-range scans prune files; the
-    *                   CSV master is unaffected
     */
   def run(
       spark: SparkSession,
@@ -77,9 +70,7 @@ object Backfill {
       genres: Map[Int, String],
       fetchMonth: (String, String) => DataFrame,
       onProgress: (String, Int, Int) => Unit = (_, _, _) => (),
-      keepFirst: Boolean = false,
-      clusterMasterBy: Option[String] = None,
-      masterMaxRecordsPerFile: Long = 5000000L): Result = {
+      keepFirst: Boolean = false): Result = {
 
     // all driver-side I/O rides the Hadoop FileSystem API with the
     // session's conf, so outDir/checkpointFile may be any scheme Spark
@@ -186,16 +177,7 @@ object Backfill {
           all, Seq("tmdb_id"), col("part_month") +: payloadOrder)
         .drop("part_month")
       val (csvName, parquetName) = MovieOps.masterPaths(start, end)
-      // optional clustered master (ops/SinkOps): disjoint per-file key
-      // ranges + bounded file sizes, so downstream key-range scans prune
-      // files by min/max statistics instead of reading the whole master
-      clusterMasterBy match {
-        case Some(sortCol) => graft.ops.SinkOps.rangedSortedParquet(
-          master, sortCol, s"$outDir/$parquetName",
-          maxRecordsPerFile = masterMaxRecordsPerFile)
-        case None =>
-          master.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$parquetName")
-      }
+      master.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$parquetName")
       val written = spark.read.schema(MovieOps.MovieSchema)
         .parquet(s"$outDir/$parquetName")
       written.write.mode(SaveMode.Overwrite)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.{DedupOps, Fs, SinkOps, TextOps}
 import graft.queries.{DedupQs, TextQs}
 import graft.streaming.{DocStream, IndexLayout}
+import graft.streaming.DocStream.hinted
 
 /** INCREMENTAL attribute tagging — the production form of [[AttrTable]]'s
   * write-once artifact. A real curation deployment (the Dolma tagger
@@ -136,13 +137,6 @@ object IncrAttrTable {
     }
 
   private def indexDir(root: String): String = s"$root/index"
-
-  /** The index's bucket count — a layout property fixed at first append
-    * (DocStream's seed-once discipline: conf key
-    * spark.graft.stream.indexBuckets, persisted in index/_buckets). */
-  private def indexBuckets(s: SparkSession, idx: String): Int =
-    if (Fs.exists(s"$idx/_buckets", hconf(s))) IndexLayout.numBuckets(s, idx)
-    else IndexLayout.initMeta(s, idx)
   private def metaDir(root: String): String = s"$root/_batchmeta"
 
   /** The artifact relations OUTSIDE the index that accrue per-batch leaf
@@ -232,9 +226,10 @@ object IncrAttrTable {
     * the retry carrying identical rows (dynamic overwrite alone only
     * replaces the partitions present in the NEW data; different content
     * would leave ghost slices that later batches could flag `is_dup`
-    * against and compaction would fold in permanently). Happy-path cost
-    * is one tiny read + two atomic writes per append; the listings run
-    * only on the crash path. */
+    * against and compaction would fold in permanently). Index slices are
+    * written only to the tail, and compaction folds only committed
+    * batches, so a dead batch's index rows can only be its tail slices.
+    * Happy-path cost is one tiny read + two atomic writes per append. */
   private def sweepUncommitted(s: SparkSession, root: String,
       committed: Map[Long, Long]): Unit =
     Fs.readBytes(s"${metaDir(root)}/_inflight", hconf(s))
@@ -243,19 +238,8 @@ object IncrAttrTable {
       .foreach { j =>
         ArtifactRels.foreach(rel =>
           Fs.delete(s"${liveRelDir(s, root, rel)}/batch_id=$j", hconf(s)))
-        val idx = indexDir(root)
-        if (Fs.exists(s"$idx/_buckets", hconf(s))) Seq("bands", "shingles").foreach { rel =>
-          val g = IndexLayout.dataDir(s, idx, rel)
-          Fs.list(g, hconf(s))
-            .filter(_.getPath.getName.startsWith("bucket="))
-            .foreach { b =>
-              Fs.delete(s"${b.getPath}/batch_id=$j", hconf(s))
-              // a bucket whose ONLY slice was the dead batch must go too:
-              // residentSlice treats a present bucket dir as readable data
-              if (Fs.list(b.getPath.toString, hconf(s)).isEmpty)
-                Fs.delete(b.getPath.toString, hconf(s))
-            }
-        }
+        Seq("bands", "shingles").foreach(
+          IndexLayout.dropTailSlice(s, indexDir(root), _, j))
       }
 
   /** Tag `docs` against the artifact at `root` and append. Every id in
@@ -274,10 +258,6 @@ object IncrAttrTable {
       // crashed-then-retried batch 0 with different content must freeze
       // ITS counts, not the dead attempt's.
       if (meta.isEmpty) seedLm(s, root, docs)
-      // intent marker for the residue sweep: records that batch `eff`
-      // may be writing; cleared only after the manifest commits
-      Fs.writeAtomic(s"${metaDir(root)}/_inflight",
-        eff.toString.getBytes("UTF-8"), hconf(s))
 
       graft.Memo.scoped { sc =>
         val (attrs, newSh, newBands, dupPairs) =
@@ -289,46 +269,19 @@ object IncrAttrTable {
         // and the persisted pairs — never the index slices written beside
         // it. See [[labelDelta]] for the union-find shape.
         val labels = labelDelta(s, root, dupPairs, eff, bMin)
-        // The three writes are INDEPENDENT jobs — attrs reads the resident
-        // index through file indexes snapshotted at plan time, filtered
-        // batch_id < eff, so it can never observe the concurrent eff
-        // slices — and each is idempotent per batchId, so they run
-        // concurrently: per-append wall time pays max(write) + plans, not
-        // the sum of three sequential job+commit overheads. The manifest
-        // commits LAST, only after all three writes succeed — a crash
-        // before it leaves an uncommitted batch whose replay overwrites
-        // exactly its own partitions.
-        //
-        // All three are plain LEAF-DIRECTORY overwrites of this batch's
-        // own dir — index slices into the TAIL ([[IndexLayout
-        // .appendTailSlice]]: the dynamic-partition form re-listed the
-        // whole accumulated tree per append and fanned the batch into one
-        // file per touched bucket, both of which grow with exactly the
-        // things an append must be independent of), attrs into
-        // `attrs/batch_id=N` for the same reason. Compaction folds the
-        // index tail into real buckets; attrs batch dirs are the
-        // artifact's natural ingest grain.
-        val attrsDir = s"${liveRelDir(s, root, "attrs")}/batch_id=$eff"
         // the labels write joins only when the batch discovered pairs —
         // committed label dirs always hold rows (the compactRel invariant
         // every artifact relation keeps)
-        val labelWrites: Seq[() => Unit] = labels.toSeq.map(l => () =>
-          l.write.mode("overwrite")
-            .parquet(s"${liveRelDir(s, root, "labels")}/batch_id=$eff"))
-        awaitAll((Seq[() => Unit](
-          () => attrs.write.mode("overwrite").parquet(attrsDir),
-          () => IndexLayout.appendTailSlice(newBands, indexDir(root),
-            "bands", eff),
-          () => IndexLayout.appendTailSlice(
-            newSh.filter(size(col("shingles")) > 0),
-            indexDir(root), "shingles", eff)) ++ labelWrites): _*)
-        commitBatch(s, root, eff, bMax)
+        writeAndCommit(s, root, eff, bMax, attrs, newSh, newBands,
+          labels.map("labels" -> _).toSeq)
       }
     }
 
   /** Shared append envelope: manifest read, crash-residue sweep,
-    * effective batch id, compaction replay guard, and the id-span +
-    * monotone contract (one bounded 1-row aggregate). Returns
+    * effective batch id, compaction replay guard, the id-span +
+    * monotone contract (one bounded 1-row aggregate), and the inflight
+    * marker that [[sweepUncommitted]] heals a crashed attempt by.
+    * Returns
     * (manifest, effective id, batch min doc_id, batch max doc_id) —
     * None for an empty batch, nothing to commit. The batch MIN is the
     * resident/batch id boundary [[labelDelta]] keys on. */
@@ -380,6 +333,10 @@ object IncrAttrTable {
           "Incremental is_dup flags would be silently wrong (a lower-id " +
           "partner already tagged never retro-flips, and lower-id batch " +
           "docs would be mis-attributed). Ingest batches in doc_id order.")
+      // intent marker for the residue sweep: records that batch `eff`
+      // may be writing; cleared only after the manifest commits
+      Fs.writeAtomic(s"${metaDir(root)}/_inflight",
+        eff.toString.getBytes("UTF-8"), hconf(s))
       Some((meta, eff, bMin, bMax))
     }
   }
@@ -410,6 +367,43 @@ object IncrAttrTable {
     val fs = jobs.map(j => Future(j()))
     fs.foreach(Await.ready(_, Duration.Inf))
     fs.foreach(_.value.get.get)
+  }
+
+  /** The batch's writes and its commit, the one envelope both
+    * transactions end in. The writes are INDEPENDENT jobs — attrs reads
+    * the resident index through file indexes snapshotted at plan time,
+    * filtered batch_id < eff, so it can never observe the concurrent eff
+    * slices — and each is idempotent per batchId, so they run
+    * concurrently ([[awaitAll]]): per-append wall time pays max(write) +
+    * plans, not the sum of sequential job+commit overheads. The manifest
+    * commits LAST, only after every write succeeds — a crash before it
+    * leaves an uncommitted batch whose replay overwrites exactly its own
+    * output.
+    *
+    * Every write is a plain LEAF-DIRECTORY overwrite of this batch's own
+    * dir — index slices into the TAIL ([[IndexLayout.appendTailSlice]]:
+    * a dynamic-partition write re-lists the whole accumulated tree per
+    * append and fans the batch into one file per touched bucket, both of
+    * which grow with exactly the things an append must be independent
+    * of), attrs and each `extra` (relation, rows) into
+    * `<rel>/batch_id=N` for the same reason. Compaction folds the index
+    * tail into real buckets; the relations' batch dirs are the
+    * artifact's natural ingest grain. */
+  private def writeAndCommit(s: SparkSession, root: String, eff: Long,
+      bMax: Long, attrs: DataFrame, sh: DataFrame, bands: DataFrame,
+      extra: Seq[(String, DataFrame)]): Unit = {
+    def leaf(rel: String, rows: DataFrame): () => Unit = {
+      val dir = s"${liveRelDir(s, root, rel)}/batch_id=$eff"
+      () => rows.write.mode("overwrite").parquet(dir)
+    }
+    val idx = indexDir(root)
+    awaitAll((Seq(
+      leaf("attrs", attrs),
+      () => IndexLayout.appendTailSlice(bands, idx, "bands", eff),
+      () => IndexLayout.appendTailSlice(sh.filter(size(col("shingles")) > 0),
+        idx, "shingles", eff)) ++
+      extra.map { case (rel, rows) => leaf(rel, rows) }): _*)
+    commitBatch(s, root, eff, bMax)
   }
 
   /** The commit point: manifest (atomic rename), then the inflight
@@ -451,12 +445,8 @@ object IncrAttrTable {
   def ingestBatch(s: SparkSession, root: String, docs: DataFrame,
       broadcastProbe: Boolean = true, batchId: Long = -1L): Unit =
     openBatch(s, root, docs, batchId).foreach { case (meta, eff, _, bMax) =>
-      Fs.writeAtomic(s"${metaDir(root)}/_inflight",
-        eff.toString.getBytes("UTF-8"), hconf(s))
       val idx = indexDir(root)
-      val nb = indexBuckets(s, idx)
-      def hinted(df: DataFrame): DataFrame =
-        if (broadcastProbe) broadcast(df) else df
+      val nb = IndexLayout.numBucketsOrInit(s, idx)
       graft.Memo.scoped { sc =>
         // DocStream's gates and band probe — the SAME functions, so the
         // fused loop equals DocStream-then-tagging by construction
@@ -481,7 +471,7 @@ object IncrAttrTable {
           // no LM — exactly what admission-then-tagging would leave)
           commitBatch(s, root, eff, bMax)
         } else {
-          val survivors = docs.join(hinted(admitted), "doc_id")
+          val survivors = docs.join(hinted(broadcastProbe, admitted), "doc_id")
           // the frozen LM seeds from the first batch that ADMITS
           // anything: "no committed batch has an attrs partition yet"
           // (a committed manifest without attrs = a zero-survivor batch).
@@ -497,9 +487,8 @@ object IncrAttrTable {
               meta.contains(id) || id <= cumMax).nonEmpty
           if (!tagged) seedLm(s, root, survivors)
           val attrs = attrRows(s, root, survivors, None, broadcastProbe)
-          val keepSh = newSh.join(hinted(admitted), "doc_id")
-          val keepBands = newBands.join(hinted(admitted), "doc_id")
-          val attrsDir = s"${liveRelDir(s, root, "attrs")}/batch_id=$eff"
+          val keepSh = newSh.join(hinted(broadcastProbe, admitted), "doc_id")
+          val keepBands = newBands.join(hinted(broadcastProbe, admitted), "doc_id")
           // optional per-batch context-window emission (q146's chunking,
           // ONE shared definition — TextOps.contextWindowsOf — so the
           // streamed union over admitted batches equals the batch answer
@@ -514,35 +503,23 @@ object IncrAttrTable {
           // compaction are no-ops at openBatch and never touch them.
           val emitWindows =
             s.conf.getOption(EmitWindowsKey).exists(_.toBoolean)
-          val windowWrites: Seq[() => Unit] =
-            if (!emitWindows) Seq.empty
-            else Seq(() => TextOps.contextWindowsOf(survivors)
-              .write.mode("overwrite")
-              .parquet(s"${liveRelDir(s, root, "windows")}/batch_id=$eff"))
-          awaitAll((Seq[() => Unit](
-            () => attrs.write.mode("overwrite").parquet(attrsDir),
-            () => IndexLayout.appendTailSlice(keepBands, idx, "bands", eff),
-            () => IndexLayout.appendTailSlice(
-              keepSh.filter(size(col("shingles")) > 0),
-              idx, "shingles", eff)) ++ windowWrites): _*)
-          commitBatch(s, root, eff, bMax)
+          writeAndCommit(s, root, eff, bMax, attrs, keepSh, keepBands,
+            if (emitWindows) Seq("windows" -> TextOps.contextWindowsOf(survivors))
+            else Nil)
         }
       }
     }
 
-  /** The batch's (attrs, shingles, bands, verified dup pairs) plans
+  /** Batch `batchId`'s (attrs, shingles, bands, verified dup pairs) plans
     * against the CURRENT resident state — split from [[appendBatch]] so
     * the plans can be inspected without writing. The batch-sized
     * relations the plans read are persisted in the caller's scope `sc`,
     * so the plans are valid until that scope closes. */
   private[graft] def batchPlans(sc: graft.Memo.Scope, s: SparkSession,
-      root: String, docs: DataFrame, broadcastProbe: Boolean = true,
-      batchId: Long = -1L): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      root: String, docs: DataFrame, broadcastProbe: Boolean,
+      batchId: Long): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val idx = indexDir(root)
-    val eff =
-      if (batchId >= 0) batchId
-      else batchMeta(s, root).keysIterator.maxOption.map(_ + 1L).getOrElse(0L)
-    val nb = indexBuckets(s, idx)
+    val nb = IndexLayout.numBucketsOrInit(s, idx)
 
     // batch-sized relations, consumed by several joins below and by the
     // index writes — persisted for the lifetime of this append
@@ -550,7 +527,7 @@ object IncrAttrTable {
     val newBands = sc(DedupQs.minhashBandsOf(newSh))
 
     val (pairsResident, pairsBatch) =
-      DocStream.dupProbe(sc, idx, nb, newSh, newBands, broadcastProbe, eff)
+      DocStream.dupProbe(sc, idx, nb, newSh, newBands, broadcastProbe, batchId)
     // verified ONCE: the label delta's pair read (its collect or CC size
     // probe) and the attrs write's dup ids both read this entry instead
     // of each re-running the probe-and-verify chain
@@ -690,17 +667,17 @@ object IncrAttrTable {
     // doc_id exchanges, one output file instead of shuffle-partition
     // many), gated on the SAME flag as the probe: a corpus-sized build
     // takes the shuffled form end-to-end
-    def hinted(df: DataFrame): DataFrame =
-      if (broadcastProbe) broadcast(df) else df
     val scored = base
-      .join(hinted(TextOps.modelScoresOf(docs)), "doc_id")
-      .join(hinted(TextQs.pplAgainstLm(lm, docs).select("doc_id", "ppl_q")),
+      .join(hinted(broadcastProbe, TextOps.modelScoresOf(docs)), "doc_id")
+      .join(hinted(broadcastProbe,
+        TextQs.pplAgainstLm(lm, docs).select("doc_id", "ppl_q")),
         Seq("doc_id"), "left")
-      .join(hinted(TextQs.cascadeMaskOf(docs, wide).select("doc_id", "fail_mask")),
-        "doc_id")
+      .join(hinted(broadcastProbe,
+        TextQs.cascadeMaskOf(docs, wide).select("doc_id", "fail_mask")), "doc_id")
     dupIds match {
       case Some(d) => scored
-        .join(hinted(d.withColumn("__dup", lit(true))), Seq("doc_id"), "left")
+        .join(hinted(broadcastProbe, d.withColumn("__dup", lit(true))),
+          Seq("doc_id"), "left")
         .withColumn("is_dup", coalesce(col("__dup"), lit(false)))
         .drop("__dup")
       case None => scored.withColumn("is_dup", lit(false))
@@ -797,10 +774,6 @@ object IncrAttrTable {
       val folded =
         if (rel == "labels") rows.groupBy("doc_id").agg(min(col("comp")).as("comp"))
         else rows
-      // parts = None: AQE sizes the fold's file count from the DATA (a
-      // KB-scale artifact folds to one file; q151's selection plan
-      // scans attrs five times, and a 32-way fold made each of those
-      // scans a 32-task stage of pure reader-init overhead)
       SinkOps.rangedSortedParquet(
         folded, "doc_id",
         s"$relDir/gen=${g + 1}/batch_id=-1",

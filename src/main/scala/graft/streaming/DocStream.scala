@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.ops.{DedupOps, Fs, TextOps}
+import graft.ops.{DedupOps, TextOps}
 import graft.queries.DedupQs
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -47,24 +47,24 @@ import org.apache.spark.sql.types.StructType
   * candidate docs' id buckets. Both bucket sets are bounded driver-side
   * scalars (≤ nb distinct ints each, the q68-style bounded-collect
   * posture), and the pruning happens at FILE LISTING time via partition
-  * pruning on the `bucket=` directory level — per-batch I/O tracks the
+  * pruning on the bucket directory level — per-batch I/O tracks the
   * batch's bucket contents, not the index's total size. The win is
   * largest exactly where streaming admission lives (small batches
   * against a huge resident corpus: a 1-doc batch touches ≤16 of `nb`
   * band buckets); a batch big enough to touch every bucket degrades
   * gracefully to the full scan its join needs anyway. The bucket COUNT
   * is a layout property, not a query knob: it is fixed at seed time
-  * (conf `spark.graft.stream.indexBuckets`, default 64), persisted in
-  * `indexDir/_buckets`, and read back on every admit — changing the
+  * (conf `spark.graft.stream.indexBuckets`, default 64), persisted by
+  * [[IndexLayout]], and read back on every admit — changing the
   * conf mid-stream cannot desynchronize writers and readers. At 100 TB
   * the same layout is a Delta/Iceberg table partitioned (or bucketed)
   * on the same keys, and nb scales with corpus size the way any
   * bucketed table's does.
   *
-  * Layout (see [[IndexLayout]]): `indexDir/{bands,shingles}/gen=G/
-  * bucket=B/batch_id=N` (seeded by [[seedIndex]] into `batch_id=-1` of
-  * generation 0); `indexDir/_buckets` holds nb, `indexDir/_gen` the
-  * live generation. [[compactIndex]] folds the accumulated batch
+  * Layout: [[IndexLayout]] owns it — `bands` and `shingles` relations
+  * (seeded by [[seedIndex]] into `batch_id=-1` of generation 0), each
+  * admitted batch written bucketed ([[IndexLayout.writeSlice]]).
+  * [[compactIndex]] folds the accumulated batch
   * partitions into one file per bucket under the next generation and
   * atomically swaps the pointer — the maintenance job that keeps
   * per-bucket file counts from growing with trigger count. Admissions
@@ -100,11 +100,6 @@ object DocStream {
     * gate is off and admission behavior is byte-identical to before. */
   val LangAllowConfKey = "spark.graft.stream.langAllow"
 
-  // the canonical bucket assignments ([[IndexLayout.bucketExpr]]) — the
-  // re-bucketing compaction reassigns with the identical expressions
-  private def bandBucket(nb: Int): Column = IndexLayout.bucketExpr("bands", nb)
-  private def docBucket(nb: Int): Column = IndexLayout.bucketExpr("shingles", nb)
-
   /** Row shapes of the two index relations — the cold-start contract
     * [[IndexLayout.residentSlice]] falls back to when the index holds no
     * files yet (seeded from an empty corpus). */
@@ -113,23 +108,12 @@ object DocStream {
   private val ShinglesSchema = StructType.fromDDL(
     "doc_id BIGINT, shingles ARRAY<BIGINT>")
 
-  /** Seed the resident index from an existing corpus (doc_id, text).
-    * Seed rows land in the `batch_id=-1` partition so every streamed
-    * batch (batchId >= 0) sees them through the `< batchId` read. */
+  /** Seed the resident index from an existing corpus (doc_id, text)
+    * ([[IndexLayout.seed]]: a full rebuild into `batch_id=-1`). */
   def seedIndex(corpus: DataFrame, indexDir: String): Unit = {
-    val spark = corpus.sparkSession
-    // re-seed is a full rebuild: clear any prior generations first
-    Seq("bands", "shingles").foreach(rel =>
-      Fs.delete(s"$indexDir/$rel", spark.sparkContext.hadoopConfiguration))
-    val nb = IndexLayout.initMeta(spark, indexDir)
     val sh = DedupQs.shinglesOf(corpus).filter(size(col("shingles")) > 0)
-    IndexLayout.writeSlice(
-      sh.withColumn("bucket", docBucket(nb)).withColumn("batch_id", lit(-1L)),
-      indexDir, "shingles", dynamic = false)
-    IndexLayout.writeSlice(
-      DedupQs.minhashBandsOf(sh)
-        .withColumn("bucket", bandBucket(nb)).withColumn("batch_id", lit(-1L)),
-      indexDir, "bands", dynamic = false)
+    IndexLayout.seed(corpus.sparkSession, indexDir,
+      Seq("shingles" -> sh, "bands" -> DedupQs.minhashBandsOf(sh)))
   }
 
   /** Fold the accumulated per-batch partitions into one file per bucket
@@ -179,16 +163,10 @@ object DocStream {
     val admitted = IndexLayout.commitVerdicts(docs.select("doc_id"),
       gated ++ Seq("dup_corpus" -> dupIdsOf(corpus), "dup_batch" -> dupIdsOf(batch)),
       s"$outDir/admissions", batchId)
-    IndexLayout.writeSlice(
-      sh.join(admitted, "doc_id")
-        .withColumn("bucket", docBucket(nb))
-        .withColumn("batch_id", lit(batchId)),
-      indexDir, "shingles", dynamic = true)
-    IndexLayout.writeSlice(
-      bands.join(admitted, "doc_id")
-        .withColumn("bucket", bandBucket(nb))
-        .withColumn("batch_id", lit(batchId)),
-      indexDir, "bands", dynamic = true)
+    IndexLayout.writeSlice(sh.join(admitted, "doc_id"), indexDir, "shingles",
+      nb, batchId)
+    IndexLayout.writeSlice(bands.join(admitted, "doc_id"), indexDir, "bands",
+      nb, batchId)
   }
 
   /** The admission gates, in the CCNet/Dolma order: the optional
@@ -252,8 +230,7 @@ object DocStream {
   private[graft] def dupProbe(sc: graft.Memo.Scope, indexDir: String, nb: Int,
       sh: DataFrame, bands: DataFrame, broadcastProbe: Boolean,
       batchId: Long): (DataFrame, DataFrame) = {
-    def hinted(df: DataFrame): DataFrame = if (broadcastProbe) broadcast(df) else df
-    val bSide = hinted(DedupOps.capBuckets(
+    val bSide = hinted(broadcastProbe, DedupOps.capBuckets(
         bands, Seq("band_idx", "band_hash"), DedupQs.MaxBucket)
       .select(col("doc_id").as("doc_b"), col("band_idx"), col("band_hash")))
     def aSide(df: DataFrame): DataFrame =
@@ -271,13 +248,14 @@ object DocStream {
     // division form re-evaluates the intersect per reference when
     // Catalyst inlines it into the join condition — DedupQs.verified
     // history); the size bound is J's necessary condition min/max >= 4/5
-    val sb = hinted(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")))
+    val sb = hinted(broadcastProbe,
+      sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")))
     def verify(cands: DataFrame, aSh: DataFrame): DataFrame = {
       val nInter = size(array_intersect(col("sh_a"), col("sh_b")))
       val sizeOk = lit(5) * least(size(col("sh_a")), size(col("sh_b"))) >=
         lit(4) * greatest(size(col("sh_a")), size(col("sh_b")))
       aSh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"))
-        .join(hinted(cands), "doc_a").join(sb, "doc_b")
+        .join(hinted(broadcastProbe, cands), "doc_a").join(sb, "doc_b")
         .filter(sizeOk && (lit(9) * nInter >=
           lit(4) * (size(col("sh_a")) + size(col("sh_b")))))
         .select(col("doc_a"), col("doc_b")).distinct()
@@ -288,6 +266,11 @@ object DocStream {
       nb, batchId, ShinglesSchema, key = col("doc_a"))
     (verify(candsResident, residentSh), verify(candsBatch, sh))
   }
+
+  /** `df` with a broadcast hint under the shard posture (`on` — a
+    * batch-sized relation), unchanged for a corpus-sized one. */
+  private[graft] def hinted(on: Boolean, df: DataFrame): DataFrame =
+    if (on) broadcast(df) else df
 
   /** The dup doc ids of a verified pair relation — the doc_b side
     * (keep-first: the higher-id member of a pair is the dup). An id

@@ -7,17 +7,21 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** On-disk layout shared by the resident streaming indexes ([[DocStream]]
-  * bands+shingles, [[VecStream]] vectors, [[MediaStream]] fingerprints),
-  * plus the admission transaction's shared steps: the one stream driver
+  * bands+shingles, [[VecStream]] vectors, [[MediaStream]] fingerprints,
+  * and [[graft.pipeline.IncrAttrTable]]'s bands+shingles), plus the
+  * admission transaction's shared steps: the one stream driver
   * ([[startStream]]), the bounded probe read ([[probeSlice]]) and the
-  * verdict commit ([[commitVerdicts]]). Layout: hash-bucketed partition dirs
+  * verdict commit ([[commitVerdicts]]). This object is the ONLY owner of
+  * the index's physical format: callers hand it rows of data columns
+  * and never compute a `bucket` or `batch_id` column, name a metadata
+  * file or list a bucket dir. Layout: hash-bucketed partition dirs
   * under a GENERATION root with an atomic-pointer swap — a minimal form
   * of the metadata transaction a table format (Delta/Iceberg) provides,
   * which is exactly what these dirs become at 100 TB.
   *
   * {{{
-  * indexDir/_buckets                              bucket count nb (seed-time)
   * indexDir/_gen                                  live generation G (absent = 0)
+  * indexDir/_nb.g<G>                              bucket count nb of generation G
   * indexDir/<rel>/gen=G/bucket=B/batch_id=N/  (parquet data files)
   * }}}
   *
@@ -27,13 +31,23 @@ import org.apache.spark.sql.types.StructType
   * generations — a crash at any point leaves either the old or the new
   * generation fully live, never a mix (a half-written G+1 is simply
   * unreachable and truncated by the next compaction's overwrite).
+  *
+  * A batch's rows enter the index in one of two forms, and both stay
+  * because each bounds a different cost:
+  *
+  *   - [[appendTailSlice]] ([[graft.pipeline.IncrAttrTable]],
+  *     [[MediaStream]]) writes one leaf dir in the TAIL, so the write is
+  *     O(batch) whatever the bucket count;
+  *   - [[writeSlice]] ([[DocStream]], [[VecStream]]) writes the batch
+  *     straight into its bucket dirs, so a probe's read stays flat while
+  *     the index grows (BucketedIndexSpec pins the constant file set).
   */
 private[graft] object IndexLayout {
 
   /** Conf key for the index bucket count — consulted ONCE, at seed
-    * time; thereafter the value persisted in `indexDir/_buckets` is
-    * authoritative for that index (until a re-bucketing [[compact]]
-    * writes a larger per-generation count — see [[numBuckets]]). */
+    * time; thereafter the persisted per-generation count is
+    * authoritative for that index (a re-bucketing [[compact]] writes the
+    * next generation's — see [[numBuckets]]). */
   val BucketsConfKey = "spark.graft.stream.indexBuckets"
   val DefaultBuckets = 64
 
@@ -99,29 +113,38 @@ private[graft] object IndexLayout {
     spark.sparkContext.hadoopConfiguration
 
   /** Seed-time metadata: fix nb from the conf (layout property, not a
-    * query knob) and reset the generation pointer. Returns nb. */
-  def initMeta(spark: SparkSession, indexDir: String): Int = {
+    * query knob) as generation 0's count and reset the generation
+    * pointer. Returns nb. */
+  private def initMeta(spark: SparkSession, indexDir: String): Int = {
     val nb = spark.conf.getOption(BucketsConfKey).map(_.toInt)
       .getOrElse(DefaultBuckets)
     require(nb > 0, s"$BucketsConfKey must be > 0: $nb")
-    Fs.writeAtomic(s"$indexDir/_buckets", nb.toString.getBytes("UTF-8"), hconf(spark))
+    Fs.writeAtomic(s"$indexDir/_nb.g0", nb.toString.getBytes("UTF-8"), hconf(spark))
     Fs.writeAtomic(s"$indexDir/_gen", "0".getBytes("UTF-8"), hconf(spark))
     nb
   }
 
-  /** The LIVE bucket count: the per-generation `_nb.g<G>` a re-bucketing
-    * [[compact]] wrote, falling back to the seed-time `_buckets`. The
-    * per-gen file is written BEFORE the `_gen` pointer swaps, so a crash
-    * anywhere in compaction leaves (gen, nb) consistent: readers resolve
-    * the OLD generation with the OLD count until the single atomic swap,
-    * and an orphaned `_nb.g<G+1>` for a generation that never went live
-    * is unreachable (and overwritten by the next compaction). */
-  def numBuckets(spark: SparkSession, indexDir: String): Int =
+  /** The live generation's `_nb.g<G>` record, if the index is seeded.
+    * [[compact]] writes the next generation's record BEFORE the `_gen`
+    * pointer swaps, so a crash anywhere in compaction leaves (gen, nb)
+    * consistent: readers resolve the OLD generation with the OLD count
+    * until the single atomic swap, and an orphaned `_nb.g<G+1>` for a
+    * generation that never went live is unreachable (and overwritten by
+    * the next compaction). */
+  private def liveBuckets(spark: SparkSession, indexDir: String): Option[Int] =
     Fs.readBytes(s"$indexDir/_nb.g${gen(spark, indexDir)}", hconf(spark))
-      .orElse(Fs.readBytes(s"$indexDir/_buckets", hconf(spark)))
       .map(b => new String(b, "UTF-8").trim.toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"$indexDir/_buckets missing — index not seeded"))
+
+  /** The LIVE bucket count of a seeded index. */
+  def numBuckets(spark: SparkSession, indexDir: String): Int =
+    liveBuckets(spark, indexDir).getOrElse(throw new IllegalStateException(
+      s"$indexDir has no bucket-count record — index not seeded"))
+
+  /** The live bucket count, seeding an empty index's metadata on first
+    * use — the index that grows purely from batch appends
+    * ([[graft.pipeline.IncrAttrTable]]) has no separate seed step. */
+  def numBucketsOrInit(spark: SparkSession, indexDir: String): Int =
+    liveBuckets(spark, indexDir).getOrElse(initMeta(spark, indexDir))
 
   /** Live generation (absent marker = 0). */
   def gen(spark: SparkSession, indexDir: String): Long =
@@ -132,24 +155,50 @@ private[graft] object IndexLayout {
   def dataDir(spark: SparkSession, indexDir: String, rel: String): String =
     s"$indexDir/$rel/gen=${gen(spark, indexDir)}"
 
-  /** Write rows (carrying `bucket` and `batch_id` columns) into `rel`'s
-    * live generation. `dynamic = true` overwrites exactly the partitions
-    * present in the data (the per-batch idempotent form); `false`
-    * truncates the whole generation first (the seed/bulk form) and
-    * clusters by bucket so the load lands as ONE file per bucket dir —
-    * the same layout [[compact]] maintains, instead of
-    * tasks × buckets small files. */
-  def writeSlice(rows: DataFrame, indexDir: String, rel: String,
-      dynamic: Boolean): Unit = {
-    val spark = rows.sparkSession
-    val data = if (dynamic) rows else rows.repartition(col("bucket"))
-    data.write.partitionBy("bucket", "batch_id").mode("overwrite")
-      // explicit either way: the batch form must replace only its own
-      // partitions, the seed form must truncate — neither may inherit a
-      // session-level partitionOverwriteMode
-      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
-      .parquet(dataDir(spark, indexDir, rel))
+  /** Seed (or re-seed — a full rebuild) the index from `rels`, each a
+    * relation name with its rows of data columns: prior generations
+    * are deleted, the bucket count is fixed ([[BucketsConfKey]]) and
+    * every relation lands in `batch_id=-1` of generation 0, which every
+    * streamed batch (batchId >= 0) sees through its `< batchId` read. */
+  def seed(spark: SparkSession, indexDir: String,
+      rels: Seq[(String, DataFrame)]): Unit = {
+    rels.foreach { case (rel, _) => Fs.delete(s"$indexDir/$rel", hconf(spark)) }
+    val nb = initMeta(spark, indexDir)
+    rels.foreach { case (rel, rows) =>
+      writeFolded(rows, rel, nb, s"$indexDir/$rel/gen=0")
+    }
   }
+
+  /** The fold write the seed and [[compact]] share: every row assigned
+    * its canonical bucket at `nb` (a tail row's reserved bucket folds
+    * into its real one; an already-bucketed row keeps its value by
+    * definition) and `batch_id=-1`, every row of a bucket in one task —
+    * ONE file per bucket dir instead of tasks × buckets small files —
+    * written as an explicit STATIC overwrite: the truncate-first
+    * semantics the crash-recovery story relies on must not depend on a
+    * session default of spark.sql.sources.partitionOverwriteMode. */
+  private def writeFolded(rows: DataFrame, rel: String, nb: Int,
+      out: String): Unit =
+    rows.withColumn("bucket", bucketExpr(rel, nb))
+      .withColumn("batch_id", lit(-1L))
+      .repartition(col("bucket"))
+      .write.partitionBy("bucket", "batch_id").mode("overwrite")
+      .option("partitionOverwriteMode", "static")
+      .parquet(out)
+
+  /** Write one batch's rows (data columns only) into `rel`'s live
+    * generation under their canonical `bucket` dirs at `nb`, as
+    * `batch_id=batchId` partitions. The write is an explicit DYNAMIC
+    * overwrite — it replaces exactly the partitions present in the data,
+    * the per-batch idempotent form, and must not inherit a session-level
+    * partitionOverwriteMode. */
+  def writeSlice(rows: DataFrame, indexDir: String, rel: String, nb: Int,
+      batchId: Long): Unit =
+    rows.withColumn("bucket", bucketExpr(rel, nb))
+      .withColumn("batch_id", lit(batchId))
+      .write.partitionBy("bucket", "batch_id").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(dataDir(rows.sparkSession, indexDir, rel))
 
   /** The reserved bucket value of the TAIL: freshly appended batch
     * slices that have not been folded into real buckets yet. Canonical
@@ -172,17 +221,24 @@ private[graft] object IndexLayout {
     * regardless of bucket count, readers scan pruned buckets PLUS the
     * bounded tail ([[residentSlice]] includes it automatically), and
     * [[compact]] folds tail rows into real buckets — exactly a table
-    * format's small-file clustering job. The tail's users: the
-    * incremental attribute table's bands and shingles
-    * ([[graft.pipeline.IncrAttrTable]], both its tagging append and the
-    * fused ingest) and [[MediaStream]]'s fingerprints. The bucketed
-    * [[writeSlice]] form still serves [[DocStream]] and [[VecStream]]
-    * batches. */
+    * format's small-file clustering job. */
   def appendTailSlice(rows: DataFrame, indexDir: String, rel: String,
+      batchId: Long): Unit =
+    rows.write.mode("overwrite")
+      .parquet(s"${tailDir(rows.sparkSession, indexDir, rel)}/batch_id=$batchId")
+
+  private def tailDir(spark: SparkSession, indexDir: String, rel: String): String =
+    s"${dataDir(spark, indexDir, rel)}/bucket=$TailBucket"
+
+  /** The inverse of [[appendTailSlice]]: delete batch `batchId`'s tail
+    * leaf of `rel` (the crash-residue heal of a batch that never
+    * committed), and the tail dir itself when that leaves it empty —
+    * [[residentSlice]] reads every present bucket dir as data. */
+  def dropTailSlice(spark: SparkSession, indexDir: String, rel: String,
       batchId: Long): Unit = {
-    val spark = rows.sparkSession
-    rows.write.mode("overwrite").parquet(
-      s"${dataDir(spark, indexDir, rel)}/bucket=$TailBucket/batch_id=$batchId")
+    val tail = tailDir(spark, indexDir, rel)
+    Fs.delete(s"$tail/batch_id=$batchId", hconf(spark))
+    if (Fs.list(tail, hconf(spark)).isEmpty) Fs.delete(tail, hconf(spark))
   }
 
   /** Pre-batch index rows from ONLY the named bucket directories of the
@@ -339,7 +395,7 @@ private[graft] object IndexLayout {
     * without re-bucketing, rows-per-bucket grows linearly with the
     * resident corpus and the "pruned" read degrades back to a full
     * scan once every bucket is hit). `newBuckets == 0` keeps the
-    * current count and the bucket column untouched.
+    * current count (tail rows still fold into their real buckets).
     *
     * `keepBatchIds`, when set, drops rows of any non-negative batch_id
     * NOT in the set — the hook a caller with a commit manifest uses to
@@ -358,26 +414,10 @@ private[graft] object IndexLayout {
             col("batch_id").isin(ids.toSeq: _*))
         case None => live
       }
-      // bucket is recomputed UNCONDITIONALLY (not only when the count
-      // changes): tail rows carry the reserved bucket=-2 and must fold
-      // into their real buckets; for already-bucketed rows the canonical
-      // expression reproduces their current value by definition
-      committed
-        .withColumn("bucket", bucketExpr(rel, targetNb, key = null))
-        .withColumn("batch_id", lit(-1L))
-        // every row of a bucket into one task → one file per bucket dir
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket", "batch_id").mode("overwrite")
-        // explicit STATIC overwrite: the truncate-first semantics the
-        // crash-recovery story relies on must not depend on a session
-        // default of spark.sql.sources.partitionOverwriteMode=dynamic
-        .option("partitionOverwriteMode", "static")
-        .parquet(s"$indexDir/$rel/gen=${g + 1}")
+      writeFolded(committed, rel, targetNb, s"$indexDir/$rel/gen=${g + 1}")
     }
-    // ALWAYS written (not only when the count changes): the previous
-    // generation's count may itself live in an `_nb.g<G>` file that the
-    // GC below removes — gen G+1 must carry its own count or numBuckets
-    // would fall back to the stale seed-time `_buckets`
+    // ALWAYS written (not only when the count changes): the GC below
+    // removes generation G's record, and gen G+1 must carry its own
     Fs.writeAtomic(s"$indexDir/_nb.g${g + 1}",
       targetNb.toString.getBytes("UTF-8"), hconf(spark))
     Fs.writeAtomic(s"$indexDir/_gen", (g + 1).toString.getBytes("UTF-8"),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{DedupOps, Fs, MultimodalOps}
+import graft.ops.{DedupOps, MultimodalOps}
 import graft.ops.MultimodalOps.MediaRow
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -66,8 +66,6 @@ object MediaStream {
     * (survivor-only indexing already keeps identical content out). */
   private val MaxBucket = 1000
 
-  private def bucket(nb: Int) = IndexLayout.bucketExpr("fingerprints", nb)
-
   /** Row shape of the fingerprint index — [[IndexLayout.residentSlice]]'s
     * cold-start fallback contract. */
   private val FingerprintsSchema = StructType.fromDDL(
@@ -85,16 +83,9 @@ object MediaStream {
     * partition so every streamed batch (batchId >= 0) sees them through
     * the `< batchId` read. An EMPTY corpus is a legitimate cold start
     * (the index grows purely from admissions). */
-  def seedIndex(corpus: DataFrame, indexDir: String): Unit = {
-    val spark = corpus.sparkSession
-    Fs.delete(s"$indexDir/fingerprints", spark.sparkContext.hadoopConfiguration)
-    val nb = IndexLayout.initMeta(spark, indexDir)
-    IndexLayout.writeSlice(
-      MultimodalOps.phashBands(hashesOf(corpus))
-        .withColumn("bucket", bucket(nb))
-        .withColumn("batch_id", lit(-1L)),
-      indexDir, "fingerprints", dynamic = false)
-  }
+  def seedIndex(corpus: DataFrame, indexDir: String): Unit =
+    IndexLayout.seed(corpus.sparkSession, indexDir,
+      Seq("fingerprints" -> MultimodalOps.phashBands(hashesOf(corpus))))
 
   /** Fold accumulated batch partitions into one file per bucket (see
     * [[IndexLayout.compact]]; single-writer contract — only between

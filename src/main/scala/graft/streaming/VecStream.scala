@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.ops.{DedupOps, Fs, VectorOps}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.ops.{DedupOps, VectorOps}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -27,12 +27,12 @@ import org.apache.spark.sql.types.StructType
   * Same BUCKETED LAYOUT as [[DocStream]], keyed on the cell id: the
   * resident vector index grows without bound, but a batch can only
   * collide within the cells its own vectors are assigned to — so index
-  * rows live under `bucket=pmod(cell, nb)/batch_id=N` partition dirs
+  * rows are bucketed on `pmod(cell, nb)` into partition dirs
   * and each admit reads only the bucket dirs of its assigned cells
   * (bounded driver-side scalar, ≤ nb ints). Per-batch I/O tracks the
   * probed cells' contents, not total index size. nb is a LAYOUT
   * property fixed at seed time (conf `spark.graft.stream.indexBuckets`,
-  * default 64, persisted in `indexDir/_buckets`), like the frozen
+  * default 64, persisted by [[IndexLayout]]), like the frozen
   * centroid set itself.
   *
   * Centroids are FROZEN at seed time (written once by [[seedIndex]],
@@ -43,10 +43,9 @@ import org.apache.spark.sql.types.StructType
   * SemDeDup's published fixed-clustering pass.
   *
   * Layout (see [[IndexLayout]]): `indexDir/centroids` (cid, cvec),
-  * `indexDir/vectors/gen=G/bucket=B/batch_id=N` with (id, vec, sq_norm,
-  * cell) rows (seed rows at `batch_id=-1` of generation 0);
-  * `indexDir/_buckets` holds nb, `indexDir/_gen` the live generation;
-  * [[compactIndex]] is the same maintenance job as DocStream's.
+  * the `vectors` relation of (id, vec, sq_norm, cell) rows (seed rows at
+  * `batch_id=-1` of generation 0); [[compactIndex]] is the same
+  * maintenance job as DocStream's.
   * Admissions go to `outDir/admissions` as (vec_id, status) under
   * `batch_id=N` partitions.
   */
@@ -61,8 +60,6 @@ object VecStream {
     * cell goes hot — the cell-keyed analog of DocStream's band-bucket
     * guard. */
   private val MaxCell = 1000
-
-  private def cellBucket(nb: Int): Column = IndexLayout.bucketExpr("vectors", nb)
 
   /** Row shape of the vector index — [[IndexLayout.residentSlice]]'s
     * cold-start fallback contract (vec element type matches the stream's
@@ -79,9 +76,6 @@ object VecStream {
     * sees them through the `< batchId` read. */
   def seedIndex(corpus: DataFrame, indexDir: String): Unit = {
     val spark = corpus.sparkSession
-    // re-seed is a full rebuild: clear any prior generations first
-    Fs.delete(s"$indexDir/vectors", spark.sparkContext.hadoopConfiguration)
-    val nb = IndexLayout.initMeta(spark, indexDir)
     // null embeddings are legal stream input (dropped at assignment), so
     // they must also be barred from becoming centroids: a null cvec would
     // cosine to NULL against every vector and silently degrade routing
@@ -95,14 +89,10 @@ object VecStream {
         "(vec_id % 50 == 0 with a non-null embedding) — an empty seed " +
         "has no cell geometry to admit against")
     cents.write.mode("overwrite").parquet(s"$indexDir/centroids")
-    IndexLayout.writeSlice(
-      VectorOps.ivfAssign(
-          corpus.filter(col("embedding").isNotNull)
-            .select(col("vec_id").as("id"), col("embedding").as("vec")),
-          spark.read.parquet(s"$indexDir/centroids"))
-        .withColumn("bucket", cellBucket(nb))
-        .withColumn("batch_id", lit(-1L)),
-      indexDir, "vectors", dynamic = false)
+    IndexLayout.seed(spark, indexDir, Seq("vectors" -> VectorOps.ivfAssign(
+      corpus.filter(col("embedding").isNotNull)
+        .select(col("vec_id").as("id"), col("embedding").as("vec")),
+      spark.read.parquet(s"$indexDir/centroids"))))
   }
 
   /** Fold the accumulated per-batch partitions into one file per bucket
@@ -171,9 +161,7 @@ object VecStream {
       Seq("dup_corpus" -> dupCorpus, "dup_batch" -> dupBatch),
       s"$outDir/admissions", batchId)
     IndexLayout.writeSlice(
-      assigned.join(admitted.withColumnRenamed("vec_id", "id"), "id")
-        .withColumn("bucket", cellBucket(nb))
-        .withColumn("batch_id", lit(batchId)),
-      indexDir, "vectors", dynamic = true)
+      assigned.join(admitted.withColumnRenamed("vec_id", "id"), "id"),
+      indexDir, "vectors", nb, batchId)
   }
 }

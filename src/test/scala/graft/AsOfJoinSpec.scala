@@ -15,8 +15,6 @@ class AsOfJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkSessions.spark
   private val sf = "/root/testdata/sf0.001"
 
-  import scala.jdk.CollectionConverters._
-
   private def rows(df: DataFrame, cols: String*): Set[Seq[Any]] =
     df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
 

@@ -302,33 +302,6 @@ class BackfillSpec extends AnyFunSuite {
     assert(master.head().getAs[String]("title") == "Early")
   }
 
-  test("clustered master: disjoint sorted per-file id ranges, capped file sizes") {
-    val dir = Files.createTempDirectory("bf-clustered").toString
-    def fetch(ms: String, me: String): DataFrame = raw(1L to 40L)
-    val r = Backfill.run(spark, dir, s"$dir/cp.json", "2023-01-01", "2023-01-31",
-      "https://cdn/", "w500", Map(28 -> "Action"), fetch,
-      clusterMasterBy = Some("tmdb_id"), masterMaxRecordsPerFile = 10L)
-    assert(r.masterRows == 40L)
-    val (_, parquetName) = MovieOps.masterPaths("2023-01-01", "2023-01-31")
-    val files = new java.io.File(s"$dir/$parquetName").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.toString)
-    assert(files.length >= 4, s"maxRecordsPerFile=10 over 40 rows should split: ${files.length}")
-    val ranges = files.map { f =>
-      val x = spark.read.parquet(f)
-        .agg(org.apache.spark.sql.functions.min("tmdb_id"),
-          org.apache.spark.sql.functions.max("tmdb_id"),
-          org.apache.spark.sql.functions.count(col("tmdb_id"))).head()
-      (x.getLong(0), x.getLong(1), x.getLong(2))
-    }
-    ranges.foreach { case (_, _, n) => assert(n <= 10L) }
-    ranges.sortBy(_._1).sliding(2).foreach {
-      case Array((_, hi, _), (lo2, _, _)) =>
-        assert(hi < lo2, s"master file ranges overlap: $hi >= $lo2")
-      case _ =>
-    }
-    assert(spark.read.parquet(s"$dir/$parquetName").count() == 40L)
-  }
-
   test("empty month writes empty part with full schema") {
     val dir = Files.createTempDirectory("bf").toString
     val cp = s"$dir/cp.json"

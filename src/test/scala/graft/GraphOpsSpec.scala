@@ -224,7 +224,6 @@ class GraphOpsSpec extends AnyFunSuite {
     // the suite's other tests run tiny graphs, i.e. the driver path;
     // this pins byte-equality against the distributed loop, forced via
     // the conf gate — on random graphs, chains, and a hop/round sweep
-    import org.apache.spark.sql.functions.col
     val rnd = new scala.util.Random(21)
     val es = Seq.fill(60)((rnd.nextLong(20), rnd.nextLong(20), rnd.nextLong(5) + 1))
       .filter { case (a, b, _) => a != b } ++
@@ -261,7 +260,7 @@ class GraphOpsSpec extends AnyFunSuite {
     val rddsBefore = sc.getPersistentRDDs.keySet
     val entriesBefore = CacheEntries.count(spark)
     body
-    val left = (sc.getPersistentRDDs -- rddsBefore).values.filterNot(_.isCheckpointed)
+    val left = (sc.getPersistentRDDs.toMap -- rddsBefore).values.filterNot(_.isCheckpointed)
     assert(left.isEmpty,
       s"$what: cached relations left behind: ${left.map(_.name).mkString("; ")}")
     assert(CacheEntries.count(spark) == entriesBefore,

@@ -133,7 +133,8 @@ class IncrAttrSpec extends AnyFunSuite {
     val batch = df(Seq(doc(10L, baseText("c")), doc(11L, baseText("d"))))
     def broadcasts(probe: Boolean): Int = Memo.scoped { sc =>
       val (attrs, _, _, _) =
-        IncrAttrTable.batchPlans(sc, spark, root, batch, broadcastProbe = probe)
+        IncrAttrTable.batchPlans(sc, spark, root, batch, broadcastProbe = probe,
+          batchId = 1L)
       "BroadcastHashJoin".r.findAllIn(
         attrs.queryExecution.explainString(
           org.apache.spark.sql.execution.SimpleMode)).length

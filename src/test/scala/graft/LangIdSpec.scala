@@ -122,7 +122,7 @@ class LangIdSpec extends AnyFunSuite {
       graft.pipeline.AttrTable.materialized(spark, sf)
         .select("doc_id", "lang")
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val given = langs()
+    val givenLabels = langs()
     spark.conf.set("spark.graft.attrs.derivedLang", "true")
     val derived = try langs()
       finally spark.conf.unset("spark.graft.attrs.derivedLang")
@@ -134,9 +134,9 @@ class LangIdSpec extends AnyFunSuite {
       assert(l == preds.getOrElse(id, "und"),
         s"doc $id: derived-posture artifact must carry the classifier label")
     }
-    assert(after == given,
+    assert(after == givenLabels,
       "flipping the flag back must serve the given-label artifact again")
-    assert(derived != given, "fixture too weak: postures indistinguishable")
+    assert(derived != givenLabels, "fixture too weak: postures indistinguishable")
   }
 
   test("q136 derivedLang swap: artifact lang == q150 pred_lang under the flag") {

@@ -59,7 +59,7 @@ class Md5FeaturesSpec extends AnyFunSuite {
 
   test("lang_id_scores-based langIdScoresOf equals the explode reference") {
     for (docs <- Seq(corpus, adversarial)) {
-      val cols = ops.TextOps.langIdScoresReferenceOf(docs).columns.map(col)
+      val cols = ops.TextOps.langIdScoresReferenceOf(docs).columns.toSeq.map(col)
       val fused = ops.TextOps.langIdScoresOf(docs).select(cols: _*)
       val ref = ops.TextOps.langIdScoresReferenceOf(docs)
       assert(fused.exceptAll(ref).isEmpty && ref.exceptAll(fused).isEmpty)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.DedupOps
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The prefix-filter completeness theorem (DedupOps.prefixFilterCandidates)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.QuantileOps
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Two-pass exact global quantiles vs the naive sorted reference —

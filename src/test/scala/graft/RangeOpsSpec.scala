@@ -141,7 +141,6 @@ class RangeOpsSpec extends AnyFunSuite {
   }
 
   test("overlap join matches the naive range join on random intervals") {
-    import spark.implicits._
     val rnd = new scala.util.Random(71)
     def mk(n: Int, idBase: Long) = (0 until n).map { i =>
       val s = rnd.nextInt(10000).toLong

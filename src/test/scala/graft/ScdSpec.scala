@@ -56,7 +56,6 @@ class ScdSpec extends AnyFunSuite {
   }
 
   test("random streams match a naive per-key fold reference") {
-    import spark.implicits._
     val rnd = new scala.util.Random(94)
     // 40 keys x ~50 observations, ~15% NULL gaps, values from a small
     // alphabet so runs actually form; ord unique per key by construction

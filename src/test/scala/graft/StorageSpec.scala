@@ -16,7 +16,7 @@ class StorageSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("ranged-sink").toString
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_extendedprice")
     SinkOps.rangedSortedParquet(li, "l_orderkey", out,
-      maxRecordsPerFile = 600, parts = Some(4))
+      maxRecordsPerFile = 600)
     val files = new java.io.File(out).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
     assert(files.length > 4, s"maxRecordsPerFile did not split: ${files.length} files")
@@ -41,7 +41,7 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("ranged sorted sink, adaptive width (parts=0): file count derives from data size, ranges stay disjoint") {
-    // parts=None leaves the range exchange to AQE, so a KB-scale
+    // the range exchange is left to AQE, so a KB-scale
     // fold lands as ~one file instead of spark.sql.shuffle.partitions
     // near-empty ones (whose per-file reader init taxed every downstream
     // scan of the artifact — q151 scans attrs five times per run)
